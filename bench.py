@@ -577,41 +577,69 @@ def main() -> None:
     # last line, left-padded so the line is exactly the tail window:
     # whether the driver parses the whole tail, its first line, or its
     # last line, it sees one complete JSON document with the totals
-    # and per-query times. If all per-query rows don't fit, the
-    # FASTEST queries collapse into omitted_{n,sec} (the slow ones
-    # carry the regression signal; the full map is on the detail line
-    # and in docs/BENCH_last_run.json).
+    # and every per-query time (see compact_line). The full map is on
+    # the detail line and in docs/BENCH_last_run.json.
     # Pad width follows the driver's tail size; overridable so a
     # driver-side window change can't silently break parsing again
     # (r15 verdict #8).
     tail_window = int(os.environ.get("SPARK_GRAFT_TAIL_WINDOW", "2000"))
     budget = tail_window - 1  # newline occupies the last byte
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(timings),
-        "fixtures_sec": round(sum(fixture_builds.values()), 3),
-        "queries": dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])
-        ),
-    }
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > budget:
-        ordered = sorted(timings.items(), key=lambda kv: -kv[1])
-        keep = len(ordered)
-        while keep > 0:
-            kept = dict(ordered[:keep])
-            omitted = ordered[keep:]
-            compact["queries"] = kept
-            compact["omitted_n"] = len(omitted)
-            compact["omitted_sec"] = round(sum(v for _, v in omitted), 3)
-            line = json.dumps(compact, separators=(",", ":"))
-            if len(line) <= budget:
-                break
-            keep -= 1
+    line = compact_line(
+        {
+            "metric": "headline_queries_total",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "n_queries": len(timings),
+            "fixtures_sec": round(sum(fixture_builds.values()), 3),
+        },
+        timings,
+        budget,
+    )
     print(" " * (budget - len(line)) + line)
+
+
+def short_keys(names, chars: int) -> dict[str, str]:
+    """Compact-line key per query name: the name without its ``q_``
+    prefix, every ``_``-separated word cut to ``chars`` characters.
+    Names whose keys collide keep one more character per word until
+    every key is unique (at worst the whole name)."""
+    from collections import Counter
+
+    def cut(name: str, k: int) -> str:
+        return "_".join(w[:k] for w in name.removeprefix("q_").split("_"))
+
+    keys, k = {n: cut(n, chars) for n in names}, chars
+    while len(set(keys.values())) < len(keys):
+        k += 1
+        seen = Counter(keys.values())
+        keys = {n: cut(n, k) if seen[v] > 1 else v for n, v in keys.items()}
+    return keys
+
+
+def compact_line(head: dict, timings: dict[str, float], budget: int) -> str:
+    """``head`` plus every query's time (slowest first, 2 decimals) as
+    one JSON line of at most ``budget`` characters. Full names when
+    they fit, else keys from ``short_keys`` at the longest word cut that
+    fits, named in ``key_chars``. Only if even 2-character words do not
+    fit do the fastest queries fold into ``omitted_{n,sec}``."""
+    ordered = sorted(timings.items(), key=lambda kv: -kv[1])
+    for chars in (None, 6, 5, 4, 3, 2):
+        keys = short_keys(timings, chars) if chars else {n: n for n in timings}
+        compact = dict(head, queries={keys[n]: round(t, 2) for n, t in ordered})
+        if chars:
+            compact["key_chars"] = chars
+        line = json.dumps(compact, separators=(",", ":"))
+        if len(line) <= budget:
+            return line
+    for keep in range(len(ordered) - 1, -1, -1):
+        compact["queries"] = {keys[n]: round(t, 2) for n, t in ordered[:keep]}
+        compact["omitted_n"] = len(ordered) - keep
+        compact["omitted_sec"] = round(sum(t for _, t in ordered[keep:]), 3)
+        line = json.dumps(compact, separators=(",", ":"))
+        if len(line) <= budget:
+            break
+    return line
 
 
 if __name__ == "__main__":

@@ -26,7 +26,11 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from pyspark.sql import functions as F
 
-from kafka_clickhouse_implementation_spark.plans.layout import read_rollup, write_day_partitioned
+from kafka_clickhouse_implementation_spark.plans.layout import (
+    read_day_partitioned,
+    read_rollup,
+    write_day_partitioned,
+)
 from kafka_clickhouse_implementation_spark.schemas import EMAIL_EVENT_TYPES, EMAIL_EVENTS_SCHEMA
 from kafka_clickhouse_implementation_spark.session import get_spark
 from kafka_clickhouse_implementation_spark.streaming.pipeline import run_mv_pipeline
@@ -100,7 +104,7 @@ def main(workdir: str = "/tmp/campaign_demo") -> None:
 
     # -- 4b. raw reads: opens for one campaign, newest first
     print("== opens for campaign 0 (kafka+clickhouse.md:161-166)")
-    fact = spark.read.parquet(fact_dir)
+    fact = read_day_partitioned(spark, fact_dir)
     (
         fact.filter(
             (F.col("campaign_id") == str(uuid.UUID(int=0)))

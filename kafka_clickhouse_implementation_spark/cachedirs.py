@@ -18,20 +18,27 @@ import os
 import tempfile
 
 
+def _source(sf_dir: str, table: str) -> tuple[str, str]:
+    """(resolved parquet path, cache-name prefix) of a source table. The
+    prefix names the directory the parquet really lives in, so a table
+    symlinked in from another sf dir is keyed by where its bytes are."""
+    resolved = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    return resolved, f"{os.path.basename(os.path.dirname(resolved))}_{table}_"
+
+
 def source_tagged_dir(flavor: str, sf_dir: str, table: str) -> str:
     """Temp dir for an artifact derived from ``{sf_dir}/{table}.parquet``,
     whose name digests the source file's identity. Callers keep their
     own completion markers inside it."""
-    resolved = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    resolved, prefix = _source(sf_dir, table)
     st = os.stat(resolved)
     tag = hashlib.md5(
         f"{resolved}|{st.st_size}|{st.st_mtime_ns}".encode()
     ).hexdigest()[:12]
-    sf_name = os.path.basename(os.path.dirname(resolved))
     return os.path.join(
         tempfile.gettempdir(),
         "spark_graft_cache",
-        f"{sf_name}_{table}_{flavor}_{tag}",
+        f"{prefix}{flavor}_{tag}",
     )
 
 
@@ -67,12 +74,17 @@ def purge_result_products(sf_dir: str | None = None) -> list[str]:
     )
     if not os.path.isdir(root):
         return []
-    prefix = None
+    prefixes = None
     if sf_dir is not None:
-        prefix = os.path.basename(os.path.realpath(sf_dir)) + "_"
+        # the prefixes product_dir gives the products of each table
+        prefixes = tuple(
+            _source(sf_dir, f[: -len(".parquet")])[1]
+            for f in os.listdir(sf_dir)
+            if f.endswith(".parquet")
+        )
     purged = []
     for name in sorted(os.listdir(root)):
-        if prefix is not None and not name.startswith(prefix):
+        if prefixes is not None and not name.startswith(prefixes):
             continue
         shutil.rmtree(os.path.join(root, name), ignore_errors=True)
         purged.append(name)

@@ -14,7 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
-from kafka_clickhouse_implementation_spark.plans.layout import write_day_partitioned
+from kafka_clickhouse_implementation_spark.plans.layout import (
+    read_day_partitioned,
+    write_day_partitioned,
+)
 from kafka_clickhouse_implementation_spark.registry import query
 from kafka_clickhouse_implementation_spark.schemas import EVENT_TYPES
 
@@ -151,7 +154,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it): reuse an existing copy rather than rewriting per invocation
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_day_partitioned(ev, path, ts_col="ts", sort_keys=("user_id",))
-    fact = spark.read.parquet(path)
+    fact = read_day_partitioned(spark, path)
     return fact.filter(F.col("event_date") == "20240115").agg(F.count(F.lit(1)).alias("n_events"))
 
 
@@ -253,7 +256,6 @@ def q_partition_detach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_clickhouse_implementation_spark.plans.layout import (
         attach_partition,
         detach_partition,
-        write_day_partitioned,
     )
 
     ev = load(spark, sf_dir, "events")
@@ -268,13 +270,13 @@ def q_partition_detach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compact_versions' _recover_swap convention and re-attach first
     if os.path.isdir(os.path.join(path, "_detached", f"event_date={day}")):
         attach_partition(path, day)
-    n_total = spark.read.parquet(path).count()
+    n_total = read_day_partitioned(spark, path).count()
     detach_partition(path, day)
     try:
-        n_detached_read = spark.read.parquet(path).count()
+        n_detached_read = read_day_partitioned(spark, path).count()
     finally:
         attach_partition(path, day)
-    n_reattached = spark.read.parquet(path).count()
+    n_reattached = read_day_partitioned(spark, path).count()
     return spark.createDataFrame(
         [(n_total, n_detached_read, n_reattached)],
         "n_total long, n_detached_read long, n_reattached long",

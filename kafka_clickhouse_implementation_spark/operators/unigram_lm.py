@@ -387,7 +387,9 @@ def _em_rounds_from_words(
     (C191) at its own (rounds, multi) budget. Returns (trajectory,
     final segmentation, final model (piece, cnt))."""
     head = words.limit(UNI_DRIVER_MAX_WORDS + 1).collect()
-    if len(head) <= UNI_DRIVER_MAX_WORDS:
+    # an empty vocabulary takes the distributed loop: the driver loop
+    # has no model to take a min over or to normalize scores by
+    if 0 < len(head) <= UNI_DRIVER_MAX_WORDS:
         return _driver_em(
             words.sparkSession,
             [(r.w, int(r.f)) for r in head],

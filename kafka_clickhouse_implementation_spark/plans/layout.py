@@ -22,14 +22,39 @@ At 100 TB: day-partitioning bounds every daily query to ~1/365 of the
 data; sortWithinPartitions costs one in-partition sort at write time and
 no shuffle; rollup partials are tiny (days × levels × batches) so the
 read-time re-agg is O(rollup), never O(raw).
+
+Both tables carry their DDL, so no read infers a schema (inference runs
+a Spark job over parquet footers before the query even plans):
+
+- The rollup's DDL is ``schemas.DAILY_SCHEMA`` (kafka+clickhouse.md:
+  205-211). The writers emit exactly ``day, level, total`` and raise if
+  a batch's columns do not have those types; ``read_rollup`` and
+  ``compact_rollup`` read the partials, batch dirs and parked dirs with
+  it.
+- The fact table's DDL is recorded next to its data, in
+  ``_schema.json`` (Spark readers skip ``_``-prefixed files), written
+  after the data commits by the write that creates or overwrites the
+  table. It is the schema inference would return: the data columns plus
+  ``event_date`` as int. An append whose columns differ from the record
+  raises before any file is written, so a declared read can never drop
+  or null a column. ``read_day_partitioned`` reads with the record; a
+  table without one (written before records existed, or by a write that
+  died between the data commit and the record) is read with inference.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kafka_clickhouse_implementation_spark.schemas import DAILY_SCHEMA
+
+# The fact table's recorded schema; Spark readers skip `_`-prefixed names.
+SCHEMA_FILE = "_schema.json"
 
 
 def write_day_partitioned(
@@ -43,9 +68,20 @@ def write_day_partitioned(
     """Write a day-partitioned, within-partition-sorted parquet fact table.
 
     Mirrors ``PARTITION BY toYYYYMMDD(event_time) ORDER BY (campaign_id,
-    event_time)`` (kafka+clickhouse.md:101-103).
+    event_time)`` (kafka+clickhouse.md:101-103). A write that creates or
+    overwrites the table records its schema; an append to a recorded
+    table must match it (see the module docstring).
     """
     out = df.withColumn(partition_col, F.date_format(F.col(ts_col), "yyyyMMdd"))
+    schema = _table_schema(out, partition_col)
+    if mode == "append":
+        recorded = _recorded_schema(path)
+        if recorded is not None and not _same_columns(schema, recorded):
+            raise ValueError(
+                f"append to {path}: columns {schema.simpleString()} differ from"
+                f" the table's {recorded.simpleString()}"
+            )
+    new_table = mode == "overwrite" or not os.path.isdir(path) or not os.listdir(path)
     # repartition on the partition column first so each day is written by
     # few tasks (avoids the small-files explosion a 1000-executor write
     # would otherwise produce), then sort within partitions for row-group
@@ -57,33 +93,66 @@ def write_day_partitioned(
         .partitionBy(partition_col)
     )
     out.parquet(path)
+    if new_table:
+        tmp = os.path.join(path, SCHEMA_FILE + ".tmp")
+        with open(tmp, "w") as f:
+            f.write(schema.json())
+        os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+
+
+def _table_schema(out: DataFrame, partition_col: str) -> T.StructType:
+    """What schema inference returns for the written table: the data
+    columns, all nullable, then the yyyyMMdd partition column as int."""
+    fields = [
+        T.StructField(f.name, f.dataType, True, f.metadata)
+        for f in out.schema.fields
+        if f.name != partition_col
+    ]
+    return T.StructType(fields + [T.StructField(partition_col, T.IntegerType(), True)])
+
+
+def _same_columns(a: T.StructType, b: T.StructType) -> bool:
+    # simpleString holds names and types, not nullability
+    return a.simpleString() == b.simpleString()
+
+
+def _recorded_schema(path: str) -> T.StructType | None:
+    try:
+        with open(os.path.join(path, SCHEMA_FILE)) as f:
+            return T.StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
 
 
 def read_day_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The fact table, read with its recorded schema; a table without a
+    record falls back to schema inference."""
+    schema = _recorded_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
-def append_rollup_partials(batch_df: DataFrame, path: str, day_col: str = "day", level_col: str = "level") -> None:
+def _partials(batch_df: DataFrame) -> DataFrame:
+    """One batch's per-(day, level) counts, in the rollup's DDL."""
+    out = batch_df.groupBy("day", "level").agg(F.count(F.lit(1)).alias("total"))
+    if not _same_columns(out.schema, DAILY_SCHEMA):
+        raise ValueError(
+            f"rollup partials {out.schema.simpleString()} do not match"
+            f" {DAILY_SCHEMA.simpleString()}"
+        )
+    return out
+
+
+def append_rollup_partials(batch_df: DataFrame, path: str) -> None:
     """Append one insert-block's partial counts (the MV body,
     kafka+clickhouse.md:221-229): per-(day, level) count of the *batch*,
     not a global aggregate — exactly ClickHouse's per-insert-block MV
     trigger semantics. For the streaming foreachBatch sink use
     ``write_rollup_batch`` instead — blind appends are not retry-safe."""
-    (
-        batch_df.groupBy(day_col, level_col)
-        .agg(F.count(F.lit(1)).alias("total"))
-        .write.mode("append")
-        .parquet(path)
-    )
+    _partials(batch_df).write.mode("append").parquet(path)
 
 
-def write_rollup_batch(
-    batch_df: DataFrame,
-    path: str,
-    batch_id: int,
-    day_col: str = "day",
-    level_col: str = "level",
-) -> None:
+def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
     """Idempotent per-batch MV sink — the standard foreachBatch
     exactly-once pattern: each batch's partials land in a
     batch_id-keyed subdirectory with overwrite mode, so a batch retried
@@ -91,8 +160,7 @@ def write_rollup_batch(
     its previous (possibly partial) output instead of double-appending
     it. ``read_rollup`` picks the subdirectories up recursively."""
     (
-        batch_df.groupBy(day_col, level_col)
-        .agg(F.count(F.lit(1)).alias("total"))
+        _partials(batch_df)
         # partials are days x levels rows per batch regardless of input
         # volume — one output file beats 32 near-empty ones (the small-
         # files problem is the reader's bottleneck, not the writer's)
@@ -102,17 +170,24 @@ def write_rollup_batch(
     )
 
 
-def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """Read-time re-aggregation — the SummingMergeTree reader contract
-    (sum over possibly-unmerged partials, kafka+clickhouse.md:240-243,
-    464-468). recursiveFileLookup tolerates any mix of flat partial
-    files, per-batch subdirectories, and compacted output."""
+def _summed(spark: SparkSession, *paths: str) -> DataFrame:
+    """Every partial under ``paths``, read with the rollup's DDL and
+    summed per (day, level). recursiveFileLookup tolerates any mix of
+    flat partial files, per-batch subdirectories, and compacted output."""
     return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(path)
+        spark.read.schema(DAILY_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(*paths)
         .groupBy("day", "level")
         .agg(F.sum("total").alias("total"))
     )
+
+
+def read_rollup(spark: SparkSession, path: str) -> DataFrame:
+    """Read-time re-aggregation — the SummingMergeTree reader contract
+    (sum over possibly-unmerged partials, kafka+clickhouse.md:240-243,
+    464-468)."""
+    return _summed(spark, path)
 
 
 def _swap_names(path: str) -> tuple[str, str, str]:
@@ -248,12 +323,7 @@ def compact_rollup(spark: SparkSession, path: str) -> None:
     recreated `path`)."""
     _recover_swap(path)
     parked = _parked_dirs(path)
-    src = spark.read.option("recursiveFileLookup", "true").parquet(path)
-    for p in parked:
-        src = src.unionByName(
-            spark.read.option("recursiveFileLookup", "true").parquet(p)
-        )
-    merged = src.groupBy("day", "level").agg(F.sum("total").alias("total"))
+    merged = _summed(spark, path, *parked)
     _, tmp, _ = _swap_names(path)
     merged.write.mode("overwrite").parquet(tmp)
     _swap_in(path, tmp, folded=parked)

@@ -1,6 +1,12 @@
 """Explicit schemas — the reference's schema system is fixed/explicit DDL
 with no inference (SURVEY §1.2); streaming JSON is always decoded
 against a declared StructType, never ``inferSchema``.
+
+The tables the pipeline writes are read the same way: the rollup with
+``DAILY_SCHEMA`` and the day-partitioned fact table with the schema its
+writer recorded beside the data (``plans.layout``), so neither a
+dashboard read nor a compaction runs a schema-inference job. The
+driver's input tables (``io.load``) are still read from their footers.
 """
 
 from __future__ import annotations

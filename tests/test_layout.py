@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from kafka_clickhouse_implementation_spark.plans.layout import (
     append_rollup_partials,
     compact_rollup,
+    read_day_partitioned,
     read_rollup,
     write_day_partitioned,
     write_rollup_batch,
@@ -316,3 +317,143 @@ def test_detach_attach_partition_roundtrip(spark, tmp_path):
         detach_partition(path, "19990101")
     with pytest.raises(FileNotFoundError):
         attach_partition(path, "19990101")
+
+
+# ---------------------------------------------------------------- declared schemas
+
+
+def _jobs_launched(spark, build) -> int:
+    """Spark jobs started while ``build()`` runs, counted from the status
+    store under a job group of their own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"layout-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_rollup(spark, *paths):
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(*paths)
+        .groupBy("day", "level")
+        .agg(F.sum("total").alias("total"))
+    )
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _day_level(spark, n=40):
+    return _events(spark, n).select(
+        "event_id", F.to_date("ts").alias("day"), F.col("event_type").alias("level")
+    )
+
+
+def test_declared_reads_launch_no_job(spark, tmp_path):
+    """Building a rollup or fact-table read plans from the declared
+    schema: no footer-reading inference job, where an inferring read of
+    the same dirs launches one."""
+    fact, rollup = str(tmp_path / "fact"), str(tmp_path / "rollup")
+    write_day_partitioned(_events(spark), fact)
+    write_rollup_batch(_day_level(spark).drop("event_id"), rollup, 0)
+    assert _jobs_launched(spark, lambda: spark.read.parquet(fact)) >= 1
+    assert _jobs_launched(spark, lambda: read_rollup(spark, rollup)) == 0
+    assert _jobs_launched(spark, lambda: read_day_partitioned(spark, fact)) == 0
+
+
+def test_declared_rollup_reads_equal_inferred(spark, tmp_path):
+    """The declared rollup read returns what inference returned, over
+    batch-* subdirs, flat partials and, in compaction, a parked dir."""
+    import os
+
+    path = str(tmp_path / "rollup")
+    d = _day_level(spark)
+    write_rollup_batch(d.filter("event_id % 3 = 0").drop("event_id"), path, 0)
+    write_rollup_batch(d.filter("event_id % 3 = 1").drop("event_id"), path, 1)
+    append_rollup_partials(d.filter("event_id % 3 = 2").drop("event_id"), path)
+    declared, inferred = read_rollup(spark, path), _inferred_rollup(spark, path)
+    assert declared.schema == inferred.schema
+    assert _sorted_rows(declared) == _sorted_rows(inferred)
+
+    parked = path + "__compact_parked_000"
+    append_rollup_partials(d.drop("event_id"), parked)
+    want = _sorted_rows(_inferred_rollup(spark, path, parked))
+    compact_rollup(spark, path)
+    assert _sorted_rows(read_rollup(spark, path)) == want
+    assert not os.path.exists(parked)
+
+
+def test_declared_fact_read_equals_inferred(spark, tmp_path):
+    """The recorded schema is the inferred one (event_date an int), the
+    rows match after an append, and day predicates still prune."""
+    import os
+
+    path = str(tmp_path / "fact")
+    ev = _events(spark)
+    write_day_partitioned(ev.filter("event_id < 30"), path)
+    write_day_partitioned(ev.filter("event_id >= 30"), path, mode="append")
+    assert os.path.isfile(os.path.join(path, "_schema.json"))
+    declared, inferred = read_day_partitioned(spark, path), spark.read.parquet(path)
+    assert declared.schema == inferred.schema
+    assert declared.schema["event_date"].dataType.simpleString() == "int"
+    assert _sorted_rows(declared) == _sorted_rows(inferred) and declared.count() == 50
+    one_day = declared.filter(F.col("event_date") == 20240103)
+    plan = one_day._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(event_date" in plan, plan
+    assert one_day.count() == 10
+
+
+def _files(path):
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(root, f), path), os.path.getsize(os.path.join(root, f)))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_mismatched_append_raises_and_writes_nothing(spark, tmp_path):
+    """An append whose columns differ from the recorded schema (one
+    missing, one retyped) raises before writing, and so does a rollup
+    batch whose columns are not the DDL's."""
+    import pytest
+
+    path = str(tmp_path / "fact")
+    ev = _events(spark)
+    write_day_partitioned(ev, path)
+    before = _files(path)
+    for bad in (ev.drop("props"), ev.withColumn("value", F.col("value").cast("string"))):
+        with pytest.raises(ValueError, match="differ"):
+            write_day_partitioned(bad, path, mode="append")
+    assert _files(path) == before
+
+    rollup = str(tmp_path / "rollup")
+    bad_day = _day_level(spark).select(F.col("day").cast("string").alias("day"), "level")
+    with pytest.raises(ValueError, match="do not match"):
+        write_rollup_batch(bad_day, rollup, 0)
+    assert not (tmp_path / "rollup").exists()
+
+
+def test_fact_without_recorded_schema_still_reads(spark, tmp_path):
+    """A fact dir written before schemas were recorded has no record; it
+    is read with inference, and an append to it writes none."""
+    import os
+
+    path = str(tmp_path / "fact")
+    ev = _events(spark)
+    write_day_partitioned(ev.filter("event_id < 30"), path)
+    os.remove(os.path.join(path, "_schema.json"))
+    write_day_partitioned(ev.filter("event_id >= 30"), path, mode="append")
+    assert not os.path.exists(os.path.join(path, "_schema.json"))
+    got = read_day_partitioned(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert got.count() == 50

@@ -581,29 +581,46 @@ def test_with_totals_is_single_pass_expand(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
+def _logical_nodes(plan):
+    """Every node of a JVM logical plan, depth first."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _logical_nodes(kids.apply(i))
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
 def test_substring_clip_islands_merge_per_doc_no_global_window(spark):
-    """C143 (r9, re-pinned r15): the interval-island merge must stay
-    PER-DOC parallel — originally two windows PARTITION BY doc_id; the
-    r15 optimization replaced them with one groupBy(doc_id) sorted-
-    array fold. The invariant guarded is the same: no bare (global)
-    window may serialize the clip ranges through one task, and the
-    per-doc merge must key on doc_id. Asserted on the clip BUILDER's
-    plan (substring_clip over the raw corpus — what clipped_corpus
-    materializes)."""
+    """C143 (r9, re-pinned r15 and for the h-partitioned gram windows):
+    the clip must stay parallel.
+    The duplicated-gram gate runs as windows partitioned by the gram
+    hash h, and the interval-island merge is one groupBy(doc_id)
+    sorted-array fold. The invariant guarded: no window has an empty
+    partition spec (a global window serializes every row through one
+    task), and the island merge aggregates keyed on doc_id alone.
+    Asserted on the clip BUILDER's optimized plan (substring_clip over
+    the raw corpus — what clipped_corpus materializes)."""
     from kafka_clickhouse_implementation_spark.io import load
     from kafka_clickhouse_implementation_spark.operators.corpus_ext import (
         substring_clip,
     )
 
     df = substring_clip(load(spark, SF, "documents"))
-    plan = _plan(df)
-    # no window at all is the strongest form of "no global window";
-    # if one ever reappears, it must partition by doc_id
-    for l in plan.splitlines():
-        if "windowspecdefinition" in l:
-            assert "doc_id" in l, l
-    # the island merge is a per-doc hash aggregate over the clip rows
-    assert "doc_id" in plan and "hashpartitioning" in plan, plan
+    nodes = list(_logical_nodes(df._jdf.queryExecution().optimizedPlan()))
+    windows = [n for n in nodes if n.nodeName() == "Window"]
+    for w in windows:
+        assert w.partitionSpec().size() > 0, w.toString()
+    merges = [
+        n
+        for n in nodes
+        if n.nodeName() == "Aggregate"
+        and [e.toString().split("#")[0] for e in _seq(n.groupingExpressions())] == ["doc_id"]
+        and "collect_list" in n.aggregateExpressions().toString()
+    ]
+    assert len(merges) == 1, [n.toString() for n in nodes if n.nodeName() == "Aggregate"]
 
 
 def test_kn_gated_clean_model_joins_never_broadcast_vocab(spark):

@@ -421,3 +421,25 @@ def test_stream_unigram_shards_equal_batch_and_wire_has_dups(spark):
         .filter(F.col("doc_id") % 10 == 0)
     )
     assert raw.count() > raw.select("doc_id").distinct().count()
+
+
+def test_em_on_empty_vocabulary(spark):
+    """A corpus with no countable word (empty texts, and words over the
+    length cap) has an empty vocabulary. It must take the distributed
+    loop and return an empty model and segmentation, one trajectory row
+    per round, instead of crashing in the driver loop."""
+    from kafka_clickhouse_implementation_spark.operators.unigram_lm import (
+        _em_rounds_from_words,
+        _seed_words,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, ""), (1, "   "), (2, "x" * (_MAX_WLEN + 1))], "doc_id long, text string"
+    )
+    words = _seed_words(docs)
+    assert words.count() == 0
+    traj, seg, model = _em_rounds_from_words(words)
+    rows = sorted(traj.collect(), key=lambda r: r["round"])
+    assert [r["round"] for r in rows] == list(range(1, UNI_ROUNDS + 1))
+    assert all(r["n_pieces"] == 0 for r in rows)
+    assert seg.count() == 0 and model.count() == 0
