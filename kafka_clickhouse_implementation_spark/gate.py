@@ -1,0 +1,37 @@
+"""The driver-vs-distributed size gate, shared by every loop that has a
+driver fast path.
+
+Several iterative algorithms here (Lloyd k-means, unigram hard EM, BPE
+merges, union-find components, the MMR greedy) run many rounds over an
+input that is usually model-sized: a vocabulary, an edge set, a
+candidate list, a few thousand vectors. Distributed, each round costs
+one or more Spark jobs of mostly scheduling and planning overhead, while
+the data is small. Below the gate the input is collected once and the
+loop replays the identical arithmetic in Python; above it, the
+unchanged distributed loop runs (the MMR greedy, which has none,
+raises), so no input can exhaust driver memory.
+
+``DRIVER_MAX_ROWS`` is the single ceiling: 65536 rows, at most 32 MB of
+payload at the widest of these inputs (64 longs per vector), above
+every input the tested scale factors produce at the gated sites and far
+below driver trouble. Callers read it through this module at call time
+(``gate.DRIVER_MAX_ROWS``), so a test can patch it to 0 and pin the
+distributed path.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, Row
+
+DRIVER_MAX_ROWS = 65536
+
+
+def driver_rows(df: DataFrame) -> list[Row] | None:
+    """All of ``df``'s rows when there are at most ``DRIVER_MAX_ROWS``,
+    else ``None``. One ``limit(N + 1).collect()``: the fetch is the size
+    check, so a frame under the gate is never counted and then read
+    again. An empty frame returns ``[]``; each caller keeps its own
+    empty-input rule."""
+    n = DRIVER_MAX_ROWS
+    rows = df.limit(n + 1).collect()
+    return rows if len(rows) <= n else None

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
 
@@ -102,16 +103,22 @@ def _fold_step_sql(wa: str, wb: str) -> str:
     )
 
 
-# Word-count gate for the driver trainer fast path (the CC union-find
-# recipe applied to BPE): below it the symbolized vocab is collected
-# (w, s, f — a few MB at the gate) and the merge loop runs in Python,
-# replicating _pair_frame / the canonical-greedy fold / the
-# (cnt DESC, a, b) winner order exactly in integer+string arithmetic.
-# Every round of the distributed loop costs 1-3 vocab-sized Spark jobs
-# whose data fits in L2 — pure scheduling/planning overhead at any SF
-# where the vocabulary is driver-sized; a corpus whose vocabulary
-# exceeds the gate takes the unchanged distributed loop.
-_DRIVER_VOCAB_MAX = 65536
+def _driver_vocab(vocab: DataFrame) -> tuple[int, list[tuple] | None]:
+    """(wsum, rows) for the trainers' driver fast path under the shared
+    gate (gate.py): the symbolized vocab is collected (w, s, f) and the
+    merge loop runs in Python, replicating _pair_frame / the
+    canonical-greedy fold / the (cnt DESC, a, b) winner order exactly in
+    integer+string arithmetic, where every distributed round costs 1-3
+    vocab-sized Spark jobs. ``rows`` is None above the gate; ``wsum``
+    (the corpus word total) then comes from one aggregate instead of
+    the collected rows. An empty vocab stays on the driver path (wsum
+    0, no rounds)."""
+    got = gate.driver_rows(vocab)
+    if got is None:
+        wsum = vocab.agg(F.sum("f").alias("wf")).first().wf
+        return int(wsum), None
+    rows = [(r.w, r.s, int(r.f)) for r in got]
+    return sum(f for _, _, f in rows), rows
 
 
 def _check_syms(*syms: str) -> None:
@@ -283,13 +290,8 @@ def _train_full(
 ) -> tuple[list[tuple], DataFrame]:
     """The shared BPE_ROUNDS merge loop over a symbolized vocab.
     Returns (trajectory rows, final segmented vocab (w, s, f))."""
-    stats = vocab.agg(
-        F.sum("f").alias("wf"), F.count(F.lit(1)).alias("n")
-    ).first()
-    wsum, n_words = int(stats.wf), int(stats.n)
-
-    if n_words <= _DRIVER_VOCAB_MAX:
-        rows = [(r.w, r.s, int(r.f)) for r in vocab.collect()]
+    wsum, rows = _driver_vocab(vocab)
+    if rows is not None:
         out = []
         for r in range(1, BPE_ROUNDS + 1):
             pc, tot = _driver_pair_stats(rows)
@@ -427,13 +429,8 @@ def _train_batched_full(
     final segmented vocab)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    stats = vocab.agg(
-        F.sum("f").alias("wf"), F.count(F.lit(1)).alias("n")
-    ).first()
-    wsum, n_words = int(stats.wf), int(stats.n)
-
-    if n_words <= _DRIVER_VOCAB_MAX:
-        rows = [(r.w, r.s, int(r.f)) for r in vocab.collect()]
+    wsum, rows = _driver_vocab(vocab)
+    if rows is not None:
         out = []
         rank = 0
         for r in range(1, rounds + 1):

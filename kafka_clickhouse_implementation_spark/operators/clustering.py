@@ -33,11 +33,14 @@ in the registry:
 The oracle unrolls the 3 rounds as chained CTEs — heavy SQL, but the
 point is that an independent engine replays the identical trajectory.
 
-Scale: the assignment join is (n·d rows) ⋈ broadcast(k·d rows) → one
-map-side-combined agg — linear in n, no shuffle of the embedding
-bodies beyond the first posexplode. Per-round driver traffic is the
-k·d centroid table (bounded by k·d = 512 values, NOT by data — the
-prefix.py bounded-collect pattern). Pair distances (SemDeDup / IVF
+Scale: a training set of at most gate.DRIVER_MAX_ROWS vectors is
+collected once and Lloyd runs on the driver (model-sized work — the
+coarse quantizer is trained once and vectors then stream through it).
+Above the gate each round is one stateless coding projection plus one
+map-side-combined (cid, dim) aggregate — linear in n, no shuffle of
+the embedding bodies. Per-round driver traffic is the k·d centroid
+table (bounded by the model size, NOT by data — the prefix.py
+bounded-collect pattern). Pair distances (SemDeDup / IVF
 re-rank) ride zip_with over the 64-wide arrays — O(pairs) rows, all
 whole-stage codegen, and pairs are bucketed by cluster/probe-list,
 never all-pairs.
@@ -51,6 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
 
@@ -143,48 +147,67 @@ def _lloyd(spark: SparkSession, sf_dir: str):
 LIT_MAX = 64  # codebook-as-literal ceiling; above it, numpy matmul
 
 
+def _nearest_fn(carr: list[tuple[int, list[int]]]):
+    """The exact nearest-centroid kernel shared by the numpy assignment
+    paths (the per-batch ``mapInPandas`` coders and the driver Lloyd):
+    returns ``nearest(x)`` mapping an (m, d) matrix to each row's
+    nearest centroid id. Distances are dist = x² + c² − 2·X@Cᵀ in
+    float64 — EXACT, because every operand and partial sum is an
+    integer < 2^53 (|eq| ≤ ~2e6 micro-units → x² ≤ 64·4e12 ≈ 2.6e14),
+    whatever order BLAS sums in. np.argmin takes the FIRST minimum and
+    carr is sorted ascending by id, so ties break to the smallest id ≡
+    the oracle's min-dist-then-min-cid two-step. The dense distance
+    matrix is bounded to ~64 MB per row slice regardless of k, so a
+    1M-vector corpus (k = 4000 under the SemDeDup rule) cannot blow
+    task memory: rows-per-slice shrinks as k grows."""
+    import numpy as np
+
+    cmat = np.asarray([a for _, a in carr], dtype=np.float64)
+    cids = np.asarray([c for c, _ in carr], dtype=np.int64)
+    c2 = (cmat * cmat).sum(axis=1)
+    rows_per_slice = max(64, 8_000_000 // max(1, len(cids)))
+
+    def nearest(x) -> np.ndarray:
+        out = np.empty(len(x), dtype=np.int64)
+        for lo in range(0, len(x), rows_per_slice):
+            xs = np.asarray(x[lo : lo + rows_per_slice], dtype=np.float64)
+            x2 = (xs * xs).sum(axis=1)
+            dist = x2[:, None] + c2[None, :] - 2.0 * (xs @ cmat.T)
+            out[lo : lo + len(xs)] = cids[dist.argmin(axis=1)]
+        return out
+
+    return nearest
+
+
 def _assign_np(eq: DataFrame, carr: list[tuple[int, list[int]]]) -> DataFrame:
     """(vec_id, eq, cid) via a vectorized numpy assignment — the
     large-k path (round-7 scale fix #2): with SemDeDup's k(n) rule the
     per-round assignment work is n·k distances = n²/SEM_BLOCK, and at
     200k vectors (k=800) the higher-order-function form's per-element
     overhead made that term dominate (29x wall on 10x data). A dense
-    distance matrix is exactly what BLAS is for: per Arrow batch,
-    dist = x² + c² − 2·X@Cᵀ in float64 — EXACT, because every operand
-    and partial sum is an integer < 2^53 (|eq| ≤ ~2e6 micro-units →
-    x² ≤ 64·4e12 ≈ 2.6e14) — then argmin rows; np.argmin takes the
-    FIRST minimum and carr is sorted ascending by cid, so ties break
-    to the smallest cid ≡ the oracle's two-step. The centroid matrix
-    rides into the closure (k·d ints, model-sized broadcast)."""
+    distance matrix is exactly what BLAS is for: per Arrow batch, the
+    _nearest_fn kernel (exact float64, ties → smallest cid). The
+    centroid matrix rides into the closure (k·d ints, model-sized
+    broadcast)."""
     import numpy as np
 
-    cmat = np.asarray([a for _, a in carr], dtype=np.float64)
-    cids = np.asarray([c for c, _ in carr], dtype=np.int64)
-    c2 = (cmat * cmat).sum(axis=1)
-
-    # bound the dense distance matrix to ~64 MB per slice regardless
-    # of k, so a 1M-vector corpus (k = 4000 under the SemDeDup rule)
-    # cannot blow task memory: rows-per-slice shrinks as k grows
-    rows_per_slice = max(64, 8_000_000 // max(1, len(cids)))
+    nearest = _nearest_fn(carr)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for lo in range(0, len(pdf), rows_per_slice):
-                part = pdf.iloc[lo : lo + rows_per_slice]
-                if not len(part):
-                    continue
-                x = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in part["eq"]]
-                )
-                x2 = (x * x).sum(axis=1)
-                dist = x2[:, None] + c2[None, :] - 2.0 * (x @ cmat.T)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": part["vec_id"],
-                        "eq": part["eq"],
-                        "cid": cids[dist.argmin(axis=1)],
-                    }
-                )
+            if not len(pdf):
+                continue
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "eq": pdf["eq"],
+                    "cid": nearest(
+                        np.asarray(
+                            [np.asarray(v, dtype=np.float64) for v in pdf["eq"]]
+                        )
+                    ),
+                }
+            )
 
     return eq.mapInPandas(run, schema="vec_id long, eq array<bigint>, cid long")
 
@@ -194,21 +217,16 @@ def _assign_np_grouped(
 ) -> DataFrame:
     """(vec_id, cell, fid) — the fine-level analogue of _assign_np:
     per Arrow batch, rows group by their coarse cell and each group's
-    distances to ITS OWN cell's fine centroids run as one float64
-    matmul (exact below 2^53; argmin-first tie ≡ lowest fid since
-    fids sort ascending). The whole two-level model (k1·k2·d ints)
-    rides the closure — model-sized, like every codebook here."""
+    distances to ITS OWN cell's fine centroids run through the
+    _nearest_fn kernel (exact below 2^53; argmin-first tie ≡ lowest fid
+    since fids sort ascending). The whole two-level model (k1·k2·d
+    ints) rides the closure — model-sized, like every codebook here."""
     import numpy as np
 
     by_cell: dict[int, list[tuple[int, list[int]]]] = {}
     for cell, fid, arr in cents:
         by_cell.setdefault(int(cell), []).append((int(fid), arr))
-    mats = {}
-    for cell, lst in by_cell.items():
-        lst.sort()
-        fids = np.asarray([f for f, _ in lst], dtype=np.int64)
-        cmat = np.asarray([a for _, a in lst], dtype=np.float64)
-        mats[cell] = (fids, cmat, (cmat * cmat).sum(axis=1))
+    kernels = {cell: _nearest_fn(sorted(lst)) for cell, lst in by_cell.items()}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -216,15 +234,14 @@ def _assign_np_grouped(
                 continue
             out = {"vec_id": [], "cell": [], "fid": []}
             for cell, part in pdf.groupby("cell"):
-                fids, cmat, c2 = mats[int(cell)]
-                x = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in part["eq"]]
+                fids = kernels[int(cell)](
+                    np.asarray(
+                        [np.asarray(v, dtype=np.float64) for v in part["eq"]]
+                    )
                 )
-                x2 = (x * x).sum(axis=1)
-                dist = x2[:, None] + c2[None, :] - 2.0 * (x @ cmat.T)
                 out["vec_id"].extend(int(v) for v in part["vec_id"])
                 out["cell"].extend([int(cell)] * len(part))
-                out["fid"].extend(int(f) for f in fids[dist.argmin(axis=1)])
+                out["fid"].extend(int(f) for f in fids)
             yield pd.DataFrame(out)
 
     return eqc.mapInPandas(run, schema="vec_id long, cell long, fid long")
@@ -266,30 +283,53 @@ def _lloyd_arrays(
     dim: int = DIM,
     force_np: bool = False,
 ):
-    """Fixed-seed integer Lloyd entirely in the array domain (round-7
-    rewrite — the round-6 long-format version shuffled an n·d·k
-    distance intermediate plus an n·d update join per round, which
-    dominated the sf1 wall once SemDeDup's k(n) rule pushed k to 80):
+    """Fixed-seed integer Lloyd: k seeds = the vectors with vec_id < k
+    (ascending), ``iters`` rounds of exact argmin assignment (ties →
+    smallest cid) and floor-divided integer centroid updates. Two paths
+    replay the same trajectory, split by the shared driver gate
+    (gate.driver_rows — one collect that is also the size check):
 
-    - assignment: a pure projection against the LITERAL centroid
-      codebook (k·d ints baked into the expression — bounded by model
-      size; beyond k·d ≈ 1e5 swap the projection for a broadcast
-      join, same semantics) — zero joins, zero shuffles per round;
-    - update: 64 per-element ``sum(eq[i])`` aggregates over the n
-      coded rows (map-side partials, k-row shuffle output), with the
-      k·d floor divisions done driver-side on the collected model
-      rows — Python ``//`` floors exactly like DuckDB ``//`` and the
-      portable Spark ``(s - ((s%n+n)%n)) div n`` recipe, and the sums
-      are exact int64 on every engine.
+    - at most gate.DRIVER_MAX_ROWS vectors: the whole loop runs on the
+      driver (_lloyd_driver) over one int64 matrix — the training set
+      of a coarse quantizer is model-sized work, and every distributed
+      round would cost Spark jobs whose distance pass is an interpreted
+      higher-order function;
+    - above the gate (or an empty frame): the distributed loop below,
+      entirely in the array domain (round-7 rewrite — the round-6
+      long-format version shuffled an n·d·k distance intermediate plus
+      an n·d update join per round, which dominated the sf1 wall once
+      SemDeDup's k(n) rule pushed k to 80):
 
-    So each round is ONE scan→project→partial-agg job whose output is
-    k·(d+1) model rows. Returns (asg, asg_carr, cents): ``asg_carr``
-    is the driver-side codebook that PRODUCED the final assignment
-    (pre-final-update — what consumers like the IVF probe must rank
-    against), ``cents`` the post-final-update model in (cid, dim, x)
-    long form. The all-points distance table is never materialized;
-    a consumer that needs distances codes its own (filtered) rows
-    against asg_carr via _code_points."""
+      - assignment: a pure projection against the LITERAL centroid
+        codebook (k·d ints baked into the expression — bounded by model
+        size; beyond LIT_MAX centroids the _assign_np numpy kernel) —
+        zero joins, zero shuffles per round;
+      - update: one (cid, dim) ``sum``/``count`` aggregate over the n
+        coded rows (map-side partials, k·d-row shuffle output), with
+        the k·d floor divisions done driver-side on the collected model
+        rows. Each round is ONE scan→project→partial-agg job whose
+        output is k·d model rows.
+
+    Why the paths agree bit for bit: the driver assignment IS the
+    _nearest_fn kernel of the distributed numpy path, and that kernel
+    equals the literal projection's integer argmin (float64 is exact
+    on these integers, argmin-first ≡ min(struct(dist, cid))); the
+    update sums are exact int64 on both sides, and numpy's int64 ``//``
+    floors exactly like Python ``//`` (the distributed path), DuckDB
+    ``//`` and the portable Spark ``(s - ((s%n+n)%n)) div n`` recipe. A
+    cluster left with no members drops out of the model on both paths
+    (no row for it in the update aggregate).
+
+    Returns (asg, asg_carr, cents): ``asg`` the final (vec_id, cid)
+    assignment frame, ``asg_carr`` the driver-side codebook that
+    PRODUCED it (pre-final-update — what consumers like the IVF probe
+    must rank against), ``cents`` the post-final-update model in (cid,
+    dim, x) long form. The all-points distance table is never
+    materialized; a consumer that needs distances codes its own
+    (filtered) rows against asg_carr via _code_points."""
+    rows = gate.driver_rows(eq.select("vec_id", "eq"))
+    if rows:
+        return _lloyd_driver(spark, rows, k, iters)
     carr = sorted(
         (int(r.vec_id), [int(v) for v in r.eq])
         for r in eq.filter(F.col("vec_id") < k).collect()
@@ -328,6 +368,39 @@ def _lloyd_arrays(
     # candidate joins (IVF) — pin the n-row result so consumers don't
     # re-run the n·k distance pass once per branch
     return asg.localCheckpoint(), asg_carr, cents
+
+
+def _lloyd_driver(spark: SparkSession, rows, k: int, iters: int):
+    """The _lloyd_arrays trajectory on the driver over the collected
+    (vec_id, eq) rows: one int64 matrix, assignment by the shared
+    _nearest_fn kernel, update as per-cid int64 sums floor-divided by
+    the member count (np.unique sorts the live cids, so the model stays
+    cid-ascending and an empty cluster simply has no row)."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids = np.asarray([r.vec_id for r in rows], dtype=np.int64)
+    x = np.asarray([r.eq for r in rows], dtype=np.int64)
+    seed = np.flatnonzero(ids < k)
+    seed = seed[np.argsort(ids[seed])]
+    carr = list(zip(ids[seed].tolist(), x[seed].tolist()))
+    if not carr:
+        raise ValueError(f"Lloyd seeding: no vector has vec_id < {k}")
+    for _ in range(iters):
+        asg_carr = carr
+        cid = _nearest_fn(carr)(x)
+        order = np.argsort(cid, kind="stable")
+        live, starts, n = np.unique(
+            cid[order], return_index=True, return_counts=True
+        )
+        sums = np.add.reduceat(x[order], starts, axis=0)
+        carr = list(zip(live.tolist(), (sums // n[:, None]).tolist()))
+    cents = [(c, i, v) for c, arr in carr for i, v in enumerate(arr)]
+    # an Arrow table lands JVM-side as (vec_id long, cid long) rows; a
+    # list of tuples would become a Python RDD that every consumer job
+    # re-pickles through Python workers
+    asg = spark.createDataFrame(pa.table({"vec_id": ids, "cid": cid}))
+    return asg, asg_carr, cents
 
 
 # --------------------------------------------------------------------------

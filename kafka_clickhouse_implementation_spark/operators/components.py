@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.operators.dedup import (
     _jaccard_pairs,
@@ -66,18 +67,6 @@ def _small_star(pairs: DataFrame) -> DataFrame:
         .select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
         .distinct()
     )
-
-
-# Edge-count gate for the driver union-find fast path: below it the
-# canonical edge set is collected (two longs per edge — ~1 MB at the
-# gate) and labeled with path-compressed union-find in O(E α) instead
-# of O(E log n) distributed star rounds, each of which costs a
-# checkpoint + count + (on the convergence round) a join-count of
-# job/shuffle machinery. The near-dup graphs of the clean chains are
-# thousands of edges at most; a graph past the gate takes the
-# unchanged distributed loop. Same (id, comp) result by construction:
-# components and their min labels are properties of the edge SET.
-CC_DRIVER_MAX_EDGES = 65536
 
 
 def _driver_components(rows) -> dict[int, int]:
@@ -145,23 +134,26 @@ def connected_components(
         .distinct()
     )
     e = e0.filter(F.col("lo") != F.col("hi")).localCheckpoint()
-    n_e = e.count()
-    # An empty edge set is already a fixpoint (both star operations map
-    # empty → empty), so skip the loop outright: one star round + the
+    # Under the shared driver gate (gate.py) the edge set is labeled
+    # with path-compressed union-find in O(E α) instead of O(E log n)
+    # distributed star rounds, each of which costs a checkpoint + count
+    # + (on the convergence round) a join-count of job/shuffle
+    # machinery. Same (id, comp) result by construction: components and
+    # their min labels are properties of the edge SET. An empty edge
+    # set is already a fixpoint (both star operations map empty →
+    # empty), so it skips the loop outright: one star round + the
     # fixpoint join-count on empty 32-partition frames still costs a
-    # full second of shuffle/job machinery (r15 measurement), and a
-    # near-dup-free corpus slice — the common case at the small SFs —
-    # paid it in every clean-chain consumer.
-    if 0 < n_e <= CC_DRIVER_MAX_EDGES:
-        labels = _driver_components(
-            (int(r.lo), int(r.hi)) for r in e.collect()
-        )
+    # full second of shuffle/job machinery (r15 measurement).
+    rows = gate.driver_rows(e)
+    if rows:
+        labels = _driver_components((int(r.lo), int(r.hi)) for r in rows)
         spark = e.sparkSession
         nbr = spark.createDataFrame(
             sorted(labels.items()), schema="id long, mn long"
         )
     else:
-        if n_e > 0:
+        if rows is None:
+            n_e = e.count()
             for _ in range(max_iter):
                 new_e = _small_star(_large_star(e)).localCheckpoint()
                 n_new = new_e.count()

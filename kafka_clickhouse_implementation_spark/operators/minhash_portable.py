@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
 
@@ -189,21 +190,27 @@ def verified_pairs(
     # r16: the exact-verify intersection only ever touches shingles of
     # documents that appear in some candidate pair — a small fraction
     # of the corpus (LSH at 4x4 bands passes ~J^4 of pairs). Restrict
-    # the materialized shingle table ONCE with a broadcast semi-join on
-    # the candidate doc set, and broadcast the (small, checkpointed)
-    # pair list into the probe join, so the only shuffle left in the
-    # verify stage carries candidate-doc shingles, not the corpus
-    # (guide §3.2 — the semi-join form of Bloom pre-filtering).
+    # the materialized shingle table ONCE with a semi-join on the
+    # candidate doc set and probe-join the (checkpointed) pair list, so
+    # the only shuffle left in the verify stage carries candidate-doc
+    # shingles, not the corpus (guide §3.2 — the semi-join form of
+    # Bloom pre-filtering). Both small sides are hinted broadcast only
+    # while the pair list is under the shared driver gate (gate.py):
+    # it grows with the corpus and its duplicate-cluster sizes, and
+    # above the gate the planner picks the joins from its own size
+    # estimates (pair_docs has at most twice the pair rows).
+    small = cand.count() <= gate.DRIVER_MAX_ROWS
+    hint = F.broadcast if small else (lambda df: df)
     pair_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    shp = sh.join(F.broadcast(pair_docs), "doc_id", "left_semi")
+    shp = sh.join(hint(pair_docs), "doc_id", "left_semi")
     sa = shp.select(F.col("doc_id").alias("doc_a"), "s")
     sb = shp.select(F.col("doc_id").alias("doc_b"), "s")
     inter = (
-        sa.join(F.broadcast(cand), "doc_a")
+        sa.join(hint(cand), "doc_a")
         .join(sb, ["doc_b", "s"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_int"))

@@ -56,6 +56,7 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
     ln_scale_case,
     pln,
 )
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
 
@@ -975,11 +976,6 @@ def q_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 MMR_K = 4  # diversified picks per query
 MMR_W_REL = 7  # LAM = 0.7 scaled by 10
 MMR_W_DIV = 3  # 1 - LAM scaled by 10
-# Driver-collect gate for the greedy loop (the CC_DRIVER_MAX_EDGES
-# convention): candidate rows are n_queries x DENSE_K by construction
-# (~40 at every SF); 65536 rows (a few MB collected) is far above any
-# config-bounded list and far below driver trouble.
-MMR_DRIVER_MAX_CANDIDATES = 65536
 
 
 def _mmr_round_cte(k: int) -> str:
@@ -1087,22 +1083,20 @@ def mmr_diversify(cand: DataFrame, psim: DataFrame, k: int = MMR_K) -> DataFrame
     with maxsim = max over those rows and mmr = W_REL*rel − W_DIV*
     maxsim in exact Python ints."""
     spark = cand.sparkSession
-    # Collect gate (r15 advisory — the CC_DRIVER_MAX_EDGES convention):
-    # the boundedness is a CONFIG property (n_queries × DENSE_K rows,
+    # Collect gate (the shared driver gate, gate.py): the boundedness
+    # is a CONFIG property (n_queries × DENSE_K rows, ~40 at every SF;
     # psim ≤ its pairwise square); a future corpus-scaled caller must
     # fail loudly here, not OOM the driver. The candidate chain is
     # pinned executor-side FIRST (disk-backed, never driver memory),
-    # so the gate count and the collect read the same materialization
-    # instead of each re-evaluating the chain (r16, guide §1.2).
+    # so the gated fetch reads one materialization (r16, guide §1.2).
     cand = cand.select("qid", "doc_id", "cos_nano", "dense_rnk").localCheckpoint()
-    n_cand = cand.count()
-    if n_cand > MMR_DRIVER_MAX_CANDIDATES:
+    crows = gate.driver_rows(cand)
+    if crows is None:
         raise ValueError(
-            f"mmr_diversify: {n_cand} candidate rows exceed the driver "
-            f"gate ({MMR_DRIVER_MAX_CANDIDATES}); the greedy expects a "
+            "mmr_diversify: the candidate rows exceed the driver gate "
+            f"({gate.DRIVER_MAX_ROWS}); the greedy expects a "
             "config-bounded candidate list (n_queries x DENSE_K)"
         )
-    crows = cand.collect()
     prows = psim.select("qid", "a", "b", "sim_nano").collect()
 
     by_q: dict[int, dict[int, int]] = {}

@@ -78,6 +78,7 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
     pln,
     pln_py,
 )
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
 
@@ -90,19 +91,6 @@ _OFF = 2**50
 _SENT = -(2**49)
 _ENC0 = _OFF * 128
 
-# Word-count gate for the driver EM fast path (r16 — the P2.9/BPE
-# recipe applied to the unigram trainer, the r15 verdict's #3): below
-# it the (w, f) vocabulary is collected (a few MB at the gate) and the
-# whole hard-EM loop runs in Python, replicating candidate generation,
-# the prune order, the nano-quantized pln scores (pln_py IS the same
-# IEEE op sequence as the SQL kernel — CPython doubles are binary64
-# with the identical literal values), and the packed-BIGINT Viterbi DP
-# in exact integer arithmetic. Every distributed round cost ~14
-# vocab-sized Spark jobs of pure scheduling overhead at any SF where
-# the vocabulary is driver-sized; a corpus whose vocabulary exceeds
-# the gate takes the unchanged distributed loop. Equality is pinned by
-# tests/test_unigram.py::test_driver_em_equals_distributed.
-UNI_DRIVER_MAX_WORDS = 65536
 
 
 # ---------------------------------------------------------------------
@@ -386,10 +374,18 @@ def _em_rounds_from_words(
     the drained complete-mode word state (C147), the export product
     (C191) at its own (rounds, multi) budget. Returns (trajectory,
     final segmentation, final model (piece, cnt))."""
-    head = words.limit(UNI_DRIVER_MAX_WORDS + 1).collect()
-    # an empty vocabulary takes the distributed loop: the driver loop
-    # has no model to take a min over or to normalize scores by
-    if 0 < len(head) <= UNI_DRIVER_MAX_WORDS:
+    # Driver EM fast path under the shared gate (gate.py): the whole
+    # hard-EM loop runs in Python, replicating candidate generation, the
+    # prune order, the nano-quantized pln scores (pln_py IS the same
+    # IEEE op sequence as the SQL kernel — CPython doubles are binary64
+    # with the identical literal values), and the packed-BIGINT Viterbi
+    # DP in exact integer arithmetic; every distributed round costs ~14
+    # vocab-sized Spark jobs. Equality is pinned by
+    # tests/test_unigram.py::test_driver_em_equals_distributed. An empty
+    # vocabulary takes the distributed loop: the driver loop has no
+    # model to take a min over or to normalize scores by.
+    head = gate.driver_rows(words)
+    if head:
         return _driver_em(
             words.sparkSession,
             [(r.w, int(r.f)) for r in head],

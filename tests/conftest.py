@@ -1,18 +1,18 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, whatever its path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_clickhouse_implementation_spark.session import get_spark
 
 # Overridable so the plan-assertion suite can run against the
 # self-generated sf1-equivalent dataset (tools/make_scale_data.py):
 #   SPARK_GRAFT_TEST_SF_DIR=/tmp/spark_graft_scale/sf1 pytest tests/test_plans.py
-import os
-
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

@@ -355,6 +355,7 @@ def test_driver_trainer_equals_distributed(spark):
     vocabs, for both the sequential and the batched trainer."""
     from pyspark.sql import functions as F
 
+    from kafka_clickhouse_implementation_spark import gate
     from kafka_clickhouse_implementation_spark.io import load
     from kafka_clickhouse_implementation_spark.operators import bpe
 
@@ -368,12 +369,12 @@ def test_driver_trainer_equals_distributed(spark):
 
     def run_both(fn, *args, **kw):
         fast = fn(spark, vocab, *args, **kw)
-        old = bpe._DRIVER_VOCAB_MAX
-        bpe._DRIVER_VOCAB_MAX = 0
+        old = gate.DRIVER_MAX_ROWS
+        gate.DRIVER_MAX_ROWS = 0
         try:
             slow = fn(spark, vocab, *args, **kw)
         finally:
-            bpe._DRIVER_VOCAB_MAX = old
+            gate.DRIVER_MAX_ROWS = old
         assert fast[0] == slow[0] and len(fast[0]) > 0
         f_rows = sorted(map(tuple, fast[1].collect()))
         s_rows = sorted(map(tuple, slow[1].collect()))

@@ -285,18 +285,23 @@ def test_substring_dup_matches_python(spark, sf_dir):
     assert dup_total > 0  # injected near-dup docs make this non-vacuous
 
 
-def test_large_k_numpy_assignment_matches_literal_semantics(spark, sf_dir, emb):
+def test_large_k_numpy_assignment_matches_literal_semantics(
+    spark, sf_dir, emb, monkeypatch
+):
     """The k > LIT_MAX assignment path (vectorized numpy matmul in
     float64 — exact for integer operands < 2^53) must replay the same
     trajectory as the literal-codebook path / this file's numpy
     reference. k=100 forces the matmul branch even on the small
-    fixture corpus."""
+    fixture corpus; the driver gate is closed so the distributed
+    _assign_np path is what runs."""
+    from kafka_clickhouse_implementation_spark import gate
     from kafka_clickhouse_implementation_spark.operators.clustering import (
         _eq_arrays,
         _lloyd_arrays,
         LIT_MAX,
     )
 
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     ids, x = emb
     k = 100
     assert k > LIT_MAX
@@ -584,7 +589,7 @@ def test_sq8_codes_and_recon_bounds(spark, sf_dir):
     assert err.filter("e > step").count() == 0
 
 
-def test_sq8_unbounded_shortlist_reduces_to_flat_ivf(spark, sf_dir):
+def test_sq8_unbounded_shortlist_reduces_to_flat_ivf(spark, sf_dir, monkeypatch):
     """C196 acceptance: with an unbounded shortlist the SQ8 ADC stage
     only reorders candidates BEFORE an exact re-rank that sees all of
     them, so the final ranking must equal C112's flat-IVF exact search
@@ -608,10 +613,17 @@ def test_sq8_unbounded_shortlist_reduces_to_flat_ivf(spark, sf_dir):
     )
     from kafka_clickhouse_implementation_spark.io import load
 
+    from kafka_clickhouse_implementation_spark import gate
+
     emb = load(spark, sf_dir, "embeddings")
     k = ivf_k(emb.count())
     eq = _eq_arrays(spark, sf_dir).localCheckpoint()
+    # the distributed Lloyd path trains these books; q_ann_ivf_exact
+    # below trains its own on the driver path, so the equality also
+    # crosses the two paths
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     asg, asg_carr, _ = _lloyd_arrays(spark, eq, k, ITERS)
+    monkeypatch.undo()
     pts = _pts_long(spark, sf_dir)
     stats = _sq8_train(pts)
     codes = _sq8_codes(pts, stats)
@@ -625,7 +637,7 @@ def test_sq8_unbounded_shortlist_reduces_to_flat_ivf(spark, sf_dir):
     assert got == want
 
 
-def test_inrow_probe_equals_window_form(spark, sf_dir):
+def test_inrow_probe_equals_window_form(spark, sf_dir, monkeypatch):
     """r15 optimization guard: the coarse probe's in-row
     slice(array_sort(dists), 1, nprobe) must reproduce the window form
     it replaced (row_number over (dist, cid) <= nprobe) exactly —
@@ -643,8 +655,11 @@ def test_inrow_probe_equals_window_form(spark, sf_dir):
         ivf_k,
     )
 
+    from kafka_clickhouse_implementation_spark import gate
+
     eq = _eq_arrays(spark, sf_dir).localCheckpoint()
     k = ivf_k(eq.count())
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)  # distributed Lloyd
     _asg, asg_carr, _ = _lloyd_arrays(spark, eq, k, ITERS)
     qd = _code_points(
         eq.filter(F.col("vec_id") % Q_EVERY == 0), asg_carr
@@ -675,3 +690,94 @@ def test_inrow_probe_equals_window_form(spark, sf_dir):
         got = sorted(map(tuple, inrow.collect()))
         want = sorted(map(tuple, window.collect()))
         assert got == want, nprobe
+
+
+# ---------------------------------------------------- driver-gated Lloyd
+
+
+def _both_paths(spark, eq, k, iters=ITERS, dim=64):
+    """(driver, distributed) _lloyd_arrays results on the same frame:
+    the distributed run closes the shared gate."""
+    from kafka_clickhouse_implementation_spark import gate
+    from kafka_clickhouse_implementation_spark.operators.clustering import (
+        _lloyd_arrays,
+    )
+
+    fast = _lloyd_arrays(spark, eq, k, iters, dim=dim)
+    old = gate.DRIVER_MAX_ROWS
+    gate.DRIVER_MAX_ROWS = 0
+    try:
+        slow = _lloyd_arrays(spark, eq, k, iters, dim=dim)
+    finally:
+        gate.DRIVER_MAX_ROWS = old
+    return fast, slow
+
+
+def _assert_same_trajectory(fast, slow):
+    f_asg = sorted(map(tuple, fast[0].collect()))
+    s_asg = sorted(map(tuple, slow[0].collect()))
+    assert f_asg == s_asg and len(f_asg) > 0
+    assert fast[1] == slow[1]  # asg_carr: the codebook that made asg
+    assert fast[2] == slow[2]  # cents: the post-final-update model
+
+
+@pytest.mark.parametrize("rule", ["K", "ivf_k", "semdedup_k"])
+def test_driver_lloyd_equals_distributed(spark, sf_dir, rule):
+    """The driver Lloyd (under the gate) and the distributed loop replay
+    the same integer trajectory — assignment, producing codebook and
+    final model — at every k rule the package trains with."""
+    from kafka_clickhouse_implementation_spark.operators.clustering import (
+        _eq_arrays,
+    )
+
+    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
+    n = eq.count()
+    k = {"K": K, "ivf_k": ivf_k(n), "semdedup_k": semdedup_k(n)}[rule]
+    _assert_same_trajectory(*_both_paths(spark, eq, k))
+
+
+def _eq_frame(spark, vecs):
+    return spark.createDataFrame(
+        [(i, list(v)) for i, v in enumerate(vecs)],
+        schema="vec_id long, eq array<bigint>",
+    )
+
+
+def test_driver_lloyd_drops_emptied_cluster_like_distributed(spark):
+    """Seeds 0 and 1 coincide, so every point tied between them goes to
+    cid 0 and cluster 1 is left with no members: both paths drop it
+    from the model after round one."""
+    vecs = [(0, 0), (0, 0), (100, 100), (1, 2), (99, 97), (-3, 1), (50, 49)]
+    fast, slow = _both_paths(spark, _eq_frame(spark, vecs), 3, dim=2)
+    _assert_same_trajectory(fast, slow)
+    assert [c for c, _ in fast[1]] == [0, 2]
+    assert {c for _, c in map(tuple, fast[0].collect())} == {0, 2}
+
+
+def test_driver_lloyd_breaks_exact_tie_to_smaller_cid(spark):
+    """Vector 2 is exactly equidistant (squared distance 25) from seeds
+    0 and 1: both paths assign it to cid 0, the smaller id."""
+    vecs = [(0, 0), (10, 0), (5, 0), (0, 1), (10, 1)]
+    fast, slow = _both_paths(spark, _eq_frame(spark, vecs), 2, iters=1, dim=2)
+    _assert_same_trajectory(fast, slow)
+    assert dict(map(tuple, fast[0].collect()))[2] == 0
+
+
+def test_lloyd_job_budget(spark, sf_dir):
+    """The gated k-means fit at sf0.001 — embeddings read, one
+    checkpoint, the gate's fetch — launches at most 5 Spark jobs; the
+    three distributed rounds used to add one update job each plus the
+    seed collect and the assignment checkpoint."""
+    import uuid
+
+    from kafka_clickhouse_implementation_spark.operators.clustering import _lloyd
+
+    sc = spark.sparkContext
+    group = f"lloyd-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        _lloyd(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5

@@ -31,9 +31,9 @@ def test_adversarial_long_chain_converges_in_log_rounds(spark, monkeypatch):
     propagation (O(diameter) = 1000 rounds); large-star/small-star must
     collapse it within a ≤20-round budget. The driver union-find gate
     is forced off so the DISTRIBUTED loop is what's exercised."""
-    from kafka_clickhouse_implementation_spark.operators import components
+    from kafka_clickhouse_implementation_spark import gate
 
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     n = 1000
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
@@ -46,9 +46,9 @@ def test_adversarial_long_chain_converges_in_log_rounds(spark, monkeypatch):
 def test_nonconvergence_raises_instead_of_wrong_labels(spark, monkeypatch):
     import pytest
 
-    from kafka_clickhouse_implementation_spark.operators import components
+    from kafka_clickhouse_implementation_spark import gate
 
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "src long, dst long"
     )
@@ -60,7 +60,7 @@ def test_driver_union_find_equals_distributed_loop(spark, monkeypatch):
     """r15 optimization guard: the small-graph driver union-find path
     and the distributed star loop label the same graph identically —
     chains, stars, self-loops, isolated pairs, shuffled edge order."""
-    from kafka_clickhouse_implementation_spark.operators import components
+    from kafka_clickhouse_implementation_spark import gate
 
     raw = (
         [(i, i + 1) for i in range(0, 40)]
@@ -71,7 +71,7 @@ def test_driver_union_find_equals_distributed_loop(spark, monkeypatch):
     fast = {
         r["id"]: r["comp"] for r in connected_components(edges).collect()
     }
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     slow = {
         r["id"]: r["comp"] for r in connected_components(edges).collect()
     }

@@ -103,3 +103,41 @@ def test_portable_simhash_similarity_property(spark):
     # 30-token docs: one swapped token moves few bit-sums past zero,
     # a disjoint vocab re-rolls every bit (verified offline: 1 vs 6)
     assert ham(fp[0], fp[2]) < ham(fp[0], fp[3]), fp
+
+
+def test_verified_pairs_drops_broadcast_hints_past_the_gate(spark, monkeypatch):
+    """verified_pairs hints the candidate pair list (and its doc set)
+    broadcast only while the list is under the shared driver gate.
+    With size-based broadcasting off, the hints are the only source of
+    a BroadcastExchange: present under the gate, gone past it — and the
+    verified pairs are identical either way."""
+    from kafka_clickhouse_implementation_spark import gate
+    from kafka_clickhouse_implementation_spark.operators.minhash_portable import (
+        verified_pairs,
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    docs = load(spark, SF, "documents")
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        hinted = verified_pairs(docs)
+        assert "BroadcastExchange" in plan(hinted)
+        monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
+        plain = verified_pairs(docs)
+        assert "BroadcastExchange" not in plan(plain)
+        got = sorted(map(tuple, plain.collect()))
+        assert got and got == sorted(map(tuple, hinted.collect()))
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -151,7 +151,7 @@ def test_driver_em_equals_distributed(spark):
     tokenizer export persists), and final models — on the real corpus
     at both the teaching and the export (rounds, multi) budgets."""
     from kafka_clickhouse_implementation_spark.io import load
-    from kafka_clickhouse_implementation_spark.operators import unigram_lm
+    from kafka_clickhouse_implementation_spark import gate
     from kafka_clickhouse_implementation_spark.operators.unigram_lm import (
         UNI_EXPORT_MULTI,
         UNI_EXPORT_ROUNDS,
@@ -163,12 +163,12 @@ def test_driver_em_equals_distributed(spark):
 
     def run_both(rounds, multi):
         fast = _em_rounds_from_words(words, rounds=rounds, multi=multi)
-        old = unigram_lm.UNI_DRIVER_MAX_WORDS
-        unigram_lm.UNI_DRIVER_MAX_WORDS = 0
+        old = gate.DRIVER_MAX_ROWS
+        gate.DRIVER_MAX_ROWS = 0
         try:
             slow = _em_rounds_from_words(words, rounds=rounds, multi=multi)
         finally:
-            unigram_lm.UNI_DRIVER_MAX_WORDS = old
+            gate.DRIVER_MAX_ROWS = old
         f_traj = sorted(tuple(r) for r in fast[0].collect())
         s_traj = sorted(tuple(r) for r in slow[0].collect())
         assert f_traj == s_traj and len(f_traj) == rounds

@@ -14,12 +14,13 @@ be committed as auditable artifacts (docs/CORRECTNESS_full_*.json).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_clickhouse_implementation_spark.io import TABLES  # noqa: E402
 from kafka_clickhouse_implementation_spark.session import get_spark  # noqa: E402

@@ -40,7 +40,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -337,7 +338,7 @@ def main() -> None:
         "files_per_trigger": FILES_PER_TRIGGER,
         "results": results,
     }
-    out = "/root/repo/docs/STREAM_THROUGHPUT.json"
+    out = os.path.join(ROOT, "docs", "STREAM_THROUGHPUT.json")
     with open(out, "w") as fh:
         json.dump(doc, fh, indent=2)
     print(f"wrote {out}")
