@@ -65,6 +65,13 @@ def get_spark(app_name: str = "kafka_clickhouse_implementation_spark", shuffle_p
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # the master is always local[N], so a "parallel" listing job
+        # (Spark launches one for more than 32 paths or sub-directories)
+        # only wraps the same listStatus calls in a job of one task per
+        # path on this JVM: it added 0.2-0.35 s to each 36-file streaming
+        # micro-batch on a 4-core host. Keep every listing on the driver
+        # thread.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # localCheckpoint of a wide text frame counts its materialized
         # blocks against maxResultSize in local mode; the 1 GB default

@@ -330,10 +330,6 @@ class stream_partitions_conf:
         return False
 
 
-# backwards-compatible private alias (pre-r16 name)
-_stream_partitions_conf = stream_partitions_conf
-
-
 def _drain(spark, out, name: str, ckpt: str, mode: str = "update"):
     import shutil
 

@@ -368,6 +368,21 @@ def test_declared_reads_launch_no_job(spark, tmp_path):
     assert _jobs_launched(spark, lambda: read_rollup(spark, rollup)) == 0
     assert _jobs_launched(spark, lambda: read_day_partitioned(spark, fact)) == 0
 
+    # past Spark's default parallel-listing threshold (32 sub-dirs) the
+    # listing still runs on the driver: 40 day partitions, 40 batch dirs
+    import shutil
+
+    wide_fact, wide_rollup = str(tmp_path / "wide_fact"), str(tmp_path / "wide_rollup")
+    days = _events(spark, 80).withColumn(
+        "ts", F.expr("timestamp'2024-01-01' + make_interval(0, 0, 0, event_id % 40)")
+    )
+    write_day_partitioned(days, wide_fact)
+    write_rollup_batch(_day_level(spark).drop("event_id"), wide_rollup, 0)
+    for b in range(1, 40):
+        shutil.copytree(f"{wide_rollup}/batch-{0:010d}", f"{wide_rollup}/batch-{b:010d}")
+    assert _jobs_launched(spark, lambda: read_day_partitioned(spark, wide_fact)) == 0
+    assert _jobs_launched(spark, lambda: read_rollup(spark, wide_rollup)) == 0
+
 
 def test_declared_rollup_reads_equal_inferred(spark, tmp_path):
     """The declared rollup read returns what inference returned, over

@@ -278,6 +278,36 @@ def test_streaming_dedup(spark, tmp_path):
     assert n == 40
 
 
+def _listing_jobs(spark) -> int:
+    """Spark jobs launched so far, JVM-wide, to list files in parallel."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    return metrics.METRIC_PARALLEL_LISTING_JOB_COUNT().getCount()
+
+
+def test_wide_micro_batch_lists_on_the_driver(spark, tmp_path):
+    """A micro-batch of 40 new files (past Spark's default parallel
+    listing threshold of 32) lists them on the driver thread: every row
+    arrives and no parallel-listing job runs."""
+    import os
+
+    ev = _events(spark, 200)
+    wire_dir = str(tmp_path / "wire")
+    write_wire_format(ev.repartition(40), wire_dir, partitions=40)
+    assert sum(n.startswith("part-") for n in os.listdir(wire_dir)) == 40
+    before = _listing_jobs(spark)
+    q = (
+        decoded_events(file_stream(spark, wire_dir)).writeStream.format("memory")
+        .queryName("wide_batch")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [200]
+    assert spark.sql("SELECT count(*) AS n FROM wide_batch").head()["n"] == 200
+    assert _listing_jobs(spark) == before
+
+
 def test_document_wire_duplicates_land_in_later_batches(spark, sf_dir):
     """The corpus-stream duplicate injection is only non-vacuous if each
     document's duplicate arrives in a LATER micro-batch than its

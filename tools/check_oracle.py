@@ -9,6 +9,8 @@ With --json, every checked query's result is also written in the
 driver's CORRECTNESS_r{N}.json row format (rows_match / schema_match /
 hash_match / spark_rows / oracle_rows / err) so full-surface sweeps can
 be committed as auditable artifacts (docs/CORRECTNESS_full_*.json).
+Each row also records `listing_jobs`: the Spark jobs the query's Spark
+side launched to list files in parallel.
 """
 
 from __future__ import annotations
@@ -93,6 +95,12 @@ def duck_schema_norm(cols: list[str], types: list) -> dict[str, str]:
     return {c: _norm_duck_type(str(t)) for c, t in zip(cols, types)}
 
 
+def listing_jobs(spark) -> int:
+    """Parallel file-listing jobs launched so far in the session's JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    return metrics.METRIC_PARALLEL_LISTING_JOB_COUNT().getCount()
+
+
 def main() -> int:
     # flags may appear anywhere; a flag missing its value is an error,
     # not an IndexError (ADVICE r6)
@@ -140,7 +148,7 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = n_rowsonly = n_listed = 0
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
@@ -148,26 +156,33 @@ def main() -> int:
             print(f"SKIP  {name} (--skip)")
             continue
         t0 = time.time()
+        listed0 = listing_jobs(spark)
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
+            listed = listing_jobs(spark) - listed0
             results[name] = {
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark error: {e}"[:500],
+                "listing_jobs": listed,
             }
             n_fail += 1
+            n_listed += listed
             continue
         dt = time.time() - t0
+        listed = listing_jobs(spark) - listed0
+        n_listed += listed
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (no oracle) [{dt:.1f}s]")
             results[name] = {
                 "rows_match": True, "schema_match": None,
                 "hash_match": None, "spark_rows": len(srows),
                 "oracle_rows": None, "err": None, "no_oracle": True,
+                "listing_jobs": listed,
             }
             n_rowsonly += 1
             continue
@@ -182,6 +197,7 @@ def main() -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(srows),
                 "oracle_rows": None, "err": f"duckdb error: {e}"[:500],
+                "listing_jobs": listed,
             }
             n_fail += 1
             continue
@@ -207,6 +223,7 @@ def main() -> int:
             "hash_match": hash_ok, "spark_rows": len(srows),
             "oracle_rows": len(drows),
             "err": "; ".join(problems) if problems else None,
+            "listing_jobs": listed,
         }
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems) + f" [{dt:.1f}s]")
@@ -214,7 +231,8 @@ def main() -> int:
         else:
             print(f"PASS  {name}: {len(srows)} rows [{dt:.1f}s]")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only, "
+          f"{n_listed} parallel listing jobs")
     if json_out:
         import json
 
