@@ -785,7 +785,7 @@ def q_stream_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
     vocab_counts = (
@@ -798,9 +798,12 @@ def q_stream_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
-    _drain(
-        spark, vocab_counts, "bpe_vocab_stream",
-        os.path.join(base, "ckpt_bpe_vocab"), mode="complete",
+    drain(
+        spark,
+        (
+            vocab_counts, "bpe_vocab_stream",
+            os.path.join(base, "ckpt_bpe_vocab"), "complete",
+        ),
     )
     out, _final = _train_batched_full(
         spark, _symbolized_vocab(spark.table("bpe_vocab_stream"))

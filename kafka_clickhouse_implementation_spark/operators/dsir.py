@@ -481,9 +481,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     # the streaming frame runs through the SAME doc_features helper as
@@ -504,7 +502,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as parquet instead of collected to the driver by the memory sink
     # (3.8M rows at sf1). Cross-batch accumulation still runs through
     # the same aggregation state store; the oracle hash pins equality.
-    dfc_path = _drain_files(
+    dfc = drain_table(
         spark, feat_state,
         os.path.join(base, "dsir_dfc_table"),
         os.path.join(base, "ckpt_dsir_dfc"),
@@ -512,7 +510,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the drained state feeds four plan branches (smodel, tmodel, tots,
     # scoring) — pin it once (the C152 localCheckpoint rationale),
     # executor-side from the parquet scan
-    dfc = spark.read.parquet(dfc_path).localCheckpoint()
+    dfc = dfc.localCheckpoint()
     docs = load(spark, sf_dir, "documents")
     scored = dsir_scores_from_features(dfc, target_ids(docs))
     return _select_top(scored, docs)

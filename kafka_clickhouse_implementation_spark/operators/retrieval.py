@@ -279,9 +279,7 @@ def q_stream_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     # the streaming frame runs through the SAME doc_tf helper as batch
@@ -299,7 +297,7 @@ def q_stream_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the complete-mode memory sink re-collected whole to the DRIVER
     # every trigger (see q_stream_dsir). A dedup failure now surfaces
     # as duplicate keys in the drained table — still a loud hash FAIL.
-    tf_path = _drain_files(
+    tf = drain_table(
         spark, tf_state,
         os.path.join(base, "bm25_tf_table"),
         os.path.join(base, "ckpt_bm25_tf"),
@@ -309,7 +307,7 @@ def q_stream_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gives the self-join (qterms derives from tf) fresh attribute ids,
     # which a shared scan otherwise shares across both sides
     # (Spark "conflicting references in Join" internal error).
-    tf = spark.read.parquet(tf_path).localCheckpoint()
+    tf = tf.localCheckpoint()
     return bm25_from_tf(tf, _wire_doc_count(spark, wire))
 
 
@@ -380,12 +378,12 @@ def stream_index_upsert(spark: SparkSession, sf_dir: str, project, tag: str) -> 
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
     path = os.path.join(base, f"{tag}_upsert")
     ckpt = os.path.join(base, f"ckpt_{tag}_upsert")
     shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     deduped = (
         spark.readStream.schema(_DOC_WIRE_SCHEMA)
         .option("maxFilesPerTrigger", "4")
@@ -398,22 +396,7 @@ def stream_index_upsert(spark: SparkSession, sf_dir: str, project, tag: str) -> 
             bdf.withColumn("version", F.lit(epoch_id).cast("long")), path
         )
 
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        stream_partitions_conf,
-    )
-
-    out = project(deduped)
-    with stream_partitions_conf(spark, out):
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"{tag} upsert stream did not drain in 600s")
+    drain(spark, (project(deduped), upsert_batch, ckpt, "update"))
     return path
 
 
@@ -645,9 +628,7 @@ def q_stream_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     # the streaming frame runs through the SAME positional_postings
@@ -669,14 +650,11 @@ def q_stream_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UPDATE-mode FILE drain (r16): (doc_id, token, pos) keys are
     # doc-scoped behind the stateful dedup — same argument and same
     # loud-fail posture as the tf drain above.
-    post_path = _drain_files(
+    post = drain_table(
         spark, pos_state,
         os.path.join(base, "prox_postings_table"),
         os.path.join(base, "ckpt_prox_postings"),
-    )
-    post = spark.read.parquet(post_path).select(
-        "doc_id", "pos", "token", "arr"
-    ).localCheckpoint()
+    ).select("doc_id", "pos", "token", "arr").localCheckpoint()
     return proximity_from_postings(post)
 
 

@@ -648,7 +648,7 @@ def q_stream_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
     vocab_counts = (
@@ -661,9 +661,12 @@ def q_stream_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
-    _drain(
-        spark, vocab_counts, "unigram_vocab_stream",
-        os.path.join(base, "ckpt_unigram_vocab"), mode="complete",
+    drain(
+        spark,
+        (
+            vocab_counts, "unigram_vocab_stream",
+            os.path.join(base, "ckpt_unigram_vocab"), "complete",
+        ),
     )
     traj, _seg, _v = _em_rounds_from_words(spark.table("unigram_vocab_stream"))
     return traj.orderBy("round")
@@ -1071,9 +1074,7 @@ def q_stream_token_shards_unigram(
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     deduped = (
@@ -1085,17 +1086,13 @@ def q_stream_token_shards_unigram(
         .select("doc_id", "text")
     )
     # append-mode FILE drain (r16): see q_stream_token_shards
-    docs_path = _drain_files(
+    docs = drain_table(
         spark, deduped,
         os.path.join(base, "unishard_docs_table"),
         os.path.join(base, "ckpt_unishard_docs"), mode="append",
     )
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = (
-        spark.read.parquet(docs_path)
-        .join(src, "doc_id")
-        .localCheckpoint()
-    )
+    docs = docs.join(src, "doc_id").localCheckpoint()
     root = write_unigram_tokenizer(spark, sf_dir)
     wpieces, vocab = _unigram_pack_inputs(spark, root)
     return pack_sequences(

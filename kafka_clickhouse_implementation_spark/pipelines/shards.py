@@ -562,9 +562,7 @@ def q_stream_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     deduped = (
@@ -579,13 +577,13 @@ def q_stream_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every deduped document's TEXT to the driver and the downstream
     # join re-parallelized it; the parquet drain writes the identical
     # appended rows from the executors.
-    docs_path = _drain_files(
+    docs = drain_table(
         spark, deduped,
         os.path.join(base, "shard_docs_table"),
         os.path.join(base, "ckpt_shard_docs"), mode="append",
     )
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = spark.read.parquet(docs_path).join(src, "doc_id").localCheckpoint()
+    docs = docs.join(src, "doc_id").localCheckpoint()
     kept = clean_kept(docs).localCheckpoint()
     # the tokenizer products are raw-corpus artifacts (train once,
     # encode everything) — load them; only the KEPT SET must come from
@@ -1127,9 +1125,7 @@ def q_stream_mixture_resampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     deduped = (
@@ -1141,15 +1137,13 @@ def q_stream_mixture_resampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     # append-mode FILE drain (r16): see q_stream_token_shards
-    docs_path = _drain_files(
+    docs = drain_table(
         spark, deduped,
         os.path.join(base, "resample_docs_table"),
         os.path.join(base, "ckpt_resample_docs"), mode="append",
     )
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = (
-        spark.read.parquet(docs_path).join(src, "doc_id").localCheckpoint()
-    )
+    docs = docs.join(src, "doc_id").localCheckpoint()
     kept = clean_kept(docs).localCheckpoint()
     _kept_cached, wpieces, vocab = shard_inputs(spark, sf_dir)
     return _resampled_mixture_rollup(
@@ -1282,6 +1276,7 @@ def stream_resampled_shards_upsert(
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     _kept_unused, wpieces, vocab = shard_inputs(spark, sf_dir)
     wpieces = wpieces.localCheckpoint()
@@ -1387,16 +1382,7 @@ def stream_resampled_shards_upsert(
         .dropDuplicates(["doc_id"])
         .select("doc_id", "text")
     )
-    q = (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("resampled shard upsert stream did not drain in 600s")
+    drain(spark, (deduped, upsert_batch, ckpt, "update"), resume=True)
     with open(marker, "w") as f:
         f.write(books_identity + "\n")
     return path
@@ -1698,9 +1684,7 @@ def q_stream_shards_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain_files,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     deduped = (
@@ -1712,15 +1696,13 @@ def q_stream_shards_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     # append-mode FILE drain (r16): see q_stream_token_shards
-    docs_path = _drain_files(
+    docs = drain_table(
         spark, deduped,
         os.path.join(base, "resample_docs_table"),
         os.path.join(base, "ckpt_resample_docs"), mode="append",
     )
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = (
-        spark.read.parquet(docs_path).join(src, "doc_id").localCheckpoint()
-    )
+    docs = docs.join(src, "doc_id").localCheckpoint()
     kept = clean_kept(docs).localCheckpoint()
     _kept_cached, wpieces, vocab = shard_inputs(spark, sf_dir)
     wp_bc = wpieces_fits_broadcast(wpieces)

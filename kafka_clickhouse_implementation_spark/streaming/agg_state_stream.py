@@ -56,10 +56,7 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     _nibble_value_sql,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.streaming.funnel import (
-    _drain,
-    _drain_many,
-)
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 _WIRE_SCHEMA = T.StructType(
     [
@@ -130,18 +127,11 @@ def q_stream_agg_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete-mode output exactly as before; only the driver-side
     # await order changed (r15: 3 sequential micro-batch lifecycles
     # of wall time -> ~1)
-    _drain_many(
+    drain(
         spark,
-        [
-            (nums, "agg_state_nums", os.path.join(base, "ckpt_nums"), "complete"),
-            (regs, "agg_state_regs", os.path.join(base, "ckpt_regs"), "complete"),
-            (
-                dig,
-                "agg_state_digests",
-                os.path.join(base, "ckpt_digests"),
-                "complete",
-            ),
-        ],
+        (nums, "agg_state_nums", os.path.join(base, "ckpt_nums"), "complete"),
+        (regs, "agg_state_regs", os.path.join(base, "ckpt_regs"), "complete"),
+        (dig, "agg_state_digests", os.path.join(base, "ckpt_digests"), "complete"),
     )
 
     hll = (

@@ -27,8 +27,8 @@ from kafka_clickhouse_implementation_spark.operators.analytics_ext import (
     _ENTROPY_ORACLE,
 )
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
-    _drain,
     ordered_event_wire,
     wire_stream,
 )
@@ -52,7 +52,7 @@ def q_stream_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     name = "stream_entropy_counts"
-    _drain(spark, counts_stream, name, ckpt, mode="complete")
+    drain(spark, (counts_stream, name, ckpt, "complete"))
 
     # localCheckpoint: the totals join is a self-join of the memory
     # sink's view, whose MemoryPlan leaves can't be deduplicated by the
@@ -210,9 +210,9 @@ def q_stream_interval_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = "stream_ils_out"
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain as drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
-    drain(spark, folded, name, ckpt, mode="update")
+    drain(spark, (folded, name, ckpt, "update"))
     return (
         spark.table(name)
         .groupBy("user_id")
@@ -300,7 +300,7 @@ def q_stream_linreg(spark, sf_dir: str) -> DataFrame:
         F.sum(dec("x") * dec("y")).cast("decimal(38,0)").alias("sxy"),
     )
     name = "stream_linreg_stats"
-    _drain(spark, stats, name, ckpt, mode="complete")
+    drain(spark, (stats, name, ckpt, "complete"))
 
     s = spark.table(name).localCheckpoint()
     n_dec = F.col("n").cast("decimal(38,0)")

@@ -42,7 +42,7 @@ from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
     _DOC_WIRE_SCHEMA,
     document_wire,
 )
-from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 
 @query("q_stream_bloom", oracle=_BLOOM_ORACLE)
@@ -81,7 +81,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % 32 AS INT)))").alias("v")
     )
     name = "stream_bloom_words"
-    _drain(spark, words_stream, name, ckpt, mode="complete")
+    drain(spark, (words_stream, name, ckpt, "complete"))
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(F.explode(F.split("text", " ")).alias("tok"))

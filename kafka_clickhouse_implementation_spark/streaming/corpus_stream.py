@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.watermark import _stream_base
 
 _DOC_WIRE_SCHEMA = "doc_id long, text string"
@@ -134,7 +134,7 @@ def q_stream_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(passed, 1).otherwise(0)).alias("n_after_quality"),
     )
-    _drain(spark, counts, "stream_corpus_counts", raw_ckpt, mode="complete")
+    drain(spark, (counts, "stream_corpus_counts", raw_ckpt, "complete"))
 
     # drain 2: gated docs through fingerprint-keyed stateful dedup
     deduped = (
@@ -143,7 +143,7 @@ def q_stream_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.md5(F.col("text").cast("binary")).alias("fp"))
         .dropDuplicates(["fp"])
     )
-    _drain(spark, deduped, "stream_corpus_dedup", dedup_ckpt, mode="append")
+    drain(spark, (deduped, "stream_corpus_dedup", dedup_ckpt, "append"))
 
     n_exact = spark.table("stream_corpus_dedup").agg(
         F.count(F.lit(1)).alias("n_after_exact_dedup")
@@ -200,7 +200,7 @@ def q_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.struct("doc_id", "pos")).alias("f")
     )
     name = "stream_chunk_first"
-    _drain(spark, first, name, ckpt, mode="complete")
+    drain(spark, (first, name, ckpt, "complete"))
 
     winners = spark.table(name).select(
         "h", F.col("f.doc_id").alias("fd"), F.col("f.pos").alias("fp")

@@ -167,6 +167,7 @@ def streaming_funnel_levels_ttl(
 from kafka_clickhouse_implementation_spark.io import load  # noqa: E402
 from kafka_clickhouse_implementation_spark.operators.funnels import _FUNNEL_ORACLE  # noqa: E402
 from kafka_clickhouse_implementation_spark.registry import query  # noqa: E402
+from kafka_clickhouse_implementation_spark.streaming.drain import drain  # noqa: E402
 
 
 # The wire carries event time as epoch-MICROS in a long (`e_us`), not a
@@ -223,223 +224,6 @@ def wire_stream(
     )
 
 
-# Scale-adaptive stream partitioning (r15, guide §2). AQE is disabled
-# inside stateful streaming micro-batches, so the state/shuffle
-# partition count of a streaming query is pinned at stream start from
-# spark.sql.shuffle.partitions — a constant sized for BATCH plans. Each
-# HDFS-backed state partition then pays a per-micro-batch delta-file
-# commit (task + fsync) regardless of how little state it holds:
-# measured r15, an 8-file document-wire drain spent 2-4 s/batch in
-# addBatch at 32 state partitions vs ~0.5 s at an input-derived count,
-# with identical results. The fix the guide prescribes is deriving the
-# partition count from the INPUT VOLUME (bytes per partition), not from
-# a mode-tuned constant: a few-MB replay wire gets a few partitions, a
-# 100 TB wire gets thousands (up to the cap). The derived value only
-# ever LOWERS the session setting — on a real cluster the session
-# value is the operator's sizing ceiling, and the replay-wire volume
-# refines it downward when the source is small.
-# Target SOURCE bytes per state partition. The stateful stages process
-# an exploded multiple of the raw wire bytes (tokens/features per JSON
-# byte, ~8-16x), so 4 MiB of source is ~32-64 MiB of processed rows
-# per partition — the conservative end of the guide's partition-sizing
-# band. Measured r15 at sf0.1 (20 MB doc wire → 5 partitions): the
-# per-query sweep over {2,4,8,16,32} put every drain's optimum at 4-8,
-# with 32 costing 1.3-2.4 s extra per query in state-commit overhead.
-_STREAM_PARTITION_BYTES = 4 * 2**20
-_STREAM_PARTITION_CAP = 32768
-
-
-def _scaled_stream_partitions(out) -> int | None:
-    """Input-derived shuffle/state partition count for a streaming
-    frame backed by file source(s): ceil(total source bytes / 4 MiB)
-    clamped to [floor, cap], floor = a quarter of the cluster's
-    default parallelism (per-group fold compute — Python stateful
-    operators invoke one fold call per group — needs a minimum of
-    distributed parallelism even when the wire is tiny; a quarter of
-    the cores keeps that while shedding most of the per-partition
-    state-commit overhead, and the floor scales with however many
-    cores the session actually has rather than a local constant).
-    Returns None when no file source is found (unknown volume — leave
-    the session setting alone)."""
-    import math
-    import os
-    import re
-
-    try:
-        plan = out._jdf.queryExecution().logical().toString()
-    except Exception:
-        return None
-    paths = set(re.findall(r"FileSource\[([^\]]+)\]", plan))
-    if not paths:
-        return None
-    total = 0
-    for p in paths:
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                if f.startswith((".", "_")):
-                    continue
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    if total == 0:
-        # No measurable local bytes — a URI-scheme / remote path that
-        # os.walk can't traverse, or a genuinely empty wire. Unknown
-        # volume → leave the session setting alone (r15 advisory: the
-        # floor must not be pinned onto a source we couldn't size).
-        return None
-    try:
-        floor = max(2, out.sparkSession.sparkContext.defaultParallelism // 4)
-    except Exception:
-        floor = 2
-    return max(
-        floor,
-        min(_STREAM_PARTITION_CAP, math.ceil(total / _STREAM_PARTITION_BYTES)),
-    )
-
-
-class stream_partitions_conf:
-    """Context manager: lower spark.sql.shuffle.partitions to the
-    input-derived count for the duration of a drain, then restore.
-    The value is captured into the stream's checkpoint at start, so
-    restoring after termination never affects the running query.
-    Public shared helper (r15 advisory) — the index-upsert drains in
-    operators/retrieval.py wrap their stream starts in it too."""
-
-    _KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark, out):
-        self._spark = spark
-        self._out = out
-
-    def __enter__(self):
-        self._old = self._spark.conf.get(self._KEY)
-        n = _scaled_stream_partitions(self._out)
-        try:
-            cur = int(self._old)
-        except (TypeError, ValueError):
-            # a non-integer session value (vendor 'auto' settings) —
-            # skip the lowering rather than abort the drain
-            return self
-        if n is not None and cur > n:
-            self._spark.conf.set(self._KEY, str(n))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set(self._KEY, self._old)
-        return False
-
-
-def _drain(spark, out, name: str, ckpt: str, mode: str = "update"):
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    with stream_partitions_conf(spark, out):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"stream {name} did not drain in 600s — memory table would be partial")
-
-
-def _drain_files(spark, out, path: str, ckpt: str, mode: str = "update") -> str:
-    """Drain a stateful streaming frame to a PARQUET table instead of
-    the driver-held memory sink (r16, guide §5: the driver should do
-    almost no data work). For corpus-sized drained states (the dsir
-    feature table is 3.8M rows at sf1) the memory sink collects every
-    emitted row to the DRIVER, and downstream distributed use pays a
-    second driver→executor round-trip (the localCheckpoint pin).
-    foreachBatch appends each trigger's rows as parquet from the
-    executors; under the one-batch-per-key property (doc-scoped state
-    keys behind the stateful dedup) the union of update-mode emissions
-    equals the final complete-mode state row-for-row. The table and
-    checkpoint are deleted first — drains stay re-runnable and nothing
-    persists across invocations. Returns ``path``."""
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(path, ignore_errors=True)
-
-    def _append(bdf, _epoch_id):
-        bdf.write.mode("append").parquet(path)
-
-    with stream_partitions_conf(spark, out):
-        q = (
-            out.writeStream.foreachBatch(_append)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"file drain {path} did not finish in 600s — table would be partial"
-            )
-    return path
-
-
-def _drain_many(spark, specs):
-    """Drain several INDEPENDENT streaming queries concurrently —
-    ``specs`` is an iterable of (out, name, ckpt, mode). Spark runs
-    concurrent streaming queries happily (guide §2.6: actions are only
-    sequential because driver code awaits them sequentially); for a
-    query whose operator maintains several states over one replay wire
-    this turns N full micro-batch lifecycles of wall time into ~1.
-    Each query keeps its own checkpoint/state exactly as _drain gives
-    it, so per-query semantics (batching, state, output mode) are
-    unchanged."""
-    import shutil
-
-    specs = list(specs)
-    key = stream_partitions_conf._KEY
-    old = spark.conf.get(key)
-    try:
-        cur = int(old)
-    except (TypeError, ValueError):
-        cur = None  # non-integer session value — never lower it
-    try:
-        started = []
-        for out, name, ckpt, mode in specs:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            # per-spec input-derived count, set immediately before THIS
-            # start (r15 advisory: each stream captures
-            # spark.sql.shuffle.partitions at .start(), so a group-wide
-            # minimum under-partitioned a large wire mixed with a tiny
-            # one)
-            n = _scaled_stream_partitions(out)
-            if cur is not None:
-                spark.conf.set(
-                    key, str(n) if n is not None and n < cur else old
-                )
-            started.append(
-                (
-                    name,
-                    out.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode(mode)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start(),
-                )
-            )
-        for name, q in started:
-            if not q.awaitTermination(600):
-                for _n, other in started:
-                    other.stop()
-                raise TimeoutError(
-                    f"stream {name} did not drain in 600s — memory table would be partial"
-                )
-    finally:
-        spark.conf.set(key, old)
-
-
 @query(
     "q_stream_funnel",
     # The stateful replay's final levels equal the batch operator by
@@ -459,7 +243,7 @@ def q_stream_funnel(spark, sf_dir: str):
     stream = wire_stream(spark, wire_dir)
     out = streaming_funnel_levels(stream)
     name = "stream_funnel_out"
-    _drain(spark, out, name, ckpt)
+    drain(spark, (out, name, ckpt, "update"))
     final = spark.sql(
         f"SELECT user_id, max(funnel_level) AS funnel_level FROM {name} GROUP BY user_id"
     )

@@ -219,8 +219,8 @@ def q_stream_dict_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing 'error' key, then per-score counts accumulate in the
     streaming-aggregation state store across batches (complete-mode
     drain over the shared multi-file wire)."""
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
     from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        _drain,
         ordered_event_wire,
         wire_stream,
     )
@@ -237,5 +237,5 @@ def q_stream_dict_get(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("score", F.lit(-1)).alias("score")
     ).agg(F.count(F.lit(1)).alias("n"))
     name = "stream_dictget_out"
-    _drain(spark, counts, name, ckpt, mode="complete")
+    drain(spark, (counts, name, ckpt, "complete"))
     return spark.table(name)

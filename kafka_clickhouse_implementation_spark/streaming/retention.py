@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
-    _drain,
     ordered_event_wire,
     wire_stream,
 )
@@ -95,7 +95,7 @@ def q_stream_retention(spark, sf_dir: str):
     ckpt = os.path.join(base, "ckpt_retention")
     stream = wire_stream(spark, wire_dir)
     name = "stream_retention_out"
-    _drain(spark, streaming_retention(stream), name, ckpt)
+    drain(spark, (streaming_retention(stream), name, ckpt, "update"))
     final = spark.sql(
         f"SELECT user_id, max(r1) AS r1, max(r7) AS r7 FROM {name} GROUP BY user_id"
     )

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
-    _drain,
     ordered_event_wire,
     wire_stream,
 )
@@ -82,7 +82,7 @@ def q_stream_sum_map(spark, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"), F.col("event_type")
     ).agg(F.count("*").alias("cnt"))
     name = "stream_summap_out"
-    _drain(spark, counts, name, ckpt, mode="complete")
+    drain(spark, (counts, name, ckpt, "complete"))
     assembled = (
         spark.table(name)
         .groupBy("day")
@@ -168,7 +168,7 @@ def q_stream_dedup(spark, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     name = "stream_dedup_out"
-    _drain(spark, deduped, name, ckpt, mode="append")
+    drain(spark, (deduped, name, ckpt, "append"))
     return spark.sql(
         f"SELECT event_type, count(*) AS n FROM {name} GROUP BY event_type"
     )
@@ -217,7 +217,7 @@ def q_stream_join(spark, sf_dir: str) -> DataFrame:
         ),
     )
     name = "stream_join_out"
-    _drain(spark, joined, name, ckpt, mode="append")
+    drain(spark, (joined, name, ckpt, "append"))
     return spark.sql(
         f"SELECT v_user AS user_id, count(*) AS n_pairs FROM {name} GROUP BY v_user"
     )
@@ -253,7 +253,7 @@ def q_stream_sessions(spark, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt_sessions")
     stream = wire_stream(spark, wire_dir)
     name = "stream_sessions_out"
-    _drain(spark, streaming_sessions(stream), name, ckpt, mode="complete")
+    drain(spark, (streaming_sessions(stream), name, ckpt, "complete"))
     return spark.sql(
         f"""
         SELECT user_id,

@@ -57,7 +57,7 @@ from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
     _DOC_WIRE_SCHEMA,
     document_wire,
 )
-from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 
 def _doc_stream(spark: SparkSession, wire: str, files_per_trigger: int) -> DataFrame:
@@ -142,7 +142,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_kmv_out"
-    _drain(spark, sketched, name, ckpt, mode="update")
+    drain(spark, (sketched, name, ckpt, "update"))
     final = (
         spark.table(name)
         .groupBy("bucket")
@@ -250,7 +250,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("cell.j", "cell.b")
     counters = cells.groupBy("j", "b").agg(F.count(F.lit(1)).alias("cnt"))
     name = "stream_cms_out"
-    _drain(spark, counters, name, ckpt, mode="complete")
+    drain(spark, (counters, name, ckpt, "complete"))
 
     docs = load(spark, sf_dir, "documents")
     probes = (
@@ -387,7 +387,7 @@ def q_stream_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = "stream_ema_out"
-    _drain(spark, folded, name, ckpt, mode="update")
+    drain(spark, (folded, name, ckpt, "update"))
     return (
         spark.table(name)
         .groupBy("user_id")

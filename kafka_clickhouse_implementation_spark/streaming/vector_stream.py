@@ -39,7 +39,7 @@ from kafka_clickhouse_implementation_spark.operators.clustering import (
     _QUANT,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 _IVF_INGEST_ORACLE = f"""
 WITH {_lloyd_ctes()},
@@ -131,7 +131,7 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("vec_id").alias("min_vec_id"),
     )
     name = "stream_ivf_lists"
-    _drain(spark, lists, name, ckpt, mode="complete")
+    drain(spark, (lists, name, ckpt, "complete"))
     return spark.table(name).select(
         "list_id", "n_vecs", "sum_vec_ids", F.col("min_vec_id").cast("long").alias("min_vec_id")
     )
@@ -299,7 +299,7 @@ def _stream_coded_members(
         F.count(F.lit(1)).cast("long").alias("n_arrivals")
     )
     name = f"stream_semdedup_members{suffix}"
-    _drain(spark, members, name, ckpt, mode="complete")
+    drain(spark, (members, name, ckpt, "complete"))
     return spark.table(name)
 
 
@@ -565,17 +565,11 @@ def stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]
             bdf.withColumn("version", F.lit(epoch_id).cast("long")), path
         )
 
-    q = (
-        _coded_index_rows(deduped, coarse_carr, pq_book)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark,
+        (_coded_index_rows(deduped, coarse_carr, pq_book), upsert_batch, ckpt, "update"),
+        resume=True,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("ann index upsert stream did not drain in 600s")
     # Preserve the marker's mtime on a no-op incremental drain: the
     # mtime is the epoch-1 table's BUILD identity, folded into the
     # recode marker's identity below (r15 advisory) — rewriting it
@@ -984,17 +978,14 @@ def stream_ann_sq8_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             bdf.withColumn("version", F.lit(epoch_id).cast("long")), path
         )
 
-    q = (
-        _sq8_code_array_rows(deduped, coarse_carr, stats_rows)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark,
+        (
+            _sq8_code_array_rows(deduped, coarse_carr, stats_rows), upsert_batch,
+            ckpt, "update",
+        ),
+        resume=True,
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("ann sq8 upsert stream did not drain in 600s")
     if not _marker_current():
         with open(marker, "w") as f:
             f.write(books_identity + "\n")

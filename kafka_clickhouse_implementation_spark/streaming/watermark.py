@@ -58,8 +58,8 @@ from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
-    _drain,
     streaming_funnel_levels_ttl,
 )
 
@@ -197,7 +197,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("total"))
     )
     name = "stream_late_drop_out"
-    _drain(spark, agg, name, ckpt, mode="append")
+    drain(spark, (agg, name, ckpt, "append"))
     return (
         spark.table(name)
         .filter(F.col("event_type") != "__flush")
@@ -309,7 +309,7 @@ def q_stream_funnel_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = streaming_funnel_levels_ttl(stream, ttl_us=TTL_US)
     name = "stream_funnel_ttl_out"
-    _drain(spark, out, name, ckpt, mode="update")
+    drain(spark, (out, name, ckpt, "update"))
     final = spark.table(name).groupBy("user_id").agg(
         F.max("funnel_level").alias("funnel_level"),
         F.max("expired").alias("expired"),

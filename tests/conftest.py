@@ -25,3 +25,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(build)``: the Spark jobs started while ``build()``
+    runs, counted from the status store under a job group of their own."""
+    import uuid
+
+    def count(build) -> int:
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -110,7 +110,7 @@ def test_streaming_states_cross_batch_boundaries(spark):
     from kafka_clickhouse_implementation_spark.streaming.agg_state_stream import (
         _value_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire_dir, base = _value_wire(spark, SF)
     # read the wire with forced multi-batch replay (the query itself
@@ -147,14 +147,11 @@ def test_streaming_states_cross_batch_boundaries(spark):
         F.min(F.expr(_VM)).alias("s_min"),
         F.max(F.expr(_VM)).alias("s_max"),
     )
-    _drain(spark, nums, "t_mb_nums", os.path.join(base, "ckpt_t_nums"),
-           mode="complete")
+    drain(spark, (nums, "t_mb_nums", os.path.join(base, "ckpt_t_nums"), "complete"))
     regs = ev.groupBy("day", "idx").agg(F.max("rho").alias("m"))
-    _drain(spark, regs, "t_mb_regs", os.path.join(base, "ckpt_t_regs"),
-           mode="complete")
+    drain(spark, (regs, "t_mb_regs", os.path.join(base, "ckpt_t_regs"), "complete"))
     dig = ev.groupBy("day", "uh").agg(F.count(F.lit(1)).alias("n"))
-    _drain(spark, dig, "t_mb_dig", os.path.join(base, "ckpt_t_dig"),
-           mode="complete")
+    drain(spark, (dig, "t_mb_dig", os.path.join(base, "ckpt_t_dig"), "complete"))
 
     hll = (
         spark.table("t_mb_regs")

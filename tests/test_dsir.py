@@ -136,7 +136,7 @@ def test_stream_dsir_state_matches_batch_and_needs_dedup(spark):
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_dsir(spark, SF_DIR)  # writes the dsir_dfc_table file drain
     _wire, _base = document_wire(spark, SF_DIR)
@@ -164,9 +164,12 @@ def test_stream_dsir_state_matches_batch_and_needs_dedup(spark):
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    _drain(
-        spark, nodedup, "stream_dsir_dfc_nodedup",
-        os.path.join(base, "ckpt_dsir_dfc_nodedup"), mode="complete",
+    drain(
+        spark,
+        (
+            nodedup, "stream_dsir_dfc_nodedup",
+            os.path.join(base, "ckpt_dsir_dfc_nodedup"), "complete",
+        ),
     )
     got2 = sorted(map(tuple, spark.table("stream_dsir_dfc_nodedup").collect()))
     assert got2 == sorted((d, b, 2 * n) for d, b, n in want)

@@ -322,22 +322,6 @@ def test_detach_attach_partition_roundtrip(spark, tmp_path):
 # ---------------------------------------------------------------- declared schemas
 
 
-def _jobs_launched(spark, build) -> int:
-    """Spark jobs started while ``build()`` runs, counted from the status
-    store under a job group of their own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"layout-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _inferred_rollup(spark, *paths):
     return (
         spark.read.option("recursiveFileLookup", "true")
@@ -357,16 +341,16 @@ def _day_level(spark, n=40):
     )
 
 
-def test_declared_reads_launch_no_job(spark, tmp_path):
+def test_declared_reads_launch_no_job(spark, tmp_path, jobs_launched):
     """Building a rollup or fact-table read plans from the declared
     schema: no footer-reading inference job, where an inferring read of
     the same dirs launches one."""
     fact, rollup = str(tmp_path / "fact"), str(tmp_path / "rollup")
     write_day_partitioned(_events(spark), fact)
     write_rollup_batch(_day_level(spark).drop("event_id"), rollup, 0)
-    assert _jobs_launched(spark, lambda: spark.read.parquet(fact)) >= 1
-    assert _jobs_launched(spark, lambda: read_rollup(spark, rollup)) == 0
-    assert _jobs_launched(spark, lambda: read_day_partitioned(spark, fact)) == 0
+    assert jobs_launched(lambda: spark.read.parquet(fact)) >= 1
+    assert jobs_launched(lambda: read_rollup(spark, rollup)) == 0
+    assert jobs_launched(lambda: read_day_partitioned(spark, fact)) == 0
 
     # past Spark's default parallel-listing threshold (32 sub-dirs) the
     # listing still runs on the driver: 40 day partitions, 40 batch dirs
@@ -380,8 +364,8 @@ def test_declared_reads_launch_no_job(spark, tmp_path):
     write_rollup_batch(_day_level(spark).drop("event_id"), wide_rollup, 0)
     for b in range(1, 40):
         shutil.copytree(f"{wide_rollup}/batch-{0:010d}", f"{wide_rollup}/batch-{b:010d}")
-    assert _jobs_launched(spark, lambda: read_day_partitioned(spark, wide_fact)) == 0
-    assert _jobs_launched(spark, lambda: read_rollup(spark, wide_rollup)) == 0
+    assert jobs_launched(lambda: read_day_partitioned(spark, wide_fact)) == 0
+    assert jobs_launched(lambda: read_rollup(spark, wide_rollup)) == 0
 
 
 def test_declared_rollup_reads_equal_inferred(spark, tmp_path):

@@ -158,7 +158,7 @@ def test_stream_bm25_state_matches_batch_and_needs_dedup(spark):
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_bm25(spark, SF_DIR)  # writes the bm25_tf_table file drain
     _wire, _base = document_wire(spark, SF_DIR)
@@ -193,9 +193,12 @@ def test_stream_bm25_state_matches_batch_and_needs_dedup(spark):
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    _drain(
-        spark, nodedup, "stream_bm25_tf_nodedup",
-        os.path.join(base, "ckpt_bm25_tf_nodedup"), mode="complete",
+    drain(
+        spark,
+        (
+            nodedup, "stream_bm25_tf_nodedup",
+            os.path.join(base, "ckpt_bm25_tf_nodedup"), "complete",
+        ),
     )
     got2 = sorted(map(tuple, spark.table("stream_bm25_tf_nodedup").collect()))
     assert got2 == sorted((d, t, 2 * n) for d, t, n in want)
@@ -593,7 +596,7 @@ def test_stream_proximity_state_matches_batch_and_needs_dedup(spark):
         _DOC_WIRE_SCHEMA,
         document_wire,
     )
-    from kafka_clickhouse_implementation_spark.streaming.funnel import _drain
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_proximity(spark, SF_DIR)  # writes the prox_postings_table drain
     _wire, _base = document_wire(spark, SF_DIR)
@@ -627,9 +630,12 @@ def test_stream_proximity_state_matches_batch_and_needs_dedup(spark):
         .groupBy("doc_id", "token", "pos")
         .agg(F.count(F.lit(1)).cast("long").alias("arr"))
     )
-    _drain(
-        spark, nodedup, "stream_prox_postings_nodedup",
-        os.path.join(base, "ckpt_prox_postings_nodedup"), mode="complete",
+    drain(
+        spark,
+        (
+            nodedup, "stream_prox_postings_nodedup",
+            os.path.join(base, "ckpt_prox_postings_nodedup"), "complete",
+        ),
     )
     got2 = sorted(
         map(

@@ -10,7 +10,8 @@ driver's CORRECTNESS_r{N}.json row format (rows_match / schema_match /
 hash_match / spark_rows / oracle_rows / err) so full-surface sweeps can
 be committed as auditable artifacts (docs/CORRECTNESS_full_*.json).
 Each row also records `listing_jobs`: the Spark jobs the query's Spark
-side launched to list files in parallel.
+side launched to list files in parallel, and `spark_s`: the wall seconds
+its Spark side took to build and collect the result.
 """
 
 from __future__ import annotations
@@ -168,7 +169,7 @@ def main() -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark error: {e}"[:500],
-                "listing_jobs": listed,
+                "listing_jobs": listed, "spark_s": round(time.time() - t0, 3),
             }
             n_fail += 1
             n_listed += listed
@@ -182,7 +183,7 @@ def main() -> int:
                 "rows_match": True, "schema_match": None,
                 "hash_match": None, "spark_rows": len(srows),
                 "oracle_rows": None, "err": None, "no_oracle": True,
-                "listing_jobs": listed,
+                "listing_jobs": listed, "spark_s": round(dt, 3),
             }
             n_rowsonly += 1
             continue
@@ -197,7 +198,7 @@ def main() -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(srows),
                 "oracle_rows": None, "err": f"duckdb error: {e}"[:500],
-                "listing_jobs": listed,
+                "listing_jobs": listed, "spark_s": round(dt, 3),
             }
             n_fail += 1
             continue
@@ -223,7 +224,7 @@ def main() -> int:
             "hash_match": hash_ok, "spark_rows": len(srows),
             "oracle_rows": len(drows),
             "err": "; ".join(problems) if problems else None,
-            "listing_jobs": listed,
+            "listing_jobs": listed, "spark_s": round(dt, 3),
         }
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems) + f" [{dt:.1f}s]")
