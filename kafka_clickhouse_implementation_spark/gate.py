@@ -11,6 +11,15 @@ loop replays the identical arithmetic in Python; above it, the
 unchanged distributed loop runs (the MMR greedy, which has none,
 raises), so no input can exhaust driver memory.
 
+The same gate decides where the fact table and rollup writers in
+``plans.layout`` run (``write_day_partitioned``, ``write_rollup_batch``,
+``append_rollup_partials``, ``compact_rollup``). A live micro-batch or a
+rollup's partials are a few thousand rows, so below the gate each writer
+pulls its input once as Arrow (``driver_arrow``), sorts or aggregates it
+in pyarrow and writes the parquet files itself: one Spark job per write
+instead of a shuffle job plus a write job. Above the gate the unchanged
+Spark writes run.
+
 ``DRIVER_MAX_ROWS`` is the single ceiling: 65536 rows, at most 32 MB of
 payload at the widest of these inputs (64 longs per vector), above
 every input the tested scale factors produce at the gated sites and far
@@ -21,7 +30,12 @@ distributed path.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, Row
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 DRIVER_MAX_ROWS = 65536
 
@@ -35,3 +49,13 @@ def driver_rows(df: DataFrame) -> list[Row] | None:
     n = DRIVER_MAX_ROWS
     rows = df.limit(n + 1).collect()
     return rows if len(rows) <= n else None
+
+
+def driver_arrow(df: DataFrame) -> pa.Table | None:
+    """``driver_rows`` for the Arrow consumers: all of ``df`` as one
+    ``pyarrow.Table`` when it has at most ``DRIVER_MAX_ROWS`` rows, else
+    ``None``. One ``limit(N + 1).toArrow()``, so one Spark job either
+    way; an empty frame returns a 0-row table with ``df``'s columns."""
+    n = DRIVER_MAX_ROWS
+    table = df.limit(n + 1).toArrow()
+    return table if table.num_rows <= n else None

@@ -569,8 +569,10 @@ def q_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse `ORDER BY ... WITH FILL` parity: a dense daily time
     axis generated with sequence() + explode, left-joined to the sparse
-    counts, gaps filled with 0. The axis side is tiny and broadcast —
-    gap filling never rescans the fact table."""
+    counts, gaps filled with 0. The axis is the preserved side of the
+    left join, so it cannot be a broadcast build side and carries no
+    hint; the counts side is at most one row per day. Gap filling never
+    rescans the fact table."""
     ev = load(spark, sf_dir, "events")
     counts = (
         ev.filter((F.col("event_type") == "purchase") & (F.col("user_id") < 5))
@@ -587,8 +589,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day")
     )
     return (
-        F.broadcast(days)
-        .join(counts, "day", "left")
+        days.join(counts, "day", "left")
         .select("day", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("n"))
     )
 

@@ -40,21 +40,69 @@ a Spark job over parquet footers before the query even plans):
   or null a column. ``read_day_partitioned`` reads with the record; a
   table without one (written before records existed, or by a write that
   died between the data commit and the record) is read with inference.
+
+Where the writes run (``gate.DRIVER_MAX_ROWS``, the one driver-size
+gate). A live micro-batch is a few thousand rows and a rollup's partials
+are days × levels × batches, yet a Spark write of either costs a shuffle
+job plus a write job, each re-reading the input. Below the gate every
+writer here pulls its input once as Arrow (``gate.driver_arrow``, one
+job), sorts or counts it in pyarrow and writes the parquet files from
+the driver; above it the Spark writes run unchanged, and they are the
+reference the tests compare the driver writes with:
+
+- Part names: a fact append writes one
+  ``<partition_col>=<yyyyMMdd>/part-<uuid>.parquet`` per day, sorted by
+  the sort keys then the timestamp (Spark's ascending order, nulls
+  first), without the partition column; a null day lands in Spark's
+  ``__HIVE_DEFAULT_PARTITION__``. A rollup batch is
+  ``batch-<id>/part-00000.parquet``, an appended partial
+  ``part-<uuid>.parquet``, a compaction one ``part-00000.parquet``.
+  Timestamps are written the way the session's Spark writer would
+  (``spark.sql.parquet.outputTimestampType``), so both paths leave the
+  same physical types; a frame with a ``timestamp_ntz`` column, which
+  that setting does not cover, takes the Spark path.
+- Visibility: each file is written under a ``.``-prefixed temp name in
+  its target dir and renamed into place. Spark's file index skips
+  ``.``/``_`` names and DuckDB's ``*.parquet`` globs skip ``.tmp``, so a
+  concurrent dashboard read sees a whole file or none, and a writer
+  killed mid-file leaves only an ignored ``.…tmp``. A write that creates
+  or overwrites the fact table writes ``_SUCCESS`` after its last part
+  and then the schema record, as a Spark write's commit does.
+- Delivery: rollup batches are idempotent (``write_rollup_batch``). Fact
+  appends are at-least-once on either path: a retried append writes its
+  rows again under new part names.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.schemas import DAILY_SCHEMA
 
 # The fact table's recorded schema; Spark readers skip `_`-prefixed names.
 SCHEMA_FILE = "_schema.json"
+# Spark's directory value for a null partition column
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _write_parquet(table, dir_path: str, name: str, int96: bool = False) -> None:
+    """Write the Arrow ``table`` as the one parquet file
+    ``dir_path/name``: under a ``.``-prefixed temp name first, then
+    renamed into place, so no reader sees it half-written."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(dir_path, exist_ok=True)
+    tmp = os.path.join(dir_path, f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp, use_deprecated_int96_timestamps=int96)
+    os.replace(tmp, os.path.join(dir_path, name))
 
 
 def write_day_partitioned(
@@ -82,22 +130,48 @@ def write_day_partitioned(
                 f" the table's {recorded.simpleString()}"
             )
     new_table = mode == "overwrite" or not os.path.isdir(path) or not os.listdir(path)
-    # repartition on the partition column first so each day is written by
-    # few tasks (avoids the small-files explosion a 1000-executor write
-    # would otherwise produce), then sort within partitions for row-group
-    # stat locality on the sort keys.
-    out = (
-        out.repartition(partition_col)
-        .sortWithinPartitions(*sort_keys, ts_col)
-        .write.mode(mode)
-        .partitionBy(partition_col)
-    )
-    out.parquet(path)
+    table = None if "timestamp_ntz" in out.schema.simpleString() else gate.driver_arrow(out)
+    if table is not None:
+        if mode == "overwrite":
+            shutil.rmtree(path, ignore_errors=True)
+        int96 = df.sparkSession.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+        _write_days(table, path, partition_col, [*sort_keys, ts_col], int96)
+        if new_table:
+            with open(os.path.join(path, "_SUCCESS"), "w"):
+                pass
+    else:
+        # repartition on the partition column first so each day is written by
+        # few tasks (avoids the small-files explosion a 1000-executor write
+        # would otherwise produce), then sort within partitions for row-group
+        # stat locality on the sort keys.
+        out = (
+            out.repartition(partition_col)
+            .sortWithinPartitions(*sort_keys, ts_col)
+            .write.mode(mode)
+            .partitionBy(partition_col)
+        )
+        out.parquet(path)
     if new_table:
         tmp = os.path.join(path, SCHEMA_FILE + ".tmp")
         with open(tmp, "w") as f:
             f.write(schema.json())
         os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+
+
+def _write_days(table, path: str, partition_col: str, order: list[str], int96: bool) -> None:
+    """The driver write of one fact batch: a sorted part per day, without
+    the partition column. An empty batch writes no part."""
+    import pyarrow.compute as pc
+
+    os.makedirs(path, exist_ok=True)
+    days = table.column(partition_col)
+    for day in pc.unique(days).to_pylist():
+        rows = table.filter(pc.is_null(days) if day is None else pc.equal(days, day))
+        rows = rows.drop_columns([partition_col]).sort_by(
+            [(c, "ascending") for c in order], null_placement="at_start"
+        )
+        day_dir = os.path.join(path, f"{partition_col}={NULL_PARTITION if day is None else day}")
+        _write_parquet(rows, day_dir, f"part-{uuid.uuid4().hex}.parquet", int96)
 
 
 def _table_schema(out: DataFrame, partition_col: str) -> T.StructType:
@@ -143,13 +217,31 @@ def _partials(batch_df: DataFrame) -> DataFrame:
     return out
 
 
+def _driver_partials(batch_df: DataFrame):
+    """``_partials`` counted on the driver: the batch's (day, level)
+    columns pulled once as Arrow and counted in pyarrow, with no shuffle
+    job; ``None`` above the gate."""
+    import pyarrow as pa
+
+    keys = gate.driver_arrow(batch_df.select("day", "level"))
+    if keys is None:
+        return None
+    counts = keys.group_by(["day", "level"]).aggregate([([], "count_all")])
+    return pa.table({"day": counts["day"], "level": counts["level"], "total": counts["count_all"]})
+
+
 def append_rollup_partials(batch_df: DataFrame, path: str) -> None:
     """Append one insert-block's partial counts (the MV body,
     kafka+clickhouse.md:221-229): per-(day, level) count of the *batch*,
     not a global aggregate — exactly ClickHouse's per-insert-block MV
     trigger semantics. For the streaming foreachBatch sink use
     ``write_rollup_batch`` instead — blind appends are not retry-safe."""
-    _partials(batch_df).write.mode("append").parquet(path)
+    partials = _partials(batch_df)  # raises on a DDL mismatch, before either path writes
+    table = _driver_partials(batch_df)
+    if table is None:
+        partials.write.mode("append").parquet(path)
+    else:
+        _write_parquet(table, path, f"part-{uuid.uuid4().hex}.parquet")
 
 
 def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
@@ -159,25 +251,39 @@ def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
     after a crash between the write and the checkpoint commit REPLACES
     its previous (possibly partial) output instead of double-appending
     it. ``read_rollup`` picks the subdirectories up recursively."""
-    (
-        _partials(batch_df)
-        # partials are days x levels rows per batch regardless of input
-        # volume — one output file beats 32 near-empty ones (the small-
-        # files problem is the reader's bottleneck, not the writer's)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path.rstrip('/')}/batch-{batch_id:010d}")
-    )
+    out = f"{path.rstrip('/')}/batch-{batch_id:010d}"
+    partials = _partials(batch_df)  # raises on a DDL mismatch, before either path writes
+    table = _driver_partials(batch_df)
+    if table is None:
+        (
+            partials
+            # partials are days x levels rows per batch regardless of input
+            # volume — one output file beats 32 near-empty ones (the small-
+            # files problem is the reader's bottleneck, not the writer's)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+    else:
+        shutil.rmtree(out, ignore_errors=True)  # what overwrite mode does
+        _write_parquet(table, out, "part-00000.parquet")
 
 
-def _summed(spark: SparkSession, *paths: str) -> DataFrame:
-    """Every partial under ``paths``, read with the rollup's DDL and
-    summed per (day, level). recursiveFileLookup tolerates any mix of
-    flat partial files, per-batch subdirectories, and compacted output."""
+def _raw_partials(spark: SparkSession, *paths: str) -> DataFrame:
+    """Every partial under ``paths``, read with the rollup's DDL.
+    recursiveFileLookup tolerates any mix of flat partial files,
+    per-batch subdirectories, and compacted output."""
     return (
         spark.read.schema(DAILY_SCHEMA)
         .option("recursiveFileLookup", "true")
         .parquet(*paths)
+    )
+
+
+def _summed(spark: SparkSession, *paths: str) -> DataFrame:
+    """Every partial under ``paths`` summed per (day, level)."""
+    return (
+        _raw_partials(spark, *paths)
         .groupBy("day", "level")
         .agg(F.sum("total").alias("total"))
     )
@@ -220,8 +326,6 @@ def _recover_swap(path: str) -> None:
     old dir and of every parked dir on disk. Marker-absent means every
     committed row is still reachable at `path`/`old`/parked, and `tmp`
     (possibly half-written) is discardable."""
-    import shutil
-
     old, tmp, marker = _swap_names(path)
     if os.path.exists(marker):
         # Every parked dir on disk predates the tmp write (parking
@@ -270,8 +374,6 @@ def _swap_in(path: str, tmp: str, folded: list[str]) -> None:
     `tmp` after. A concurrent reader can still observe the brief
     missing-path gap; single-writer semantics (see compact_rollup) are
     the contract."""
-    import shutil
-
     old, _tmp_name, marker = _swap_names(path)
     os.rename(path, old)
     with open(marker, "w"):
@@ -321,11 +423,18 @@ def compact_rollup(spark: SparkSession, path: str) -> None:
     ever double-counted (parked dirs and `path` are always disjoint row
     sets: a dir is parked precisely when its rows are NOT in the
     recreated `path`)."""
+    import pyarrow as pa
+
     _recover_swap(path)
     parked = _parked_dirs(path)
-    merged = _summed(spark, path, *parked)
     _, tmp, _ = _swap_names(path)
-    merged.write.mode("overwrite").parquet(tmp)
+    raw = gate.driver_arrow(_raw_partials(spark, path, *parked))
+    if raw is None:
+        _summed(spark, path, *parked).write.mode("overwrite").parquet(tmp)
+    else:
+        sums = raw.group_by(["day", "level"]).aggregate([("total", "sum")])
+        merged = pa.table({"day": sums["day"], "level": sums["level"], "total": sums["total_sum"]})
+        _write_parquet(merged, tmp, "part-00000.parquet")
     _swap_in(path, tmp, folded=parked)
 
 
@@ -340,8 +449,6 @@ def expire_partitions(path: str, keep_from, partition_col: str = "event_date") -
     no rewrite, no tombstone compaction. Returns the dropped partition
     values (for the audit log a production system would write).
     """
-    import shutil
-
     keep_from = str(keep_from)  # Spark reads yyyyMMdd partition values back as ints
     dropped = []
     prefix = partition_col + "="

@@ -10,9 +10,10 @@ even when the single writer appends NEW partials between the crash and
 the recovery (the fold case that round 3's ADVICE showed could lose
 data under the old protocol).
 
-The JVM-side parquet writes are not interceptable from here; their
-failure mode (a half-written __compact_tmp without the marker) is
-covered by test_layout.test_compact_rollup_discards_uncommitted_tmp.
+The parquet writes themselves (pyarrow below the driver gate, Spark's
+above it) are not intercepted here; their failure mode (a half-written
+__compact_tmp without the marker) is covered by
+test_layout.test_compact_rollup_discards_uncommitted_tmp.
 """
 
 from __future__ import annotations

@@ -289,3 +289,21 @@ def test_png_adam7_truncation_and_layout_guards():
         parse_png(rebuild(raw[:-1]))
     with pytest.raises(ValueError, match="longer than the Adam7"):
         parse_png(rebuild(raw + b"\x00"))
+
+
+def test_gap_fill_has_no_dropped_broadcast_hint(spark, sf_dir):
+    """q_gap_fill's dense day axis is the preserved side of its left
+    join, which Spark cannot broadcast: a hint there is dropped with a
+    HintErrorLogger warning. The plan carries none, and the result still
+    equals the DuckDB oracle."""
+    import duckdb
+
+    from kafka_clickhouse_implementation_spark.registry import all_oracles, all_queries
+
+    df = all_queries()["q_gap_fill"](spark, sf_dir)
+    assert "strategy=broadcast" not in df._jdf.queryExecution().optimizedPlan().toString()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')")
+    want = sorted(con.sql(all_oracles()["q_gap_fill"]).fetchall())
+    assert sorted(tuple(r) for r in df.collect()) == want
+    assert len(want) == 30
