@@ -13,7 +13,7 @@ raises), so no input can exhaust driver memory.
 
 The same gate decides where the fact table and rollup writers in
 ``plans.layout`` run (``write_day_partitioned``, ``write_rollup_batch``,
-``append_rollup_partials``, ``compact_rollup``). A live micro-batch or a
+``compact_rollup``). A live micro-batch or a
 rollup's partials are a few thousand rows, so below the gate each writer
 pulls its input once as Arrow (``driver_arrow``), sorts or aggregates it
 in pyarrow and writes the parquet files itself: one Spark job per write

@@ -1,10 +1,10 @@
 """Tier C — deduplication for large-scale training-data pipelines:
 exact, exact-by-fingerprint, token-set Jaccard, shingle (n-gram)
-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
+Jaccard, and embedding-cosine near-dup.
 
-Scale posture: the oracle-checked variants are brute-force pair joins,
-correct at test scale and quadratic by nature; the production paths at
-100 TB are the LSH ones (MinHash banding / random-hyperplane SimHash)
+Scale posture: the variants here are brute-force pair joins, correct
+at test scale and quadratic by nature; the production paths at 100 TB
+are the LSH ones (MinHash banding and SimHash in minhash_portable.py)
 whose candidate generation is a hash-bucket equi-join — linear shuffle,
 no O(n²) anywhere.
 """
@@ -161,69 +161,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("legacy_minhash_lsh")  # LEGACY rows-only: superseded by the oracle-checked portable twin q_minhash_portable (C24); kept as the Spark-ML reference path
-def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2 — MinHash+LSH near-dup candidates: shingle → binary feature
-    vector → minhash signatures → LSH band-bucket join
-    (pyspark.ml.feature.MinHashLSH, seeded for determinism within
-    Spark). This is the linear-shuffle scale path that replaces the
-    O(n²) exact joins above: candidate pairs come from an equi-join on
-    (band, bucket), then only candidates get exact verification."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    # Shingle (3-gram), not unigram: the minhash of a unigram set over a
-    # small vocabulary collides constantly, ballooning every LSH bucket
-    # toward all-pairs; shingles keep buckets selective.
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(
-            "transform(sequence(0, greatest(size(split(text, ' ')) - 3, 0)),"
-            " i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
-        ).alias("tokens"),
-    )
-    tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
-    feats = tf.transform(docs)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, threshold=0.6, distCol="jaccard_dist")
-    cand = pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-    return cand.agg(F.count(F.lit(1)).alias("n_candidate_pairs"))
-
-
-@query("legacy_simhash")  # LEGACY rows-only: superseded by the oracle-checked portable twin q_simhash_portable (C32)
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup fingerprints — 64-bit signature whose Hamming
-    distance tracks token-multiset similarity. Deterministic (md5-based
-    token hashes), computed entirely JVM-side: per-token 64-bit hash via
-    xxhash64, bitwise vote via explode + groupBy over bit positions.
-    Output: signature per doc for the first 20 docs."""
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    # per-token 64-bit hash, then the 64 bitwise votes are folded with
-    # higher-order array functions over the per-doc hash list — one row
-    # per doc instead of the 64×-row explode-over-bits shape (the vote
-    # is multiset-weighted: collect_list keeps repeated tokens).
-    hashed = toks.select("doc_id", F.xxhash64("tok").alias("h"))
-    sig = (
-        hashed.groupBy("doc_id")
-        .agg(F.collect_list("h").alias("hs"))
-        .select(
-            "doc_id",
-            F.expr(
-                """
-                aggregate(
-                  transform(sequence(0, 63), bit ->
-                    IF(aggregate(hs, 0,
-                                 (acc, h) -> acc + IF((shiftright(h, bit) & 1) = 1, 1, -1)) > 0,
-                       shiftleft(CAST(1 AS BIGINT), bit), CAST(0 AS BIGINT))),
-                  CAST(0 AS BIGINT), (acc, x) -> acc + x)
-                """
-            ).alias("simhash"),
-        )
-    )
-    return sig.orderBy("doc_id")
-
-
 @query(
     "q_embedding_near_dup",
     oracle="""
@@ -251,9 +188,10 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory is two blocks of n/B×64 floats — B is the knob that trades
     replication for task memory at scale. The O(n²) *compute* is
     inherent to the exact all-pairs contract; the linear-shuffle
-    approximate paths (MinHash LSH above, sign-LSH/IVF in
-    similarity.py) are the 100-TB candidate generators, with this as
-    their correctness baseline at verification scale."""
+    approximate paths (MinHash LSH in minhash_portable.py, sign-LSH in
+    similarity.py, IVF in clustering.py) are the 100-TB candidate
+    generators, with this as their correctness baseline at
+    verification scale."""
     import numpy as np
     import pandas as pd
 

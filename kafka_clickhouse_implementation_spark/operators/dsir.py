@@ -108,79 +108,6 @@ FEATS_CTE_BODY = f"""toks AS (
   FROM feats GROUP BY doc_id, b
 )"""
 
-# Trigram-augmented variant (round 13, r12 verdict item 7): the NB
-# gate's feature-richness experiment. Adds per-word character
-# trigrams ('ct:'-prefixed to decorrelate from word buckets) to the
-# unigram+bigram space. FLAG-SCOPED TO THE NB CONSUMERS ONLY
-# (nb_quality.NB_TRIGRAMS) — the DSIR rungs stay on the certified
-# space above; docs/NB_TRIGRAM_J.json records the measured Youden-J
-# comparison that decides the default.
-FEATS_CTE_BODY_TRI = f"""toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), uni AS (
-  SELECT doc_id, t[CAST(u.i + 1 AS INTEGER)] AS w
-  FROM toks, unnest(range(len(t))) AS u(i)
-), big AS (
-  SELECT doc_id, t[CAST(u.i + 1 AS INTEGER)] AS wa,
-         t[CAST(u.i + 2 AS INTEGER)] AS wb
-  FROM toks, unnest(range(len(t) - 1)) AS u(i)
-), ctri AS (
-  SELECT doc_id, substr(w, CAST(u.i + 1 AS INTEGER), 3) AS g3
-  FROM (SELECT doc_id, w FROM uni WHERE len(w) >= 3) uw,
-       unnest(range(len(w) - 2)) AS u(i)
-), feats AS (
-  SELECT doc_id, {_bucket('w')} AS b FROM uni WHERE w <> ''
-  UNION ALL
-  SELECT doc_id, {_bucket("wa || '_' || wb")} AS b
-  FROM big WHERE wa <> '' AND wb <> ''
-  UNION ALL
-  SELECT doc_id, {_bucket("'ct:' || g3")} AS b FROM ctri
-), dfc AS (
-  SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt
-  FROM feats GROUP BY doc_id, b
-)"""
-
-# 8192-bucket variant (round 14, r13 verdict item 8): the SAME
-# unigram+bigram features in a doubled hash space — tests whether
-# bucket COLLISIONS (not feature poverty — trigrams already measured
-# negative, docs/NB_TRIGRAM_J.json) limit the NB gate's J.
-# FLAG-SCOPED TO THE NB CONSUMERS (nb_quality.NB_BUCKETS); the DSIR
-# rungs stay on the certified 4096 space. Bucket id in [0, 8192) from
-# 3.5 md5 nibbles — multiply/add/CASE only, engine-portable like
-# _BUCKET_SQL (no integer-division operator to disagree on).
-_BUCKET_SQL_8K = (
-    "((instr('{hex}', substr(md5({x}), 1, 1)) - 1) * 512"
-    " + (instr('{hex}', substr(md5({x}), 2, 1)) - 1) * 32"
-    " + (instr('{hex}', substr(md5({x}), 3, 1)) - 1) * 2"
-    " + (CASE WHEN instr('{hex}', substr(md5({x}), 4, 1)) - 1 >= 8"
-    " THEN 1 ELSE 0 END))"
-)
-
-
-def _bucket8k(x: str) -> str:
-    return _BUCKET_SQL_8K.format(hex=_HEX, x=x)
-
-
-FEATS_CTE_BODY_8K = f"""toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), uni AS (
-  SELECT doc_id, t[CAST(u.i + 1 AS INTEGER)] AS w
-  FROM toks, unnest(range(len(t))) AS u(i)
-), big AS (
-  SELECT doc_id, t[CAST(u.i + 1 AS INTEGER)] AS wa,
-         t[CAST(u.i + 2 AS INTEGER)] AS wb
-  FROM toks, unnest(range(len(t) - 1)) AS u(i)
-), feats AS (
-  SELECT doc_id, {_bucket8k('w')} AS b FROM uni WHERE w <> ''
-  UNION ALL
-  SELECT doc_id, {_bucket8k("wa || '_' || wb")} AS b
-  FROM big WHERE wa <> '' AND wb <> ''
-), dfc AS (
-  SELECT doc_id, b, CAST(count(*) AS BIGINT) AS cnt
-  FROM feats GROUP BY doc_id, b
-)"""
-
-
 # The DSIR CTE chain through per-doc scores — shared VERBATIM by the
 # selection oracle (q_dsir_weights / q_stream_dsir) and the C163
 # stratification oracle, so the tiers can never drift from the
@@ -258,45 +185,6 @@ def doc_features(docs: DataFrame) -> DataFrame:
     return (
         docs.select("doc_id", F.split("text", " ").alias("t"))
         .select("doc_id", F.explode(F.expr(_FEATS_EXPR)).alias("feat"))
-        .selectExpr("doc_id", f"{_bucket('feat')} AS b")
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-def doc_features_8k(docs: DataFrame) -> DataFrame:
-    """doc_features in the 8192-bucket space — the NB bucket flag's
-    Spark side; identical feature expression, wider hash."""
-    return (
-        docs.select("doc_id", F.split("text", " ").alias("t"))
-        .select("doc_id", F.explode(F.expr(_FEATS_EXPR)).alias("feat"))
-        .selectExpr("doc_id", f"{_bucket8k('feat')} AS b")
-        .groupBy("doc_id", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-# Spark twin of FEATS_CTE_BODY_TRI's extra leg: per-word char
-# trigrams, CASE-guarded against sequence()'s descending-range trap on
-# short words (sequence(1, 0) yields [1, 0], not empty).
-_FEATS_EXPR_TRI = (
-    "concat("
-    + _FEATS_EXPR
-    + ","
-    "  flatten(transform(filter(t, w -> w <> ''),"
-    "    w -> CASE WHEN length(w) >= 3 THEN"
-    "      transform(sequence(1, length(w) - 2),"
-    "                i -> concat('ct:', substring(w, i, 3)))"
-    "    ELSE slice(array(w), 1, 0) END)))"
-)
-
-
-def doc_features_tri(docs: DataFrame) -> DataFrame:
-    """doc_features over the trigram-augmented space — the NB flag's
-    Spark side; still ONE explode + one aggregation."""
-    return (
-        docs.select("doc_id", F.split("text", " ").alias("t"))
-        .select("doc_id", F.explode(F.expr(_FEATS_EXPR_TRI)).alias("feat"))
         .selectExpr("doc_id", f"{_bucket('feat')} AS b")
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))

@@ -245,7 +245,7 @@ def q_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Portable SimHash: like the MinHash above, built only from primitives
 # (md5, substr, instr, integer div/mod) that behave identically in
 # Spark SQL and DuckDB, so the fingerprint VALUES are oracle-checked —
-# unlike dedup.q_simhash (xxhash64-based, engine-private, rows-only).
+# unlike an xxhash64-based SimHash (engine-private, rows-only).
 # 16-bit fingerprint from the first 4 md5 nibbles of each distinct
 # token: bit j = sign of sum over tokens of (2*bit_j(md5(token)) - 1).
 
@@ -288,8 +288,8 @@ def q_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked against DuckDB. Pure integer arithmetic over md5
     nibbles — one explode x16 (the per-bit contribution), two hash
     aggregations, zero floats except the exact pow(2,j) small ints.
-    At scale the explode folds into a higher-order aggregate exactly
-    like dedup.q_simhash; kept explicit so the oracle mirrors it."""
+    At scale the explode folds into a higher-order aggregate over a
+    per-doc hash list; kept explicit so the oracle mirrors it."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")

@@ -34,7 +34,9 @@ Protocol (all corpus-derived, no literal labels):
 - FEATURES: the C155 hashed unigram+bigram bucket space VERBATIM
   (dsir.doc_features / FEATS_CTE_BODY — B = 4096 md5-nibble buckets),
   so the supervised and unsupervised domain rungs share one certified
-  feature extraction.
+  feature extraction. Char-trigram features and an 8192-bucket space
+  both measured no better for this gate (docs/NB_TRIGRAM_J.json,
+  docs/NB_BUCKETS_J.json).
 - MODEL: per-bucket add-1-smoothed class multinomials over the
   balanced train set + add-1-smoothed class priors; per-bucket
   log-odds
@@ -85,37 +87,10 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.operators.dsir import (
     FEATS_CTE_BODY,
-    FEATS_CTE_BODY_8K,
-    FEATS_CTE_BODY_TRI,
-    doc_features,
-    doc_features_8k,
-    doc_features_tri,
+    N_BUCKETS,
+    features_product,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-
-import os as _os
-
-# Round-13 feature experiment (r12 verdict item 7): char-trigram
-# features for the NB gate, flag-scoped to the THREE NB consumers
-# (C166/C169/C175) — DSIR keeps the certified unigram+bigram space.
-# The flag flips Spark features AND the oracle CTE together at import
-# time, so the two engines cannot disagree under either setting.
-# Default OFF: docs/NB_TRIGRAM_J.json records the measured Youden-J
-# comparison at the sf1-equivalent corpus that set this default.
-NB_TRIGRAMS = _os.environ.get("SPARK_GRAFT_NB_TRIGRAMS", "0") == "1"
-# Round-14 feature experiment (r13 verdict item 8): the same features
-# in a DOUBLED hash space (8192 buckets) — isolates bucket collisions
-# as the variable after trigrams measured negative. Same import-time
-# flag protocol; the smoothing constant B follows the bucket count on
-# both engines. Default 4096: docs/NB_BUCKETS_J.json records the
-# measured comparison at the sf1-equivalent corpus.
-NB_BUCKETS = int(_os.environ.get("SPARK_GRAFT_NB_BUCKETS", "4096"))
-if NB_BUCKETS == 8192:
-    _FEATS_BODY = FEATS_CTE_BODY_8K
-    _nb_features = doc_features_8k
-else:
-    _FEATS_BODY = FEATS_CTE_BODY_TRI if NB_TRIGRAMS else FEATS_CTE_BODY
-    _nb_features = doc_features_tri if NB_TRIGRAMS else doc_features
 
 _HEX = "0123456789abcdef"
 # train iff the first md5 nibble of the doc_id string is 0-7 — splits
@@ -133,8 +108,8 @@ _NEG256_SQL = (
 # per-bucket smoothed class probabilities over the balanced train set —
 # identical +1/+B smoothing (and the same pln → nano dag) as C155's
 # target/source models, over bound columns (cpos, cneg, tpos, tneg)
-_PPOS_SQL = f"CAST(cpos + 1 AS DOUBLE) / CAST(tpos + {NB_BUCKETS} AS DOUBLE)"
-_PNEG_SQL = f"CAST(cneg + 1 AS DOUBLE) / CAST(tneg + {NB_BUCKETS} AS DOUBLE)"
+_PPOS_SQL = f"CAST(cpos + 1 AS DOUBLE) / CAST(tpos + {N_BUCKETS} AS DOUBLE)"
+_PNEG_SQL = f"CAST(cneg + 1 AS DOUBLE) / CAST(tneg + {N_BUCKETS} AS DOUBLE)"
 # add-1-smoothed class priors over balanced train DOC counts
 _PRPOS_SQL = "CAST(npos + 1 AS DOUBLE) / CAST(ntr + 2 AS DOUBLE)"
 _PRNEG_SQL = "CAST(nneg + 1 AS DOUBLE) / CAST(ntr + 2 AS DOUBLE)"
@@ -230,7 +205,7 @@ def nb_scored_ctes(held_only: bool) -> str:
 
 
 _NB_ORACLE = f"""
-WITH {_FEATS_BODY}, {nb_scored_ctes(held_only=True)}
+WITH {FEATS_CTE_BODY}, {nb_scored_ctes(held_only=True)}
 SELECT l.source,
        CAST(max(l.is_target) AS BIGINT) AS is_target,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -286,69 +261,13 @@ def nb_label(docs: DataFrame) -> DataFrame:
     )
 
 
-# How nb_scores pins the shared feature frame — MEASURED per caller
-# at sf0.1 AND sf1-equivalent (docs/NB_CHECKPOINT.json, r12 verdict
-# item 3). "auto" (default) picks by caller: the full-corpus gate path
-# (held_only=False — q_corpus_clean_nb, the heaviest consumer) runs
-# fastest with NO pinning at both SFs (39.2/43.7 s vs 42.3/49.4 with
-# the r11 eager localCheckpoint: materializing the ~4M-row feature
-# frame costs more than the two pipelined evaluations it saves); the
-# held-out evaluation path (held_only=True — q_nb_quality /
-# q_nb_pr_curve) keeps the checkpoint, which wins where it matters
-# (sf1: 5.9 s vs 10.7 unpinned). Explicit values override for
-# tools/measure_nb_checkpoint.py.
-NB_PIN = _os.environ.get("SPARK_GRAFT_NB_PIN", "auto")
-
-
-def _pin_features(dfc: DataFrame, held_only: bool = True) -> DataFrame:
-    mode = NB_PIN
-    if mode == "auto":
-        mode = "checkpoint" if held_only else "none"
-    if mode == "checkpoint":
-        return dfc.localCheckpoint()
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        return dfc.persist(StorageLevel.MEMORY_AND_DISK)
-    return dfc
-
-
-def corpus_features(spark, sf_dir: str) -> DataFrame | None:
-    """The persisted full-corpus feature product — ONLY when the
-    default certified feature space is active; the flag-scoped
-    experiment variants (trigrams / 8192 buckets) derive inline so the
-    measurement tools keep working without variant products."""
-    if NB_BUCKETS == 4096 and not NB_TRIGRAMS:
-        from kafka_clickhouse_implementation_spark.operators.dsir import (
-            features_product,
-        )
-
-        return features_product(spark, sf_dir)
-    return None
-
-
-def nb_scores(
-    docs: DataFrame, held_only: bool = True, dfc: DataFrame | None = None
-) -> DataFrame:
+def nb_scores(docs: DataFrame, dfc: DataFrame, held_only: bool = True) -> DataFrame:
     """(doc_id, score_nano, n_feats) — exact-BIGINT NB log-odds under
     the balanced model trained on the md5-split train half, for every
     >=1-feature document of the held split (``held_only``, the C166
-    evaluation) or of the WHOLE corpus (the C169 gate). ``dfc``
-    supplies the persisted feature product (round 14); default derives
-    features from ``docs`` inline under the measured pinning policy."""
-    # pin the hashed-feature explode ONCE: it feeds both the training
-    # join (trn) and the scoring join (held). Strategy measured in
-    # round 13 (both arms, sf0.1 AND sf1 — docs/NB_CHECKPOINT.json):
-    # the auto policy picks localCheckpoint for the held-out arm
-    # (held_only=True wins with it, sf1 5.9 s vs 10.7 unpinned) and NO
-    # pinning for the whole-corpus gate (held_only=False: materializing
-    # the ~4M-row feature frame costs more than the two pipelined
-    # evaluations it saves, 43.7 s vs 49.4). persist lost at sf1
-    # (12.78 s vs 5.95 checkpoint) and is never auto-selected — it
-    # remains only as an explicit SPARK_GRAFT_NB_PIN override for
-    # tools/measure_nb_checkpoint.py.
-    if dfc is None:
-        dfc = _pin_features(_nb_features(docs), held_only)
+    evaluation) or of the WHOLE corpus (the C169 gate). ``dfc`` is the
+    (doc_id, b, cnt) feature table of ``docs`` — the persisted
+    dsir.features_product in every query."""
     lbl = nb_label(docs)
     posd = lbl.filter("is_train = 1 AND is_target = 1").select("doc_id")
     negall = lbl.filter("is_train = 1 AND is_target = 0").select(
@@ -375,12 +294,10 @@ def nb_scores(
     # join) 4-6x — measured 34.6 s vs 7.4 s pinned at sf0.1. Both
     # pins are bounded by the model, never the corpus: bal is the
     # balanced train-id set, cls is one row per feature bucket
-    # (NB_BUCKETS). The held-only evaluators (q_nb_quality /
+    # (N_BUCKETS). The held-only evaluators (q_nb_quality /
     # q_nb_pr_curve) evaluate the subtree ONCE, so for them the four
     # eager materializations are pure overhead (measured sf1:
-    # q_nb_pr_curve 2.8 → 5.1 s pinned) — the pin keys off the same
-    # caller split the NB_PIN policy above uses; that policy (the
-    # corpus-sized FEATURE frame) is unchanged.
+    # q_nb_pr_curve 2.8 → 5.1 s pinned).
     pin_model = not held_only
     def _pin(df):
         return df.localCheckpoint() if pin_model else df
@@ -484,7 +401,7 @@ NB_THRESH_NANOS = sorted(
 NB_GATE_NANO = -100_000_000
 
 _PR_ORACLE = f"""
-WITH {_FEATS_BODY}, {nb_scored_ctes(held_only=True)},
+WITH {FEATS_CTE_BODY}, {nb_scored_ctes(held_only=True)},
 thr(thr_nano) AS (
   VALUES {", ".join(f"(CAST({t} AS BIGINT))" for t in NB_THRESH_NANOS)}
 )
@@ -511,7 +428,7 @@ def q_nb_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 13-group conditional rollup; every count is an exact BIGINT."""
     docs = load(spark, sf_dir, "documents")
     lbl = nb_label(docs)
-    scored = nb_scores(docs, dfc=corpus_features(spark, sf_dir)).join(
+    scored = nb_scores(docs, dfc=features_product(spark, sf_dir)).join(
         lbl.select("doc_id", "is_target"), "doc_id"
     )
     thr = F.explode(
@@ -545,7 +462,7 @@ def q_nb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     lbl = nb_label(docs)
     return (
-        nb_scores(docs, dfc=corpus_features(spark, sf_dir))
+        nb_scores(docs, dfc=features_product(spark, sf_dir))
         .join(lbl, "doc_id")
         .groupBy("source")
         .agg(

@@ -5,16 +5,14 @@ cube, full-outer/cross joins, correlated EXISTS, scalar subqueries,
 union-by-name, as-of join, range join.
 
 The as-of join is the one genuinely custom operator: Spark has no
-built-in; it's implemented as a cogrouped applyInPandas merge
-(sort-merge within each key group) — the (b)-tier strategy from the
-build rules.
+built-in; it's implemented as a last_value over a key-partitioned,
+time-ordered window of the union of both sides.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -329,17 +327,17 @@ def q_collect_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASOF_ORACLE = """
+@query(
+    "q_asof_join",
+    oracle="""
     SELECT e.event_id, max(o.o_orderdate) AS asof_date
     FROM events e
     LEFT JOIN orders o
       ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
     WHERE e.user_id < 20
     GROUP BY e.event_id
-    """
-
-
-@query("q_asof_join", oracle=_ASOF_ORACLE)
+    """,
+)
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (custom operator — Spark has no built-in): for each
     event, the most recent order date at or before the event time for
@@ -351,8 +349,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     allow-exact-match convention), so every event row reads the most
     recent order at-or-before it. One shuffle on the key, whole-stage
     codegen end to end, no Python (plan-asserted in
-    tests/test_plans.py; the cogrouped merge_asof predecessor is kept
-    as legacy_asof_cogroup). The oracle is the equivalent (quadratic)
+    tests/test_plans.py). The oracle is the equivalent (quadratic)
     max-over-inequality-join."""
     from pyspark.sql import Window as W
 
@@ -389,40 +386,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("asof_date", F.last("odate", ignorenulls=True).over(w))
         .filter(F.col("side") == 1)
         .select("event_id", "asof_date")
-    )
-
-
-@query("legacy_asof_cogroup", oracle=_ASOF_ORACLE)
-def legacy_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r1-r10 ASOF form, kept beside its JVM-side upgrade (the
-    repo's legacy_* convention): a cogrouped applyInPandas sort-merge —
-    both sides shuffle once on the key, each key group merges sorted
-    via pandas merge_asof. Correct and still oracle-checked, but it
-    executes Python in the hot path, which is why q_asof_join replaced
-    it."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 20)
-        .select("event_id", "user_id", "ts")
-    )
-    od = load(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-
-    def asof(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.sort_values("ts")
-        left["ts"] = left["ts"].astype("datetime64[us]")
-        if len(right) == 0:
-            return pd.DataFrame({"event_id": left["event_id"], "asof_date": pd.NaT})
-        right = right.sort_values("o_orderdate")
-        right["o_orderdate"] = right["o_orderdate"].astype("datetime64[us]")
-        merged = pd.merge_asof(
-            left, right, left_on="ts", right_on="o_orderdate", allow_exact_matches=True
-        )
-        return pd.DataFrame({"event_id": merged["event_id"], "asof_date": merged["o_orderdate"]})
-
-    return (
-        ev.groupBy("user_id")
-        .cogroup(od.groupBy("o_custkey"))
-        .applyInPandas(asof, schema="event_id long, asof_date timestamp")
     )
 
 
@@ -705,28 +668,6 @@ def q_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("legacy_hll_sketch")  # LEGACY rows-only: DataSketches HLL — its
-# hash family is engine-private so no DuckDB twin exists; superseded by
-# the register-exact portable HLL below. Kept as the production-library
-# form; its error bound vs the exact count stays pytest-asserted.
-def legacy_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable distinct-count sketches (Spark 3.5+ DataSketches HLL):
-    one sketch per day, unioned at query time — the 100 TB pattern
-    where per-partition sketches are PERSISTED (a few KB each) and any
-    date-range distinct count is a sketch merge, never a re-scan.
-    Register-max union is order-insensitive, so the estimate is
-    deterministic for fixed input. Exact oracle-checked twin:
-    q_distinct_users."""
-    ev = load(spark, sf_dir, "events")
-    per_day = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.hll_sketch_agg("user_id").alias("sk")
-    )
-    return per_day.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("long").alias("est_users"),
-        F.count("*").alias("n_days"),
-    )
-
-
 # ---- portable HLL (register-exact, oracle-checked) -------------------
 #
 # Flajolet et al.'s HyperLogLog rebuilt from engine-portable primitives
@@ -812,8 +753,7 @@ def q_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count without re-scanning. The driver hash covers the
     register checksum (n_regs, reg_sum), the exact distinct count, and
     the milli-quantized estimate, so a single flipped register bit in
-    either engine fails the row. DataSketches production form retained
-    as legacy_hll_sketch; exact twin q_distinct_users."""
+    either engine fails the row. Exact twin q_distinct_users."""
     ev = load(spark, sf_dir, "events")
     slotted = ev.select(
         F.to_date("ts").alias("day"),

@@ -1,12 +1,13 @@
 """Tier C — similarity search over the ``embeddings`` table
 (vec_id, embedding array<float> dim-64, label).
 
-Three tiers, mirroring how ANN is actually deployed over huge corpora:
+Two of the three tiers ANN is deployed in over huge corpora:
 - brute-force top-k (oracle-checked ground truth; per-partition compute,
   TakeOrdered merge — no global sort, no collect of the corpus),
 - random-hyperplane LSH buckets (candidate generation = equi-join on
-  bucket id — linear shuffle),
-- IVF (k-means coarse quantizer; probe nearest cells only).
+  bucket id — linear shuffle).
+The third, IVF (k-means coarse quantizer; probe nearest cells only), is
+q_ann_ivf_exact in clustering.py.
 """
 
 from __future__ import annotations
@@ -86,19 +87,6 @@ def lsh_bucket_column(n_bits: int = 12, seed: int = 42) -> F.Column:
         )
         bucket = bucket + F.shiftleft(bit, i)
     return bucket
-
-
-@query("legacy_ann_lsh")  # LEGACY rows-only: superseded by the oracle-checked portable twin q_ann_portable (C60)
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via sign-LSH: bucket every vector (narrow map), keep only the
-    probe's bucket, brute-force within. Deterministic (fixed seed).
-    Returns the in-bucket top-10 for vec_id=0's bucket."""
-    emb = load(spark, sf_dir, "embeddings")
-    bucketed = emb.select("vec_id", "embedding", lsh_bucket_column(n_bits=8).alias("bucket"))
-    qvec = _query_vector(spark, sf_dir, 0)
-    q_bucket = bucketed.filter(F.col("vec_id") == 0).select("bucket")
-    cand = bucketed.join(F.broadcast(q_bucket), "bucket").filter(F.col("vec_id") != 0)
-    return brute_force_topk(cand, qvec, k=10, exclude_id=None)
 
 
 # ---------------------------------------------------------------------------
@@ -196,7 +184,7 @@ def q_ann_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked ANN: md5-sign-LSH bucketing (integer-exact in
     both engines), probe vec_id=0's bucket, cosine top-10 within. The
     candidate set AND the ranking are value-checked — the bucketer
-    itself is under differential test, unlike rows-only q_ann_lsh."""
+    itself is under differential test, not only the final distances."""
     emb = load(spark, sf_dir, "embeddings")
     bucketed = emb.select("vec_id", "embedding", ann_bucket_column().alias("bucket"))
     probe_bucket = bucketed.filter(F.col("vec_id") == 0).select("bucket")
@@ -417,30 +405,3 @@ def q_ann_recall_float(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("recall"), 4).alias("mean_recall_at_10"),
         F.round(F.min("recall"), 4).alias("min_recall_at_10"),
     )
-
-
-@query("legacy_ann_ivf")  # LEGACY rows-only: superseded by the oracle-checked exact-re-rank IVF q_ann_ivf_exact (C112)
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via IVF: k-means coarse quantizer (seeded), assign every
-    vector to its nearest centroid cell, probe only the cells nearest
-    the query (nprobe=2), brute-force within. The scale path: the
-    centroid table is tiny and broadcast; the corpus scan prunes to
-    nprobe/ncells of the data."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    emb = load(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", "embedding", array_to_vector("embedding").alias("fv"))
-    km = KMeans(k=16, seed=42, featuresCol="fv", predictionCol="cell")
-    model = km.fit(vecs)
-    assigned = model.transform(vecs).select("vec_id", "embedding", "cell")
-
-    import numpy as np
-
-    qvec = np.array(_query_vector(spark, sf_dir, 0))
-    centers = model.clusterCenters()
-    d = [float(np.linalg.norm(qvec - c)) for c in centers]
-    probe_cells = [int(i) for i in np.argsort(d)[:2]]
-
-    cand = assigned.filter(F.col("cell").isin(probe_cells)).filter(F.col("vec_id") != 0)
-    return brute_force_topk(cand.select("vec_id", "embedding"), qvec.tolist(), k=10, exclude_id=None)

@@ -261,52 +261,6 @@ def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mg_partial(max_counters: int):
-    """Per-partition Misra-Gries/space-saving summary over a `token`
-    column: add each Arrow batch's value_counts, then if over budget
-    subtract the (budget+1)-th largest count and drop non-positives.
-    Classic mergeable-summary guarantee: per-summary undercount is at
-    most (items seen)/(budget+1), and summaries merge by addition."""
-    import pandas as pd
-
-    def f(batches):
-        counters = pd.Series(dtype="int64")
-        for pdf in batches:
-            # vectorized: one aligned add per Arrow batch, no per-token
-            # Python loop (Series.add stays in numpy for the hot path)
-            counters = counters.add(pdf["token"].value_counts(), fill_value=0)
-            if len(counters) > max_counters:
-                sub = counters.nlargest(max_counters + 1).iloc[-1]
-                counters = counters[counters > sub] - sub
-        counters = counters.astype("int64")
-        yield pd.DataFrame({"token": counters.index, "est": counters.values})
-
-    return f
-
-
-@query("legacy_heavy_hitters")  # LEGACY rows-only: per-Spark-partition
-# incremental MG — estimates depend on physical batch order; superseded
-# by the deterministic bucketed one-shot MG below (same guarantee,
-# oracle-checked). Kept because it is the constant-memory streaming
-# form of the sketch; its lower-bound property stays pytest-asserted.
-def legacy_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``topK`` analogue: top-10 tokens by a mergeable
-    Misra-Gries sketch — per-partition summaries via mapInPandas
-    (narrow, Arrow-batched), merged by a tiny additive groupBy. The
-    shuffle carries O(partitions x counters) rows regardless of corpus
-    size — the fixed-memory path when exact counting's vocab-sized
-    shuffle is itself too big (e.g. unbounded n-gram keys at 100 TB)."""
-    docs = load(spark, sf_dir, "documents")
-    tokens = docs.select(F.explode(F.split("text", " ")).alias("token"))
-    sketch = tokens.mapInPandas(_mg_partial(64), "token string, est long")
-    return (
-        sketch.groupBy("token")
-        .agg(F.sum("est").alias("est"))
-        .orderBy(F.desc("est"), "token")
-        .limit(10)
-    )
-
-
 _MG_K = 64
 _MG_BUCKETS = 32
 
@@ -378,18 +332,15 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure function of the corpus, never of Spark's physical layout);
     each bucket builds a one-shot MG summary (see _mg_oneshot — exact
     histogram, single (k+1)-th-largest decrement, same undercount bound
-    as the streaming form); summaries merge by additive groupBy. The
+    as incremental MG); summaries merge by additive groupBy. The
     value at rank k+1 is a multiset order statistic, so tie order
     inside the window never changes the subtrahend — DuckDB's
     row_number over the same counts prunes identically.
 
     Scale: the shuffle carries O(buckets x k) summary rows, never the
     vocab; the per-bucket histogram inside mapInPandas is
-    vocab/buckets-sized. At extreme vocabularies (vocab/buckets no
-    longer executor-memory-sized — e.g. web-scale token vocab on few
-    buckets) prefer the constant-memory incremental form retained as
-    legacy_heavy_hitters / _mg_partial, which streams rows through a
-    fixed k-slot summary and never materializes a histogram."""
+    vocab/buckets-sized, so raise the bucket count when vocab/buckets
+    is no longer executor-memory-sized (e.g. web-scale token vocab)."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         (F.col("doc_id") % _MG_BUCKETS).alias("bucket"),

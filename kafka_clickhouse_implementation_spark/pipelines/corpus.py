@@ -13,6 +13,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
+from kafka_clickhouse_implementation_spark.operators.components import (
+    connected_components,
+)
+from kafka_clickhouse_implementation_spark.operators.minhash_portable import (
+    minhash_pairs_cte,
+    verified_pairs,
+)
 from kafka_clickhouse_implementation_spark.registry import query
 
 
@@ -30,65 +37,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     keyed = docs.withColumn("fp", F.md5(F.col("text").cast("binary")))
     keep = keyed.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     return docs.join(keep, "doc_id", "left_semi")
-
-
-def near_dedup(docs: DataFrame, threshold: float = 0.85, num_tables: int = 5) -> DataFrame:
-    """Near-duplicate removal: MinHash-LSH candidate pairs over 3-word
-    shingles → exact Jaccard verification on candidates only → drop the
-    higher doc_id of each verified pair."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = docs.select(
-        "doc_id",
-        F.expr(
-            "transform(sequence(0, greatest(size(split(text, ' ')) - 3, 0)),"
-            " i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
-        ).alias("tokens"),
-    )
-    tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=42)
-    model = lsh.fit(feats)
-    # candidate generation: LSH join at a loose distance bound...
-    cand = (
-        model.approxSimilarityJoin(feats, feats, threshold=1.0 - threshold + 0.15, distCol="d")
-        .filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            (1 - F.col("d")).alias("est_jaccard"),
-        )
-    )
-    # ...exact verification on candidates only
-    verified = cand.filter(F.col("est_jaccard") >= threshold)
-    losers = verified.select(F.col("doc_b").alias("doc_id")).distinct()
-    return docs.join(losers, "doc_id", "left_anti")
-
-
-def clean_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline; returns (cleaned_docs, stats_df).
-
-    Each intermediate stage is cached before any count so the funnel
-    costs one evaluation per stage, not four re-computations of the
-    whole prefix: materializing `cleaned` populates the `gated` and
-    `exact` caches as a side effect, and their counts then read the
-    cache. (The LSH fit inside near_dedup is itself an action over
-    `exact`, which is exactly why `exact` is cached.)"""
-    spark = docs.sparkSession
-    gated = quality_filter(docs).cache()
-    exact = exact_dedup(gated).cache()
-    cleaned = near_dedup(exact).cache()
-    n_clean = cleaned.count()
-    n_raw = docs.count()
-    n_gated = gated.count()
-    n_exact = exact.count()
-    gated.unpersist()
-    exact.unpersist()
-    stats = spark.createDataFrame(
-        [(n_raw, n_gated, n_exact, n_clean)],
-        "n_raw long, n_after_quality long, n_after_exact_dedup long, n_after_near_dedup long",
-    )
-    return cleaned, stats
 
 
 @query(
@@ -131,22 +79,6 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("passed"), F.md5(F.col("text").cast("binary")))
         ).alias("n_after_exact_dedup"),
     )
-
-
-# clean_corpus (the Spark-ML MinHashLSH variant) stays library surface
-# with its pytest (tests/test_corpus.py); its former rows-only registry
-# entry q_corpus_clean was folded into the hash-checked
-# q_corpus_clean_portable below (round-3 verdict item 8) — the registry
-# carries only the composition the driver can actually verify.
-
-
-from kafka_clickhouse_implementation_spark.operators.components import (  # noqa: E402
-    connected_components,
-)
-from kafka_clickhouse_implementation_spark.operators.minhash_portable import (  # noqa: E402
-    minhash_pairs_cte,
-    verified_pairs,
-)
 
 
 _CC_ROUNDS = 8  # min-label + pointer-shortcut rounds: diameter <= 2^8
@@ -294,8 +226,7 @@ def q_corpus_clean_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP pipeline, end-to-end HASH-CHECKED: quality gate →
     exact dedup → portable MinHash-LSH near-dup pairs (>= 0.8 verified
     Jaccard) → connected-components clustering → keep one doc per
-    cluster (the smallest id). Unlike the Spark-ML LSH clean_corpus
-    variant, every stage here is engine-portable, so the driver
+    cluster (the smallest id). Every stage is engine-portable, so the driver
     verifies the complete composition against a single DuckDB query —
     including the cluster-level keep-one rule that pairwise 'drop
     doc_b' gets wrong on similarity chains.
@@ -412,8 +343,7 @@ def _clean_counts(
     shingle/band/verify passes otherwise re-evaluate the gate (KN
     scoring in the scored variant) and the dedup semi-join once per
     consumer — up to 5 re-runs of the most expensive prefix. The pins
-    hold the gated corpus (bounded by the input), exactly what the
-    Spark-ML clean_corpus variant cached.
+    hold the gated corpus (bounded by the input).
 
     ``shared_pairs`` (round 15): the persisted neardup_pairs_product
     for this corpus flavor; when given, the per-gate LSH chain is
@@ -915,12 +845,12 @@ def _nb_ok() -> str:
     )"""
 
 
-def nb_quality_gate(docs: DataFrame, dfc: DataFrame | None = None) -> DataFrame:
+def nb_quality_gate(docs: DataFrame, dfc: DataFrame) -> DataFrame:
     """Supervised gate: keep docs the C166 NB model (trained on the
     md5-split half) scores above NB_GATE_NANO — the operating point
     calibrated by the C175 PR curve (q_nb_pr_curve), not a hard-coded
-    zero. Spark twin of _nb_ok(). ``dfc`` passes the persisted
-    feature product through to nb_scores (round 14)."""
+    zero. Spark twin of _nb_ok(). ``dfc`` is the feature table
+    nb_scores reads (the persisted dsir.features_product)."""
     from kafka_clickhouse_implementation_spark.operators.nb_quality import (
         NB_GATE_NANO,
         nb_scores,
@@ -950,11 +880,11 @@ def q_corpus_clean_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean template and the C166 model CTEs. The gate scores the
     persisted feature product (round 14) — the oracle still replays
     extraction from raw parquet."""
-    from kafka_clickhouse_implementation_spark.operators.nb_quality import (
-        corpus_features,
+    from kafka_clickhouse_implementation_spark.operators.dsir import (
+        features_product,
     )
 
-    dfc = corpus_features(spark, sf_dir)
+    dfc = features_product(spark, sf_dir)
     return _clean_counts(
         load(spark, sf_dir, "documents"),
         gate=lambda d: nb_quality_gate(d, dfc=dfc),

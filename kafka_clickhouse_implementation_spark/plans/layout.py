@@ -11,9 +11,11 @@ layout:
   granules for key-prefix predicates — the sparse-primary-index
   approximation from SURVEY §4.
 
-- ``append_rollup_partials`` / ``read_rollup``: the SummingMergeTree
-  contract (kafka+clickhouse.md:396-401). Partial per-batch counts are
-  *appended*; readers must re-aggregate (sum over equal (day, level)),
+- ``write_rollup_batch`` / ``read_rollup``: the SummingMergeTree
+  contract (kafka+clickhouse.md:396-401). Each insert block's partial
+  per-(day, level) counts are *appended* as one batch_id-keyed
+  directory (the MV body, kafka+clickhouse.md:221-229); readers must
+  re-aggregate (sum over equal (day, level)),
   exactly like reading an unmerged SummingMergeTree
   (kafka+clickhouse.md:240-243). ``compact_rollup`` plays the role of
   the background merge.
@@ -55,8 +57,8 @@ reference the tests compare the driver writes with:
   the sort keys then the timestamp (Spark's ascending order, nulls
   first), without the partition column; a null day lands in Spark's
   ``__HIVE_DEFAULT_PARTITION__``. A rollup batch is
-  ``batch-<id>/part-00000.parquet``, an appended partial
-  ``part-<uuid>.parquet``, a compaction one ``part-00000.parquet``.
+  ``batch-<id>/part-00000.parquet``, a compaction
+  ``part-00000.parquet``.
   Timestamps are written the way the session's Spark writer would
   (``spark.sql.parquet.outputTimestampType``), so both paths leave the
   same physical types; a frame with a ``timestamp_ntz`` column, which
@@ -228,20 +230,6 @@ def _driver_partials(batch_df: DataFrame):
         return None
     counts = keys.group_by(["day", "level"]).aggregate([([], "count_all")])
     return pa.table({"day": counts["day"], "level": counts["level"], "total": counts["count_all"]})
-
-
-def append_rollup_partials(batch_df: DataFrame, path: str) -> None:
-    """Append one insert-block's partial counts (the MV body,
-    kafka+clickhouse.md:221-229): per-(day, level) count of the *batch*,
-    not a global aggregate — exactly ClickHouse's per-insert-block MV
-    trigger semantics. For the streaming foreachBatch sink use
-    ``write_rollup_batch`` instead — blind appends are not retry-safe."""
-    partials = _partials(batch_df)  # raises on a DDL mismatch, before either path writes
-    table = _driver_partials(batch_df)
-    if table is None:
-        partials.write.mode("append").parquet(path)
-    else:
-        _write_parquet(table, path, f"part-{uuid.uuid4().hex}.parquet")
 
 
 def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:

@@ -24,70 +24,64 @@ _ORACLES: dict[str, str] = {}
 _ORIGIN: dict[str, tuple[str, int]] = {}  # name -> (defining module, registration seq)
 _SEQ = 0
 
-# Round-14 correctness window — DERIVED, not hand-curated: generated by
-#   python tools/make_window.py --changed <the round-14 changed list>
-# (see tests/test_registry_window.py for the verbatim invocation).
-# Composition (round 15): the 5 new/rebased components (unigram shard
-# pack, batched-trainer streaming BPE, unigram tokenizer export,
-# streaming curriculum pack, tuned IVF-PQ config), every pair-product
-# consumer (the six composed cleans + both exports now share the
-# persisted verified-pairs frame), the NB/DSIR rows whose scoring plan
-# gained the model-frame pins, the marker-identity-touched
-# maintained-index trio, legacy_asof_cogroup (oracle-backed, never
-# driver-windowed in 14 rounds — windows once, then falls out), then
-# the oracle-backed queries whose newest green row is oldest (r7/r8).
+# The driver's correctness window — DERIVED, not hand-curated:
+#   python tools/make_window.py --changed q_stream_mv_daily q_nb_quality \
+#       q_nb_pr_curve q_corpus_clean_nb q_asof_join q_stream_dict_get
+# (see tests/test_registry_window.py). The changed queries come first,
+# then the oracle-backed queries the driver has never hashed, then the
+# oracle-backed queries whose newest green row is oldest.
 # Queries not listed here sort after the window, by _MODULE_RANK.
 _WINDOW_50 = [
-    "q_token_shards_unigram",  # changed/new
-    "q_stream_bpe",  # changed/new
-    "q_unigram_tokenizer_export",  # changed/new
-    "q_stream_shards_curriculum",  # changed/new
-    "q_ann_ivfpq_tuned",  # changed/new
-    "q_corpus_clean_nb",  # changed/new
-    "q_corpus_clean_portable",  # changed/new
-    "q_corpus_clean_sampled",  # changed/new
-    "q_corpus_clean_scored",  # changed/new
-    "q_corpus_clean_clipped",  # changed/new
-    "q_corpus_clean_clipped_sampled",  # changed/new
-    "q_corpus_export",  # changed/new
-    "q_corpus_export_full",  # changed/new
-    "q_stream_shards_upsert",  # changed/new
-    "q_ann_index_upsert",  # changed/new
-    "q_ann_index_delete",  # changed/new
-    "q_ann_index_retrain",  # changed/new
-    "q_dsir_weights",  # changed/new
+    "q_stream_mv_daily",  # changed/new
     "q_nb_quality",  # changed/new
     "q_nb_pr_curve",  # changed/new
-    "q_stream_dsir",  # changed/new
-    "q_dsir_tiers",  # changed/new
-    "q_token_shards_curriculum",  # changed/new
-    "legacy_asof_cogroup",  # last green r-never-
-    "q_tpch_q13_shape",  # last green r7
-    "q_tpch_q14_shape",  # last green r7
-    "q_tpch_q15_shape",  # last green r7
-    "q_tpch_q16_shape",  # last green r7
-    "q_tpch_q17_shape",  # last green r7
-    "q_tpch_q18_shape",  # last green r7
-    "q_tpch_q19_shape",  # last green r7
-    "q_update_mutation",  # last green r7
-    "q_url_funcs",  # last green r7
-    "q_window_range_frame",  # last green r7
-    "q_agg_state_merge",  # last green r8
-    "q_bigram_counts",  # last green r8
-    "q_bit_aggs",  # last green r8
-    "q_cluster_prototypes",  # last green r8
-    "q_collect_tokens",  # last green r8
-    "q_collocations",  # last green r8
-    "q_corpus_funnel",  # last green r8
-    "q_delta_sum",  # last green r8
-    "q_doc_chunks",  # last green r8
-    "q_edit_distance",  # last green r8
-    "q_embedding_norms",  # last green r8
-    "q_embedding_quantize",  # last green r8
-    "q_event_paths",  # last green r8
-    "q_gap_fill",  # last green r8
-    "q_grouping_sets",  # last green r8
-    "q_heavy_hitters",  # last green r8
+    "q_corpus_clean_nb",  # changed/new
+    "q_asof_join",  # changed/new
+    "q_stream_dict_get",  # changed/new
+    "q_ann_ivfsq8",  # last green r-never-
+    "q_ann_sq8_delete",  # last green r-never-
+    "q_ann_sq8_index",  # last green r-never-
+    "q_stream_token_shards_unigram",  # last green r-never-
+    "q_histogram",  # last green r8
+    "q_hll_sketch_union",  # last green r8
+    "q_map_funcs",  # last green r8
+    "q_multimodal_flac",  # last green r8
+    "q_multimodal_flac_stereo",  # last green r8
+    "q_multimodal_gif89a",  # last green r8
+    "q_multimodal_png_adam7",  # last green r8
+    "q_pii_mask",  # last green r8
+    "q_range_join",  # last green r8
+    "q_salted_agg",  # last green r8
+    "q_scd2_join",  # last green r8
+    "q_semantic_clean",  # last green r8
+    "q_sequence_count",  # last green r8
+    "q_sequence_match",  # last green r8
+    "q_session_bounds",  # last green r8
+    "q_sliding_counts",  # last green r8
+    "q_sliding_window",  # last green r8
+    "q_stratified_sample",  # last green r8
+    "q_stream_agg_state",  # last green r8
+    "q_systematic_sample",  # last green r8
+    "q_tpch_q21_shape",  # last green r8
+    "q_tpch_q22_shape",  # last green r8
+    "q_tpch_q4_shape",  # last green r8
+    "q_tpch_q7_shape",  # last green r8
+    "q_tpch_q8_shape",  # last green r8
+    "q_twolevel_kmeans",  # last green r8
+    "q_weekly_rollup",  # last green r8
+    "q_zipf_rank",  # last green r8
+    "q_ann_portable",  # last green r9
+    "q_ann_recall",  # last green r9
+    "q_cosine_topk",  # last green r9
+    "q_csv_roundtrip",  # last green r9
+    "q_decontaminate",  # last green r9
+    "q_doc_signals",  # last green r9
+    "q_embedding_truncate",  # last green r9
+    "q_first_seen_cumulative",  # last green r9
+    "q_group_array",  # last green r9
+    "q_inverted_index",  # last green r9
+    "q_json_extract",  # last green r9
+    "q_kmv_setops",  # last green r9
 ]
 
 # Canonical module order for queries OUTSIDE the curated window above.

@@ -5,9 +5,8 @@ The reference consumes a queue one way. A Kafka-engine table feeds a
 materialized view, which runs to the end of the queue and lands its
 rows in a table (kafka+clickhouse.md:183-243). The Structured Streaming
 paper (SIGMOD 2018) states the same contract as a replayable source, a
-checkpoint and a sink. Every stream the package drains goes through
-``drain``; ``streaming/pipeline.run_mv_pipeline``, the long-running MV
-job, is the only other stream start.
+checkpoint and a sink. Every stream the package starts goes through
+``drain``, the MV job ``streaming/pipeline.run_mv_pipeline`` included.
 
 ``drain(spark, *specs, resume=False)``, each spec ``(out, sink, ckpt,
 mode)``:

@@ -36,6 +36,7 @@ from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.plans.layout import read_rollup, write_rollup_batch
 from kafka_clickhouse_implementation_spark.registry import query
 from kafka_clickhouse_implementation_spark.sources.streams import file_stream, write_wire_format
+from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 
 def decoded_events(stream: DataFrame) -> DataFrame:
@@ -49,17 +50,14 @@ def decoded_events(stream: DataFrame) -> DataFrame:
 
 
 def run_mv_pipeline(
-    spark: SparkSession,
-    wire_dir: str,
-    rollup_dir: str,
-    checkpoint_dir: str,
-    source_df: DataFrame | None = None,
+    spark: SparkSession, wire_dir: str, rollup_dir: str, checkpoint_dir: str
 ) -> None:
     """Run the MV to completion over currently-available data
     (Trigger.AvailableNow): every micro-batch appends its per-(day,
-    level) partial counts — the per-insert-block MV trigger."""
-    stream = source_df if source_df is not None else file_stream(spark, wire_dir)
-    events = decoded_events(stream)
+    level) partial counts — the per-insert-block MV trigger. The
+    checkpoint is kept (``resume=True``), so a second run picks up
+    only the wire files the first one has not committed."""
+    events = decoded_events(file_stream(spark, wire_dir))
 
     def mv_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -70,13 +68,7 @@ def run_mv_pipeline(
         # its partials — true exactly-once, not just clean-restart-once.
         write_rollup_batch(batch, rollup_dir, batch_id)
 
-    (
-        events.writeStream.foreachBatch(mv_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, (events, mv_batch, checkpoint_dir, "append"), resume=True)
 
 
 def windowed_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -219,7 +211,6 @@ def q_stream_dict_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing 'error' key, then per-score counts accumulate in the
     streaming-aggregation state store across batches (complete-mode
     drain over the shared multi-file wire)."""
-    from kafka_clickhouse_implementation_spark.streaming.drain import drain
     from kafka_clickhouse_implementation_spark.streaming.funnel import (
         ordered_event_wire,
         wire_stream,

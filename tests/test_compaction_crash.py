@@ -25,9 +25,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.plans.layout import (
-    append_rollup_partials,
     compact_rollup,
     read_rollup,
+    write_rollup_batch,
 )
 from kafka_clickhouse_implementation_spark.schemas import EVENTS_SCHEMA
 
@@ -100,8 +100,8 @@ def test_compaction_totals_survive_crash_at_every_fs_op(
     crash_at = 0
     while True:
         path = str(tmp_path / f"rollup_{writer_resumes}_{crash_at}")
-        append_rollup_partials(d, path)
-        append_rollup_partials(d, path)  # duplicate partials: merge is non-trivial
+        write_rollup_batch(d, path, 0)
+        write_rollup_batch(d, path, 1)  # duplicate partials: merge is non-trivial
         want = dict(base_want)
         with pytest.MonkeyPatch.context() as mp:
             crasher = _FsCrasher(mp, crash_at)
@@ -112,7 +112,7 @@ def test_compaction_totals_survive_crash_at_every_fs_op(
                 crashed = True
         if writer_resumes and crashed:
             # the single writer comes back first and appends NEW rows
-            append_rollup_partials(d, path)
+            write_rollup_batch(d, path, 2)
             want = {k: v + v // 2 for k, v in want.items()}
         # recovery: the next compaction must repair any crash state
         compact_rollup(spark, path)

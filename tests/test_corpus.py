@@ -4,9 +4,8 @@ known duplicates."""
 from __future__ import annotations
 
 from kafka_clickhouse_implementation_spark.pipelines.corpus import (
-    clean_corpus,
+    _clean_counts,
     exact_dedup,
-    near_dedup,
     quality_filter,
 )
 
@@ -37,21 +36,13 @@ def test_exact_dedup_keeps_lowest_id(spark):
     assert {2, 3, 4} <= kept
 
 
-def test_near_dedup_drops_near_duplicate(spark):
-    docs = exact_dedup(quality_filter(_docs(spark)))
-    kept = {r["doc_id"] for r in near_dedup(docs, threshold=0.6).collect()}
-    assert 0 in kept and 2 not in kept  # near-dup dropped, original kept
-    assert 3 in kept
-
-
 def test_clean_corpus_funnel(spark):
-    cleaned, stats = clean_corpus(_docs(spark))
-    s = stats.head()
+    s = _clean_counts(_docs(spark)).head()
     assert s["n_raw"] == 5
     assert s["n_after_quality"] == 4
     assert s["n_after_exact_dedup"] == 3
-    assert s["n_after_near_dedup"] <= 3
-    assert cleaned.count() == s["n_after_near_dedup"]
+    assert s["n_after_near_dedup"] == 3
+    assert s["n_unconverged"] == 0
 
 
 def test_kn_gate_matches_python_replay(spark, sf_dir):
@@ -120,8 +111,7 @@ def test_funnel_twin_matches_pipeline_counts(spark, tmp_path):
     from kafka_clickhouse_implementation_spark.registry import all_queries
 
     row = all_queries()["q_corpus_funnel"](spark, str(tmp_path)).head()
-    _, stats = clean_corpus(docs)
-    s = stats.head()
+    s = _clean_counts(docs).head()
     assert (row["n_raw"], row["n_after_quality"], row["n_after_exact_dedup"]) == (
         s["n_raw"],
         s["n_after_quality"],
@@ -187,8 +177,8 @@ def test_pair_product_restriction_equals_direct(spark):
     from kafka_clickhouse_implementation_spark.operators.minhash_portable import (
         verified_pairs,
     )
-    from kafka_clickhouse_implementation_spark.operators.nb_quality import (
-        corpus_features,
+    from kafka_clickhouse_implementation_spark.operators.dsir import (
+        features_product,
     )
     from kafka_clickhouse_implementation_spark.pipelines.corpus import (
         _restrict_pairs,
@@ -205,7 +195,7 @@ def test_pair_product_restriction_equals_direct(spark):
     docs = load(spark, sf_dir, "documents")
     product = neardup_pairs_product(spark, sf_dir)
     assert product.count() > 0  # non-vacuous product
-    dfc = corpus_features(spark, sf_dir)
+    dfc = features_product(spark, sf_dir)
     for gate in (
         quality_filter,
         lambda d: nb_quality_gate(d, dfc=dfc),

@@ -8,6 +8,7 @@ import ast
 import json
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,12 +139,10 @@ def test_drain_table_reads_back_without_inference(spark, tmp_path, jobs_launched
 
 
 def _allowed_lines(rel: str, tree) -> set[int]:
-    """Lines of ``rel`` that may start or await a stream: the
-    long-running MV job and the sinks' usage docstring."""
+    """Lines of ``rel`` that may start or await a stream: the sinks'
+    usage docstring."""
     lines = set()
     for node in ast.walk(tree):
-        if rel == "streaming/pipeline.py" and getattr(node, "name", None) == "run_mv_pipeline":
-            lines.update(range(node.lineno, node.end_lineno + 1))
         if rel == "sources/sinks.py" and isinstance(node, ast.FunctionDef):
             doc = node.body[0]
             if isinstance(doc, ast.Expr) and isinstance(doc.value, ast.Constant):
@@ -151,24 +150,51 @@ def _allowed_lines(rel: str, tree) -> set[int]:
     return lines
 
 
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "kafka_clickhouse_implementation_spark",
+)
+
+
+def _package_sources():
+    """(path relative to the package, source) of every package module."""
+    for root, _dirs, files in os.walk(_PKG):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    yield os.path.relpath(path, _PKG).replace(os.sep, "/"), f.read()
+
+
 def test_streams_start_only_in_drain():
     """No package module outside streaming/drain.py starts or awaits a
-    stream, except run_mv_pipeline and the sinks' usage docstring."""
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "kafka_clickhouse_implementation_spark",
-    )
+    stream, except the sinks' usage docstring."""
     hits = []
-    for root, _dirs, files in os.walk(pkg):
-        for name in files:
-            path = os.path.join(root, name)
-            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
-            if not name.endswith(".py") or rel == "streaming/drain.py":
-                continue
-            with open(path) as f:
-                src = f.read()
-            allowed = _allowed_lines(rel, ast.parse(src))
-            for i, line in enumerate(src.splitlines(), 1):
-                if (".writeStream" in line or "awaitTermination(" in line) and i not in allowed:
-                    hits.append(f"{rel}:{i}: {line.strip()}")
+    for rel, src in _package_sources():
+        if rel == "streaming/drain.py":
+            continue
+        allowed = _allowed_lines(rel, ast.parse(src))
+        for i, line in enumerate(src.splitlines(), 1):
+            if (".writeStream" in line or "awaitTermination(" in line) and i not in allowed:
+                hits.append(f"{rel}:{i}: {line.strip()}")
     assert hits == [], "streams started outside streaming/drain.py:\n" + "\n".join(hits)
+
+
+# pyspark.ml, a second materialization convention beside localCheckpoint,
+# and import-time experiment switches
+_RETIRED = re.compile(
+    r"pyspark\.ml\b|\.cache\(\)|\.persist\(|unpersist|SPARK_GRAFT_NB_"
+)
+
+
+def test_no_retired_surface():
+    """No package module imports pyspark.ml, calls .cache(), .persist(
+    or unpersist, or reads a SPARK_GRAFT_NB_ variable: frames are pinned
+    with localCheckpoint, and the NB feature space is fixed."""
+    hits = [
+        f"{rel}:{i}: {line.strip()}"
+        for rel, src in _package_sources()
+        for i, line in enumerate(src.splitlines(), 1)
+        if _RETIRED.search(line)
+    ]
+    assert hits == [], "retired surface in the package:\n" + "\n".join(hits)

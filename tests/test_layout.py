@@ -8,7 +8,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.plans.layout import (
-    append_rollup_partials,
     compact_rollup,
     read_day_partitioned,
     read_rollup,
@@ -44,8 +43,8 @@ def test_rollup_partials_reaggregate(spark, tmp_path):
     path = str(tmp_path / "rollup")
     ev = _events(spark, 40)
     d = ev.select("event_id", F.to_date("ts").alias("day"), F.col("event_type").alias("level"))
-    append_rollup_partials(d.filter(F.col("event_id") % 2 == 0).drop("event_id"), path)
-    append_rollup_partials(d.filter(F.col("event_id") % 2 == 1).drop("event_id"), path)
+    write_rollup_batch(d.filter(F.col("event_id") % 2 == 0).drop("event_id"), path, 0)
+    write_rollup_batch(d.filter(F.col("event_id") % 2 == 1).drop("event_id"), path, 1)
     d = d.drop("event_id")
     got = {(str(r["day"]), r["level"]): r["total"] for r in read_rollup(spark, path).collect()}
     want = {
@@ -97,8 +96,8 @@ def test_compact_rollup_preserves_totals(spark, tmp_path):
     path = str(tmp_path / "rollup2")
     ev = _events(spark, 30)
     d = ev.select(F.to_date("ts").alias("day"), F.col("event_type").alias("level"))
-    append_rollup_partials(d, path)
-    append_rollup_partials(d, path)  # duplicate partials
+    write_rollup_batch(d, path, 0)
+    write_rollup_batch(d, path, 1)  # duplicate partials
     before = {(str(r["day"]), r["level"]): r["total"] for r in read_rollup(spark, path).collect()}
     compact_rollup(spark, path)
     after = {(str(r["day"]), r["level"]): r["total"] for r in read_rollup(spark, path).collect()}
@@ -118,7 +117,7 @@ def test_compact_rollup_restores_parked_dir_after_crash(spark, tmp_path):
     d = _events(spark, 30).select(
         F.to_date("ts").alias("day"), F.col("event_type").alias("level")
     )
-    append_rollup_partials(d, path)
+    write_rollup_batch(d, path, 0)
     before = {(str(r["day"]), r["level"]): r["total"] for r in read_rollup(spark, path).collect()}
     os.rename(path, path + "__compact_old")  # the mid-swap crash state
     compact_rollup(spark, path)
@@ -137,9 +136,9 @@ def test_compact_rollup_folds_parked_dir_when_path_recreated(spark, tmp_path):
     d = _events(spark, 30).select(
         F.to_date("ts").alias("day"), F.col("event_type").alias("level")
     )
-    append_rollup_partials(d, path)
+    write_rollup_batch(d, path, 0)
     os.rename(path, path + "__compact_old")  # mid-swap crash
-    append_rollup_partials(d, path)  # writer resumed: fresh partials
+    write_rollup_batch(d, path, 1)  # writer resumed: fresh partials
     compact_rollup(spark, path)
     got = {(str(r["day"]), r["level"]): r["total"] for r in read_rollup(spark, path).collect()}
     want = {
@@ -169,7 +168,7 @@ def test_compact_rollup_completes_swap_after_marker_crash(spark, tmp_path):
     d = _events(spark, 30).select(
         F.to_date("ts").alias("day"), F.col("event_type").alias("level")
     )
-    append_rollup_partials(d, path)
+    write_rollup_batch(d, path, 0)
     before = _rollup_totals(spark, path)
     # crash state: tmp fully written, marker committed, path parked
     read_rollup(spark, path).write.mode("overwrite").parquet(path + "__compact_tmp")
@@ -193,12 +192,12 @@ def test_compact_rollup_marker_crash_with_recreated_path(spark, tmp_path):
     d = _events(spark, 30).select(
         F.to_date("ts").alias("day"), F.col("event_type").alias("level")
     )
-    append_rollup_partials(d, path)
+    write_rollup_batch(d, path, 0)
     read_rollup(spark, path).write.mode("overwrite").parquet(path + "__compact_tmp")
     os.rename(path, path + "__compact_old")
     with open(path + "__swap_started", "w"):
         pass
-    append_rollup_partials(d, path)  # writer resumed: fresh partials
+    write_rollup_batch(d, path, 1)  # writer resumed: fresh partials
     compact_rollup(spark, path)
     want = {
         (str(r["day"]), r["level"]): 2 * r["total"]
@@ -220,7 +219,7 @@ def test_compact_rollup_discards_uncommitted_tmp(spark, tmp_path):
     d = _events(spark, 30).select(
         F.to_date("ts").alias("day"), F.col("event_type").alias("level")
     )
-    append_rollup_partials(d, path)
+    write_rollup_batch(d, path, 0)
     before = _rollup_totals(spark, path)
     read_rollup(spark, path).write.mode("overwrite").parquet(path + "__compact_tmp")
     compact_rollup(spark, path)
@@ -370,20 +369,22 @@ def test_declared_reads_launch_no_job(spark, tmp_path, jobs_launched):
 
 def test_declared_rollup_reads_equal_inferred(spark, tmp_path):
     """The declared rollup read returns what inference returned, over
-    batch-* subdirs, flat partials and, in compaction, a parked dir."""
+    batch-* subdirs, a compaction's flat partial file and, in
+    compaction, a parked dir."""
     import os
 
     path = str(tmp_path / "rollup")
     d = _day_level(spark)
     write_rollup_batch(d.filter("event_id % 3 = 0").drop("event_id"), path, 0)
+    compact_rollup(spark, path)  # batch 0 becomes the flat part-00000.parquet
     write_rollup_batch(d.filter("event_id % 3 = 1").drop("event_id"), path, 1)
-    append_rollup_partials(d.filter("event_id % 3 = 2").drop("event_id"), path)
+    write_rollup_batch(d.filter("event_id % 3 = 2").drop("event_id"), path, 2)
     declared, inferred = read_rollup(spark, path), _inferred_rollup(spark, path)
     assert declared.schema == inferred.schema
     assert _sorted_rows(declared) == _sorted_rows(inferred)
 
     parked = path + "__compact_parked_000"
-    append_rollup_partials(d.drop("event_id"), parked)
+    write_rollup_batch(d.drop("event_id"), parked, 0)
     want = _sorted_rows(_inferred_rollup(spark, path, parked))
     compact_rollup(spark, path)
     assert _sorted_rows(read_rollup(spark, path)) == want

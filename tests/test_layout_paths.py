@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.plans.layout import (
-    append_rollup_partials,
     compact_rollup,
     read_day_partitioned,
     read_rollup,
@@ -148,13 +147,12 @@ def test_driver_fact_parts_are_sorted_per_day(spark, tmp_path):
 
 
 def _rollup_on(spark, monkeypatch, path, sides):
-    """Two batches and one flat append, on ``sides``, then a compaction
-    on the last side; returns the rollup read, which the compaction
-    keeps."""
+    """Three batches, on ``sides``, then a compaction on the last side;
+    returns the rollup read, which the compaction keeps."""
     d = _day_level(_events(spark).withColumn("k", F.col("event_id") % 3))
     _on(sides[0], monkeypatch, write_rollup_batch, d.filter("k = 0").drop("k"), path, 0)
     _on(sides[1], monkeypatch, write_rollup_batch, d.filter("k = 1").drop("k"), path, 1)
-    _on(sides[2], monkeypatch, append_rollup_partials, d.filter("k = 2").drop("k"), path)
+    _on(sides[2], monkeypatch, write_rollup_batch, d.filter("k = 2").drop("k"), path, 2)
     before = _rows(read_rollup(spark, path))
     _on(sides[2], monkeypatch, compact_rollup, spark, path)
     compacted = _rows(spark.read.parquet(path))

@@ -12,7 +12,7 @@ import math
 import pyarrow.parquet as pq
 
 from kafka_clickhouse_implementation_spark.functions.portable_math import pln_py
-from kafka_clickhouse_implementation_spark.operators.dsir import N_BUCKETS
+from kafka_clickhouse_implementation_spark.operators.dsir import N_BUCKETS, doc_features
 from kafka_clickhouse_implementation_spark.operators.nb_quality import (
     nb_scores,
     q_nb_quality,
@@ -121,7 +121,7 @@ def test_nb_matches_python_replay(spark, sf_dir):
         want = _replay(rows, held_only=held_only)
         got = {
             r.doc_id: (r.score_nano, r.n_feats)
-            for r in nb_scores(docs, held_only=held_only).collect()
+            for r in nb_scores(docs, doc_features(docs), held_only=held_only).collect()
         }
         assert got == want, held_only
 
@@ -137,7 +137,10 @@ def test_nb_separates_synthetic_domains(spark):
         else:
             rows.append((i, "z_src", "omega psi chi " * 5))
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    scored = {r.doc_id: r.score_nano for r in nb_scores(docs, held_only=False).collect()}
+    scored = {
+        r.doc_id: r.score_nano
+        for r in nb_scores(docs, doc_features(docs), held_only=False).collect()
+    }
     assert scored
     for d, s in scored.items():
         if d % 4 == 0:

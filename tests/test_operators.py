@@ -121,10 +121,10 @@ def test_registry_complete():
         "q_exact_distinct", "q_approx_distinct", "q_in_subquery",
         "q_cte_reuse", "q_udf_domain", "q_udaf_geomean", "q_udtf_tokenize",
         "q_dedup_docs", "q_jaccard_pairs", "q_cosine_topk", "q_term_stats",
-        "q_docs_by_lang", "q_sessionize", "legacy_minhash_lsh", "legacy_simhash",
+        "q_docs_by_lang", "q_sessionize",
         "q_ngram_jaccard", "q_embedding_near_dup", "q_fingerprint",
-        "q_token_count", "q_quality_score", "q_lang_id", "legacy_ann_lsh",
-        "legacy_ann_ivf", "q_multimodal_bytes", "q_multimodal_features",
+        "q_token_count", "q_quality_score", "q_lang_id",
+        "q_multimodal_bytes", "q_multimodal_features",
         "q_stream_mv_daily", "q_pagination",
     ):
         assert name in qs, name

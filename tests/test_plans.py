@@ -489,9 +489,9 @@ def test_cogroup_lineage_detector_catches_self_cogroup(spark):
 
 def test_asof_join_is_jvm_side(spark):
     """C-tier ASOF (r11 rewrite): union + last_value(ignorenulls) over
-    a user-partitioned window — no Python anywhere in the plan (the
-    cogrouped merge_asof predecessor lives on as legacy_asof_cogroup),
-    and the window is key-partitioned (no single-partition cliff)."""
+    a user-partitioned window — no Python anywhere in the plan (no
+    cogrouped merge_asof), and the window is key-partitioned (no
+    single-partition cliff)."""
     plan = _plan(all_queries()["q_asof_join"](spark, SF))
     assert "FlatMapCoGroupsInPandas" not in plan, plan
     assert "EvalPython" not in plan and "MapInPandas" not in plan, plan

@@ -19,56 +19,56 @@ from kafka_clickhouse_implementation_spark.registry import (
 )
 
 WINDOW_50 = [
-    "q_token_shards_unigram",
-    "q_stream_bpe",
-    "q_unigram_tokenizer_export",
-    "q_stream_shards_curriculum",
-    "q_ann_ivfpq_tuned",
-    "q_corpus_clean_nb",
-    "q_corpus_clean_portable",
-    "q_corpus_clean_sampled",
-    "q_corpus_clean_scored",
-    "q_corpus_clean_clipped",
-    "q_corpus_clean_clipped_sampled",
-    "q_corpus_export",
-    "q_corpus_export_full",
-    "q_stream_shards_upsert",
-    "q_ann_index_upsert",
-    "q_ann_index_delete",
-    "q_ann_index_retrain",
-    "q_dsir_weights",
+    "q_stream_mv_daily",
     "q_nb_quality",
     "q_nb_pr_curve",
-    "q_stream_dsir",
-    "q_dsir_tiers",
-    "q_token_shards_curriculum",
-    "legacy_asof_cogroup",
-    "q_tpch_q13_shape",
-    "q_tpch_q14_shape",
-    "q_tpch_q15_shape",
-    "q_tpch_q16_shape",
-    "q_tpch_q17_shape",
-    "q_tpch_q18_shape",
-    "q_tpch_q19_shape",
-    "q_update_mutation",
-    "q_url_funcs",
-    "q_window_range_frame",
-    "q_agg_state_merge",
-    "q_bigram_counts",
-    "q_bit_aggs",
-    "q_cluster_prototypes",
-    "q_collect_tokens",
-    "q_collocations",
-    "q_corpus_funnel",
-    "q_delta_sum",
-    "q_doc_chunks",
-    "q_edit_distance",
-    "q_embedding_norms",
-    "q_embedding_quantize",
-    "q_event_paths",
-    "q_gap_fill",
-    "q_grouping_sets",
-    "q_heavy_hitters",
+    "q_corpus_clean_nb",
+    "q_asof_join",
+    "q_stream_dict_get",
+    "q_ann_ivfsq8",
+    "q_ann_sq8_delete",
+    "q_ann_sq8_index",
+    "q_stream_token_shards_unigram",
+    "q_histogram",
+    "q_hll_sketch_union",
+    "q_map_funcs",
+    "q_multimodal_flac",
+    "q_multimodal_flac_stereo",
+    "q_multimodal_gif89a",
+    "q_multimodal_png_adam7",
+    "q_pii_mask",
+    "q_range_join",
+    "q_salted_agg",
+    "q_scd2_join",
+    "q_semantic_clean",
+    "q_sequence_count",
+    "q_sequence_match",
+    "q_session_bounds",
+    "q_sliding_counts",
+    "q_sliding_window",
+    "q_stratified_sample",
+    "q_stream_agg_state",
+    "q_systematic_sample",
+    "q_tpch_q21_shape",
+    "q_tpch_q22_shape",
+    "q_tpch_q4_shape",
+    "q_tpch_q7_shape",
+    "q_tpch_q8_shape",
+    "q_twolevel_kmeans",
+    "q_weekly_rollup",
+    "q_zipf_rank",
+    "q_ann_portable",
+    "q_ann_recall",
+    "q_cosine_topk",
+    "q_csv_roundtrip",
+    "q_decontaminate",
+    "q_doc_signals",
+    "q_embedding_truncate",
+    "q_first_seen_cumulative",
+    "q_group_array",
+    "q_inverted_index",
+    "q_json_extract",
+    "q_kmv_setops",
 ]
 
 
@@ -110,25 +110,3 @@ def test_window_oracle_coverage():
         q for q in WINDOW_50 if q not in oracles and q not in _ROWS_ONLY_BY_DESIGN
     ]
     assert missing == []
-
-
-def test_legacy_queries_are_tagged_and_out_of_window():
-    """Superseded rows-only sketches keep their implementations under a
-    legacy_ prefix; each has an oracle-checked twin in the registry
-    (C24/C32/C60/C112, and since round 8 the deterministic one-shot MG
-    C29 and the portable register-exact HLL C31)."""
-    qs = all_queries()
-    oracles = all_oracles()
-    twins = {
-        "legacy_minhash_lsh": "q_minhash_portable",
-        "legacy_simhash": "q_simhash_portable",
-        "legacy_ann_lsh": "q_ann_portable",
-        "legacy_ann_ivf": "q_ann_ivf_exact",
-        "legacy_heavy_hitters": "q_heavy_hitters",
-        "legacy_hll_sketch": "q_hll_sketch_union",
-    }
-    for legacy, twin in twins.items():
-        assert legacy in qs
-        assert legacy not in oracles
-        assert legacy not in WINDOW_50
-        assert twin in oracles

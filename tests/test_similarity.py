@@ -13,10 +13,7 @@ under the observed deterministic values."""
 from __future__ import annotations
 
 from kafka_clickhouse_implementation_spark.operators.similarity import (
-    q_ann_ivf,
-    q_ann_lsh,
     q_ann_recall,
-    q_cosine_topk,
 )
 
 
@@ -26,16 +23,6 @@ def test_lsh_recall_floor(spark, sf_dir):
     # observed deterministic values at sf0.001: mean 0.235, min 0.1
     assert row["mean_recall_at_10"] >= 0.2
     assert row["min_recall_at_10"] >= 0.05
-
-
-def test_ann_paths_overlap_ground_truth(spark, sf_dir):
-    truth = {r["vec_id"] for r in q_cosine_topk(spark, sf_dir).collect()}
-    ivf = {r["vec_id"] for r in q_ann_ivf(spark, sf_dir).collect()}
-    lsh = {r["vec_id"] for r in q_ann_lsh(spark, sf_dir).collect()}
-    assert len(truth) == 10
-    # observed deterministic overlaps: ivf 2, lsh 1
-    assert len(truth & ivf) >= 1
-    assert len(truth & lsh) >= 1
 
 
 def test_ann_candidates_are_pruned(spark, sf_dir):

@@ -43,47 +43,6 @@ def test_bigram_plan_stays_jvm_side_and_prunes(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_heavy_hitters_mg_guarantee(spark):
-    """Merged Misra-Gries estimates are lower bounds within n/(b+1) of
-    the truth, and the true top-5 tokens all surface in the top-10."""
-    from pyspark.sql import functions as F
-
-    from kafka_clickhouse_implementation_spark.io import load
-    from kafka_clickhouse_implementation_spark.operators.text_ext import _mg_partial
-
-    docs = load(spark, SF, "documents")
-    tokens = docs.select(F.explode(F.split("text", " ")).alias("token"))
-    true_counts = {r.token: r.n for r in tokens.groupBy("token").agg(F.count("*").alias("n")).collect()}
-    n_total = sum(true_counts.values())
-
-    sketch = tokens.mapInPandas(_mg_partial(64), "token string, est long")
-    merged = {r.token: r.est for r in sketch.groupBy("token").agg(F.sum("est").alias("est")).collect()}
-
-    bound = n_total / (64 + 1)
-    for tok, est in merged.items():
-        assert est <= true_counts[tok], (tok, est, true_counts[tok])  # lower bound
-        assert true_counts[tok] - est <= bound, (tok, est, true_counts[tok], bound)
-
-    top5_true = sorted(true_counts, key=lambda t: (-true_counts[t], t))[:5]
-    top10_sketch = sorted(merged, key=lambda t: (-merged[t], t))[:10]
-    assert set(top5_true) <= set(top10_sketch)
-
-
-def test_hll_union_estimate_within_bound(spark):
-    """Unioned per-day DataSketches HLL sketches (the retained legacy
-    production form) must estimate global distinct users within 5% of
-    the exact count (lgK=12 default -> ~1.6% RSE)."""
-    from kafka_clickhouse_implementation_spark.io import load
-    from kafka_clickhouse_implementation_spark.registry import all_queries
-
-    est = all_queries()["legacy_hll_sketch"](spark, SF).head().est_users
-    ev = load(spark, SF, "events")
-    from pyspark.sql import functions as F
-
-    exact = ev.select(F.count_distinct("user_id").alias("n")).head().n
-    assert abs(est - exact) / exact <= 0.05, (est, exact)
-
-
 def test_portable_hll_matches_pure_python_replay(spark):
     """Independent reimplementation of the portable HLL (C31): hashlib
     md5 -> 64 registers -> exact integer harmonic sum -> one IEEE

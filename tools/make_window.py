@@ -4,8 +4,8 @@
 The driver records rows for the FIRST 50 registered queries each round
 (`registry._WINDOW_50`). Hand-curating that list drifted once (the r6
 ROUNDLOG overclaim the round-7 verdict called out), so this tool is now
-the single way the window is produced: it ranks every non-legacy query
-by how badly it needs a fresh driver row and emits the next 50.
+the single way the window is produced: it ranks every query by how
+badly it needs a fresh driver row and emits the next 50.
 
 Priority (highest first):
   1. --changed names — queries whose code or oracle changed this round
@@ -77,17 +77,7 @@ def propose(changed: list[str], size: int = 50) -> list[str]:
     repo_root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
     latest = load_history(repo_root)
     oracles = all_oracles()
-    # legacy_* queries normally stay out of the window (their modern
-    # twins carry the evidence) — EXCEPT an oracle-backed legacy query
-    # the driver has never hashed (r13/r14 verdicts: legacy_asof_cogroup
-    # was the only oracle-backed query with no driver row in 14 rounds).
-    # It windows once, earns its row, and falls back out.
-    qs = [
-        q
-        for q in all_queries()
-        if not q.startswith("legacy_")
-        or (q in oracles and latest.get(q, 0) == 0)
-    ]
+    qs = list(all_queries())
     unknown = [c for c in changed if c not in qs]
     if unknown:
         raise SystemExit(f"--changed names not in registry: {unknown}")
@@ -128,7 +118,7 @@ def main() -> None:
     latest = load_history(repo_root)
 
     if args.check:
-        qs = [q for q in all_queries() if not q.startswith("legacy_")]
+        qs = list(all_queries())
         oracles = all_oracles()
         never = [q for q in qs if q not in latest and q not in _WINDOW_50]
         stale = sorted(
