@@ -30,9 +30,9 @@ a Spark job over parquet footers before the query even plans):
 
 - The rollup's DDL is ``schemas.DAILY_SCHEMA`` (kafka+clickhouse.md:
   205-211). The writers emit exactly ``day, level, total`` and raise if
-  a batch's columns do not have those types; ``read_rollup`` and
-  ``compact_rollup`` read the partials, batch dirs and parked dirs with
-  it.
+  a batch's ``day`` or ``level`` does not have its type;
+  ``read_rollup`` and ``compact_rollup`` read the partials, batch dirs
+  and parked dirs with it, on either path below.
 - The fact table's DDL is recorded next to its data, in
   ``_schema.json`` (Spark readers skip ``_``-prefixed files), written
   after the data commits by the write that creates or overwrites the
@@ -43,14 +43,19 @@ a Spark job over parquet footers before the query even plans):
   table without one (written before records existed, or by a write that
   died between the data commit and the record) is read with inference.
 
-Where the writes run (``gate.DRIVER_MAX_ROWS``, the one driver-size
-gate). A live micro-batch is a few thousand rows and a rollup's partials
-are days × levels × batches, yet a Spark write of either costs a shuffle
-job plus a write job, each re-reading the input. Below the gate every
-writer here pulls its input once as Arrow (``gate.driver_arrow``, one
-job), sorts or counts it in pyarrow and writes the parquet files from
-the driver; above it the Spark writes run unchanged, and they are the
-reference the tests compare the driver writes with:
+Where the writes, rollup reads and merges run (``gate.DRIVER_MAX_ROWS``,
+the one driver-size gate). A live micro-batch is a few thousand rows and
+a rollup's partials are days × levels × batches, yet a Spark write of
+either costs a shuffle job plus a write job, each re-reading the input,
+and a Spark read of the rollup two or three jobs with a shuffle. Below
+the gate every writer here pulls its input once as Arrow
+(``gate.driver_arrow``, one job), sorts or counts it in pyarrow and
+writes the parquet files from the driver; ``read_rollup`` and
+``compact_rollup`` size the partials from their parquet footers
+(``gate.driver_parquet``), read and sum them in pyarrow and run no job
+(the read returns a local relation over the sums). Above it the Spark
+plans run unchanged, and they are the reference the tests compare the
+driver paths with:
 
 - Part names: a fact append writes one
   ``<partition_col>=<yyyyMMdd>/part-<uuid>.parquet`` per day, sorted by
@@ -64,12 +69,16 @@ reference the tests compare the driver writes with:
   same physical types; a frame with a ``timestamp_ntz`` column, which
   that setting does not cover, takes the Spark path.
 - Visibility: each file is written under a ``.``-prefixed temp name in
-  its target dir and renamed into place. Spark's file index skips
-  ``.``/``_`` names and DuckDB's ``*.parquet`` globs skip ``.tmp``, so a
-  concurrent dashboard read sees a whole file or none, and a writer
-  killed mid-file leaves only an ignored ``.…tmp``. A write that creates
-  or overwrites the fact table writes ``_SUCCESS`` after its last part
-  and then the schema record, as a Spark write's commit does.
+  its target dir and renamed into place. Spark's file index and the
+  driver rollup read skip ``.``/``_`` names and DuckDB's ``*.parquet``
+  globs skip ``.tmp``, so a concurrent dashboard read sees a whole file
+  or none, and a writer killed mid-file leaves only an ignored
+  ``.…tmp``. A write that creates or overwrites the fact table writes
+  ``_SUCCESS`` after its last part and then the schema record, as a
+  Spark write's commit does. A driver rollup read opens every partial
+  through one descriptor of the rollup dir, so a compaction swapping the
+  dir under it yields the totals before the swap or an error, never a
+  mix of both trees.
 - Delivery: rollup batches are idempotent (``write_rollup_batch``). Fact
   appends are at-least-once on either path: a retried append writes its
   rows again under new part names.
@@ -81,6 +90,7 @@ import json
 import os
 import shutil
 import uuid
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -208,15 +218,19 @@ def read_day_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return reader.parquet(path)
 
 
+def _check_keys(batch_df: DataFrame) -> None:
+    """Raise unless ``batch_df``'s ``day`` and ``level`` have the rollup
+    DDL's types; the counts a batch's partials add are always bigint."""
+    types = {f.name: f.dataType for f in batch_df.schema.fields}
+    keys = ("day", "level")
+    if any(types.get(k) != DAILY_SCHEMA[k].dataType for k in keys):
+        got = ", ".join(f"{k} {types[k].simpleString() if k in types else 'missing'}" for k in keys)
+        raise ValueError(f"rollup partials ({got}) do not match {DAILY_SCHEMA.simpleString()}")
+
+
 def _partials(batch_df: DataFrame) -> DataFrame:
     """One batch's per-(day, level) counts, in the rollup's DDL."""
-    out = batch_df.groupBy("day", "level").agg(F.count(F.lit(1)).alias("total"))
-    if not _same_columns(out.schema, DAILY_SCHEMA):
-        raise ValueError(
-            f"rollup partials {out.schema.simpleString()} do not match"
-            f" {DAILY_SCHEMA.simpleString()}"
-        )
-    return out
+    return batch_df.groupBy("day", "level").agg(F.count(F.lit(1)).alias("total"))
 
 
 def _driver_partials(batch_df: DataFrame):
@@ -240,11 +254,11 @@ def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
     its previous (possibly partial) output instead of double-appending
     it. ``read_rollup`` picks the subdirectories up recursively."""
     out = f"{path.rstrip('/')}/batch-{batch_id:010d}"
-    partials = _partials(batch_df)  # raises on a DDL mismatch, before either path writes
+    _check_keys(batch_df)  # before either path writes
     table = _driver_partials(batch_df)
     if table is None:
         (
-            partials
+            _partials(batch_df)
             # partials are days x levels rows per batch regardless of input
             # volume — one output file beats 32 near-empty ones (the small-
             # files problem is the reader's bottleneck, not the writer's)
@@ -257,31 +271,78 @@ def write_rollup_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
         _write_parquet(table, out, "part-00000.parquet")
 
 
-def _raw_partials(spark: SparkSession, *paths: str) -> DataFrame:
-    """Every partial under ``paths``, read with the rollup's DDL.
-    recursiveFileLookup tolerates any mix of flat partial files,
-    per-batch subdirectories, and compacted output."""
+def _summed(spark: SparkSession, *paths: str) -> DataFrame:
+    """Every partial under ``paths``, read with the rollup's DDL, summed
+    per (day, level). recursiveFileLookup tolerates any mix of flat
+    partial files, per-batch subdirectories, and compacted output."""
     return (
         spark.read.schema(DAILY_SCHEMA)
         .option("recursiveFileLookup", "true")
         .parquet(*paths)
-    )
-
-
-def _summed(spark: SparkSession, *paths: str) -> DataFrame:
-    """Every partial under ``paths`` summed per (day, level)."""
-    return (
-        _raw_partials(spark, *paths)
         .groupBy("day", "level")
         .agg(F.sum("total").alias("total"))
     )
 
 
+# Spark's reader skips these prefixes (`_SUCCESS`, `.crc`, `.…tmp`)
+_HIDDEN = ("_", ".")
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _open_partials(stack: ExitStack, path: str) -> list:
+    """Every partial under ``path``, opened for reading and closed with
+    ``stack``: the files recursiveFileLookup reads (no ``_``- or
+    ``.``-prefixed file or directory), batch dirs before a compaction's
+    flat file. A missing ``path`` raises FileNotFoundError.
+
+    Each file is opened relative to one descriptor of ``path`` taken
+    first, never by its name under ``path``, so every file comes from
+    the tree that was at ``path`` when the read began. A compaction that
+    swaps ``path`` meanwhile cannot mix its merged file into the set and
+    double-count; once the swap has deleted the old tree, the open
+    raises instead."""
+    top = os.open(path, os.O_RDONLY | os.O_DIRECTORY)
+    stack.callback(os.close, top)
+    names = []
+    for root, dirs, files, _fd in os.fwalk(".", dir_fd=top, onerror=_raise):
+        dirs[:] = [d for d in dirs if not d.startswith(_HIDDEN)]
+        names += [os.path.normpath(os.path.join(root, f)) for f in files if not f.startswith(_HIDDEN)]
+
+    def opener(name: str, flags: int) -> int:
+        return os.open(name, flags, dir_fd=top)
+
+    return [stack.enter_context(open(n, "rb", opener=opener)) for n in sorted(names)]
+
+
+def _driver_summed(*paths: str):
+    """``_summed`` on the driver: every partial under ``paths`` read with
+    pyarrow and summed per (day, level), with no Spark job; ``None`` when
+    their footers hold more than ``gate.DRIVER_MAX_ROWS`` rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # Spark's reader makes every column of a declared schema nullable
+    ddl = to_arrow_schema(T.StructType([T.StructField(f.name, f.dataType) for f in DAILY_SCHEMA]))
+    with ExitStack() as stack:
+        raw = gate.driver_parquet([f for p in paths for f in _open_partials(stack, p)], ddl)
+    if raw is None:
+        return None
+    sums = raw.group_by(["day", "level"]).aggregate([("total", "sum")])
+    return pa.table({"day": sums["day"], "level": sums["level"], "total": sums["total_sum"]})
+
+
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """Read-time re-aggregation — the SummingMergeTree reader contract
     (sum over possibly-unmerged partials, kafka+clickhouse.md:240-243,
-    464-468)."""
-    return _summed(spark, path)
+    464-468). Below the gate the sums are taken on the driver when this
+    is called and the frame is a local relation over them, so a filter
+    or collect on it runs no Spark job; above it the frame is Spark's
+    scan and aggregate."""
+    summed = _driver_summed(path)
+    return _summed(spark, path) if summed is None else spark.createDataFrame(summed)
 
 
 def _swap_names(path: str) -> tuple[str, str, str]:
@@ -411,17 +472,13 @@ def compact_rollup(spark: SparkSession, path: str) -> None:
     ever double-counted (parked dirs and `path` are always disjoint row
     sets: a dir is parked precisely when its rows are NOT in the
     recreated `path`)."""
-    import pyarrow as pa
-
     _recover_swap(path)
     parked = _parked_dirs(path)
     _, tmp, _ = _swap_names(path)
-    raw = gate.driver_arrow(_raw_partials(spark, path, *parked))
-    if raw is None:
+    merged = _driver_summed(path, *parked)
+    if merged is None:
         _summed(spark, path, *parked).write.mode("overwrite").parquet(tmp)
     else:
-        sums = raw.group_by(["day", "level"]).aggregate([("total", "sum")])
-        merged = pa.table({"day": sums["day"], "level": sums["level"], "total": sums["total_sum"]})
         _write_parquet(merged, tmp, "part-00000.parquet")
     _swap_in(path, tmp, folded=parked)
 

@@ -1,8 +1,9 @@
-"""The two write paths of plans.layout: below ``gate.DRIVER_MAX_ROWS``
-each writer pulls its input as Arrow and writes the parquet files from
-the driver; with the gate patched to 0 it runs the Spark writes. Both
-must leave tables that every reader sees the same, and mixing them in
-one table must not matter."""
+"""The two paths of plans.layout: below ``gate.DRIVER_MAX_ROWS`` each
+writer pulls its input as Arrow and writes the parquet files from the
+driver, and the rollup is read and merged with pyarrow; with the gate
+patched to 0 the Spark writes, reads and merges run. Both must leave
+tables that every reader sees the same, and mixing them in one table
+must not matter."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark import gate
+from kafka_clickhouse_implementation_spark.plans import layout
 from kafka_clickhouse_implementation_spark.plans.layout import (
     compact_rollup,
     read_day_partitioned,
@@ -41,12 +43,12 @@ def _day_level(df):
     return df.select(F.to_date("ts").alias("day"), F.col("event_type").alias("level"))
 
 
-def _on(side, monkeypatch, write, *args, **kwargs):
-    """Run one write on ``side``: the gate at its default, or at 0."""
+def _on(side, monkeypatch, call, *args, **kwargs):
+    """Run one write or read on ``side``: the gate at its default, or at 0."""
     with monkeypatch.context() as mp:
         if side == SPARK:
             mp.setattr(gate, "DRIVER_MAX_ROWS", 0)
-        write(*args, **kwargs)
+        return call(*args, **kwargs)
 
 
 def _rows(df):
@@ -146,6 +148,14 @@ def test_driver_fact_parts_are_sorted_per_day(spark, tmp_path):
 # ---------------------------------------------------------------- rollup
 
 
+def _read_both(spark, monkeypatch, path):
+    """The rollup as read on each path; the two reads must agree."""
+    driver, distributed = (_rows(_on(side, monkeypatch, read_rollup, spark, path))
+                           for side in (DRIVER, SPARK))
+    assert driver == distributed
+    return driver
+
+
 def _rollup_on(spark, monkeypatch, path, sides):
     """Three batches, on ``sides``, then a compaction on the last side;
     returns the rollup read, which the compaction keeps."""
@@ -153,16 +163,16 @@ def _rollup_on(spark, monkeypatch, path, sides):
     _on(sides[0], monkeypatch, write_rollup_batch, d.filter("k = 0").drop("k"), path, 0)
     _on(sides[1], monkeypatch, write_rollup_batch, d.filter("k = 1").drop("k"), path, 1)
     _on(sides[2], monkeypatch, write_rollup_batch, d.filter("k = 2").drop("k"), path, 2)
-    before = _rows(read_rollup(spark, path))
+    before = _read_both(spark, monkeypatch, path)
     _on(sides[2], monkeypatch, compact_rollup, spark, path)
     compacted = _rows(spark.read.parquet(path))
-    assert compacted == _rows(read_rollup(spark, path)) == before
+    assert compacted == _read_both(spark, monkeypatch, path) == before
     return before
 
 
 def test_rollups_read_the_same_from_either_path(spark, tmp_path, monkeypatch):
-    """read_rollup and the compacted files agree across the paths and a
-    mix of them, and equal a plain count."""
+    """read_rollup on either path and the compacted files agree across
+    the write paths and a mix of them, and equal a plain count."""
     want = _rows(_day_level(_events(spark)).groupBy("day", "level").agg(F.count("*").alias("total")))
     for sides in ((DRIVER,) * 3, (SPARK,) * 3, (DRIVER, SPARK, DRIVER), (SPARK, DRIVER, SPARK)):
         assert _rollup_on(spark, monkeypatch, str(tmp_path / "_".join(sides)), sides) == want
@@ -186,10 +196,13 @@ def _live_batch(spark, tmp_path):
 
 @pytest.mark.parametrize("side,jobs", [(DRIVER, 1), (SPARK, 3)])
 def test_jobs_per_write(spark, tmp_path, monkeypatch, jobs_launched, side, jobs):
-    """Below the gate an append, a rollup batch and a compaction each run
-    one job: the Arrow pull. With the gate at 0 each runs the size probe
-    plus the Spark write's shuffle job and write job, and writes Spark's
-    part names."""
+    """Below the gate an append and a rollup batch each run one job, the
+    Arrow pull. With the gate at 0 each runs the size probe plus the
+    Spark write's shuffle job and write job, and writes Spark's part
+    names. A compaction runs one job fewer on either side: it sizes the
+    partials from their footers, so below the gate it merges them in
+    pyarrow with no job, and above it runs the two Spark jobs without a
+    probe."""
     if side == SPARK:
         monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
     batch = _live_batch(spark, tmp_path)
@@ -200,9 +213,74 @@ def test_jobs_per_write(spark, tmp_path, monkeypatch, jobs_launched, side, jobs)
     assert jobs_launched(lambda: write_day_partitioned(
         batch, fact, ts_col="event_ts", sort_keys=("level",), mode="append")) == jobs
     assert jobs_launched(lambda: write_rollup_batch(partials, rollup, 0)) == jobs
-    assert jobs_launched(lambda: compact_rollup(spark, rollup)) == jobs
+    assert jobs_launched(lambda: compact_rollup(spark, rollup)) == jobs - 1
     spark_named = [p.endswith(".snappy.parquet") for p in set(_parquet_files(fact)) - before]
     assert len(spark_named) == 3 and all(spark_named) == (side == SPARK)
+
+
+def test_filtered_rollup_read_runs_no_job(spark, tmp_path, jobs_launched):
+    """Below the gate a dashboard's filtered rollup read, built and
+    collected, runs no Spark job: the sums are a local relation."""
+    d = _day_level(_events(spark))
+    path = str(tmp_path / "rollup")
+    write_rollup_batch(d, path, 0)
+    compact_rollup(spark, path)
+    write_rollup_batch(d, path, 1)
+    got = []
+    assert jobs_launched(lambda: got.extend(
+        read_rollup(spark, path).where(F.col("day") >= F.lit("2024-01-03").cast("date")).collect()
+    )) == 0
+    want = d.where("day >= date'2024-01-03'").groupBy("day", "level").agg((2 * F.count("*")).alias("total"))
+    assert sorted(tuple(r) for r in got) == _rows(want)
+
+
+@pytest.mark.parametrize("side", [DRIVER, SPARK])
+def test_missing_rollup_raises(spark, tmp_path, monkeypatch, side):
+    """A missing rollup path raises, never reads as an empty rollup."""
+    with pytest.raises(FileNotFoundError):
+        _on(side, monkeypatch, read_rollup, spark, str(tmp_path / "absent"))
+
+
+def test_read_racing_a_compaction_never_double_counts(spark, tmp_path, monkeypatch):
+    """A compaction's swap that lands partway through a driver read,
+    after the batch partials are opened and before the compacted
+    ``part-00000.parquet`` is, gives the totals before the swap, the
+    totals after it, or an error; never the two trees' files summed."""
+    import shutil
+
+    d = _day_level(_events(spark))
+    path = str(tmp_path / "rollup")
+    write_rollup_batch(d, path, 0)
+    compact_rollup(spark, path)  # batch 0 becomes the flat part-00000.parquet
+    write_rollup_batch(d, path, 1)
+    write_rollup_batch(d, path, 2)
+    want = _rows(read_rollup(spark, path))
+    # the next compaction's merged tree, ready to swap in
+    merged = str(tmp_path / "merged")
+    shutil.copytree(path, merged)
+    compact_rollup(spark, merged)
+    _, tmp, _ = layout._swap_names(path)
+    os.rename(merged, tmp)
+
+    opened, swapped = [], []
+
+    def racing_open(file, *args, **kwargs):
+        if "batch-" in str(file):
+            opened.append(file)
+        elif str(file).endswith(".parquet") and opened and not swapped:
+            swapped.append(file)
+            layout._swap_in(path, tmp, folded=[])
+        return open(file, *args, **kwargs)
+
+    monkeypatch.setattr(layout, "open", racing_open, raising=False)
+    try:
+        got = _rows(read_rollup(spark, path))
+    except FileNotFoundError:
+        got = None  # the swap deleted the old tree under the read
+    assert len(opened) == 2 and swapped, (opened, swapped)
+    assert got in (None, want)
+    monkeypatch.undo()
+    assert _rows(read_rollup(spark, path)) == want
 
 
 # ---------------------------------------------------------------- retry, visibility

@@ -452,8 +452,10 @@ def test_registry_wide_plan_audit(spark):
 
 
 def test_bare_window_detector_catches_global_windows(spark):
-    """Negative control for the audit: a deliberately unpartitioned
-    window MUST trip the detector (otherwise the audit is vacuous)."""
+    """Negative control for the audit and for
+    ``test_unpartitioned_windows_rank_a_limited_frame``: a deliberately
+    unpartitioned window MUST trip the detectors (otherwise the audits
+    are vacuous)."""
     df = spark.range(10).selectExpr(
         "id", "sum(id) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s"
     )
@@ -464,6 +466,8 @@ def test_bare_window_detector_catches_global_windows(spark):
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s",
     )
     assert not _bare_windows(_plan(ok))
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert _bare_window_inputs(optimized, []) == ["Range"]
 
 
 def test_cogroup_lineage_detector_catches_self_cogroup(spark):
@@ -705,3 +709,30 @@ def test_mmr_rounds_are_joins_not_crossjoins(spark):
     assert "CartesianProduct" not in plan, plan
     assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
     assert not _bare_windows(plan), plan
+
+
+def _bare_window_inputs(node, out):
+    """For every Window with no partition spec in the optimized plan
+    under ``node``: the first node on its unary input chain that is a
+    GlobalLimit or does not have one child."""
+    name = node.getClass().getSimpleName()
+    if name == "Window" and node.partitionSpec().isEmpty():
+        cur = node.children().apply(0)
+        while cur.getClass().getSimpleName() != "GlobalLimit" and cur.children().size() == 1:
+            cur = cur.children().apply(0)
+        out.append(cur.getClass().getSimpleName())
+    for i in range(node.children().size()):
+        _bare_window_inputs(node.children().apply(i), out)
+    return out
+
+
+@pytest.mark.parametrize("name", ["q_dsir_weights", "q_proximity_search", "q_bm25_rank"])
+def test_unpartitioned_windows_rank_a_limited_frame(spark, name):
+    """The package's bare ``W.orderBy`` rank windows (dsir ``_select_top``,
+    retrieval's query-term and query-pair picks) each rank a frame a
+    TakeOrdered limit has already cut to TOP_N, QT_TOTAL or 2*QP_PAIRS
+    rows, so Spark's single-partition warning for them moves no whole
+    input. A rank over an unbounded frame fails here."""
+    plan = all_queries()[name](spark, SF)._jdf.queryExecution().optimizedPlan()
+    inputs = _bare_window_inputs(plan, [])
+    assert inputs and set(inputs) == {"GlobalLimit"}, plan.toString()
