@@ -28,8 +28,9 @@ def _source(sf_dir: str, table: str) -> tuple[str, str]:
 
 def source_tagged_dir(flavor: str, sf_dir: str, table: str) -> str:
     """Temp dir for an artifact derived from ``{sf_dir}/{table}.parquet``,
-    whose name digests the source file's identity. Callers keep their
-    own completion markers inside it."""
+    whose name digests the source file's identity. A replay wire inside
+    it is ready when ``sources.streams.wire_ready`` says so; other
+    artifacts keep their own completion markers."""
     resolved, prefix = _source(sf_dir, table)
     st = os.stat(resolved)
     tag = hashlib.md5(

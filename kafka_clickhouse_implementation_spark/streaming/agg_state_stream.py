@@ -37,8 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.operators.agg_state import (
     _KMV_K,
     _VM,
@@ -56,6 +54,7 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     _nibble_value_sql,
 )
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 _WIRE_SCHEMA = T.StructType(
@@ -68,21 +67,13 @@ _WIRE_SCHEMA = T.StructType(
 
 
 def _value_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """ts-sorted JSON replay of events CARRYING value (the shared
-    stateful wire omits it); same immutable-per-source-identity cache
-    contract as ordered_event_wire."""
-    base = source_tagged_dir("aggstate", sf_dir, "events")
-    wire_dir = os.path.join(base, "wire")
-    if not os.path.exists(os.path.join(wire_dir, "_SUCCESS")):
-        ev = load(spark, sf_dir, "events")
-        (
-            ev.select("user_id", "value", F.unix_micros("ts").alias("e_us"))
-            .repartitionByRange(4, "e_us", "user_id")
-            .sortWithinPartitions("e_us", "user_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-    return wire_dir, base
+    """The `events` replay in (e_us, user_id) order CARRYING value (the
+    shared stateful wire omits it); same immutable-per-source-identity
+    cache contract as ordered_event_wire."""
+    return source_wire(
+        spark, sf_dir, "events", "aggstate", ("e_us", "user_id"),
+        lambda ev: ev.select("user_id", "value", F.unix_micros("ts").alias("e_us")),
+    )
 
 
 def _hashed_stream(spark: SparkSession, wire_dir: str) -> DataFrame:

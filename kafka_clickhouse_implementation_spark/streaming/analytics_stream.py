@@ -27,6 +27,7 @@ from kafka_clickhouse_implementation_spark.operators.analytics_ext import (
     _ENTROPY_ORACLE,
 )
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
     ordered_event_wire,
@@ -90,7 +91,6 @@ from collections.abc import Iterator  # noqa: E402
 import pandas as pd  # noqa: E402
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: E402
 
-from kafka_clickhouse_implementation_spark.io import load  # noqa: E402
 from kafka_clickhouse_implementation_spark.operators.analytics_ext import (  # noqa: E402
     _ILS_ORACLE,
 )
@@ -99,40 +99,13 @@ _DUR_US_PY = 60_000_000  # (event_id % 7 + 1) * this — restated from analytics
 
 
 def _ils_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """ts-range-partitioned JSON replay of events with STRICTLY
-    increasing part-file mtimes (the q_stream_ema recipe): the interval
-    fold below assumes per-user starts arrive in time order, which the
-    oldest-mtime-first file source only guarantees if batch order IS
-    time order."""
-    import os
-    import shutil
-    import time
-
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    base = source_tagged_dir("ilswire1", sf_dir, "events")
-    wire_dir = os.path.join(base, "wire")
-    ready = os.path.join(wire_dir, "_WIRE_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(wire_dir, ignore_errors=True)
-        (
-            load(spark, sf_dir, "events")
-            .select("user_id", "event_id", F.unix_micros("ts").alias("s_us"))
-            .repartitionByRange(4, "s_us", "event_id")
-            .sortWithinPartitions("s_us", "event_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-        parts = sorted(
-            f for f in os.listdir(wire_dir)
-            if f.startswith("part-") and f.endswith(".json")
-        )
-        now = time.time()
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(wire_dir, p), (now + 10.0 * i, now + 10.0 * i))
-        with open(ready, "w"):
-            pass
-    return wire_dir, base
+    """The `events` replay of interval starts in (s_us, event_id)
+    order: the interval fold below assumes per-user starts arrive in
+    time order across batches."""
+    return source_wire(
+        spark, sf_dir, "events", "ilswire1", ("s_us", "event_id"),
+        lambda ev: ev.select("user_id", "event_id", F.unix_micros("ts").alias("s_us")),
+    )
 
 
 def _ils_update(
@@ -188,8 +161,6 @@ def q_stream_interval_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection oracle verbatim. State: 4 longs + a counter per user,
     independent of stream length."""
     wire, base = _ils_wire(spark, sf_dir)
-    import os
-
     ckpt = os.path.join(base, "ckpt_ils")
     # 2 files/trigger over the 4-file wire = 2 micro-batches: the
     # cheapest replay that still forces island state across a batch
@@ -234,33 +205,20 @@ def q_stream_interval_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def valued_event_wire(spark, sf_dir: str) -> tuple[str, str]:
-    """ts-sorted JSON replay of `events` CARRYING the milli-quantized
-    value (the stateful2 wire drops `value`; regression needs it).
-    Quantization happens BEFORE the write so the wire holds exact
-    longs — JSON round-trips them losslessly. Same source-identity
-    caching contract as ordered_event_wire."""
-    import os
-
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-    from kafka_clickhouse_implementation_spark.io import load
-
-    base = source_tagged_dir("statefulv", sf_dir, "events")
-    wire_dir = os.path.join(base, "wire")
-    if not os.path.exists(os.path.join(wire_dir, "_SUCCESS")):
-        ev = load(spark, sf_dir, "events")
-        (
-            ev.select(
-                "event_id",
-                "event_type",
-                F.unix_micros("ts").alias("e_us"),
-                F.expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)").alias("vm"),
-            )
-            .repartitionByRange(4, "e_us", "event_id")
-            .sortWithinPartitions("e_us", "event_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-    return wire_dir, base
+    """The `events` replay in (e_us, event_id) order CARRYING the
+    milli-quantized value (the stateful2 wire drops `value`; regression
+    needs it). Quantization happens BEFORE the write so the wire holds
+    exact longs — JSON round-trips them losslessly. Same
+    source-identity caching contract as ordered_event_wire."""
+    return source_wire(
+        spark, sf_dir, "events", "statefulv", ("e_us", "event_id"),
+        lambda ev: ev.select(
+            "event_id",
+            "event_type",
+            F.unix_micros("ts").alias("e_us"),
+            F.expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)").alias("vm"),
+        ),
+    )
 
 
 from kafka_clickhouse_implementation_spark.operators.stats_ext import (  # noqa: E402

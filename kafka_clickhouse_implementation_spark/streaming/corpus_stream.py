@@ -26,50 +26,28 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
-from kafka_clickhouse_implementation_spark.streaming.watermark import _stream_base
 
 _DOC_WIRE_SCHEMA = "doc_id long, text string"
 
 
 def document_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Spark-written JSON replay of `documents`, with every part file
-    then duplicated as a later-mtime ``dup-*.json``. The file source
-    processes files oldest-mtime-first, so under maxFilesPerTrigger=1
-    each document's duplicate arrives in a LATER micro-batch than its
-    original — the dedup state store must carry digests across batch
-    boundaries to collapse it (a self-union of one readStream cannot
-    test this: both legs advance in lockstep, landing the original and
-    its duplicate in the SAME batch). ``_DUP_READY`` — not Spark's
-    ``_SUCCESS`` — gates reuse, so a crash between the write and the
-    dup stamping can never leave a half-injected wire behind."""
-    base = _stream_base(sf_dir, "docwire2", table="documents")
-    wire = os.path.join(base, "wire")
-    ready = os.path.join(wire, "_DUP_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(wire, ignore_errors=True)
-        (
-            load(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartition(4)
-            .write.mode("overwrite")
-            .json(wire)
-        )
-        parts = sorted(
-            f for f in os.listdir(wire)
-            if f.startswith("part-") and f.endswith(".json")
-        )
-        latest = max(os.path.getmtime(os.path.join(wire, p)) for p in parts)
-        for i, p in enumerate(parts):
-            dup = os.path.join(wire, f"dup-{i:05d}.json")
-            shutil.copyfile(os.path.join(wire, p), dup)
-            stamp = latest + 60.0 + i
-            os.utime(dup, (stamp, stamp))
-        with open(ready, "w"):
-            pass
-    return wire, base
+    """The `documents` replay in doc_id order, 4 parts, with every part
+    arriving again as a ``dup-*.json`` after all the originals: under
+    maxFilesPerTrigger=1 each document's duplicate arrives in a LATER
+    micro-batch than its original, so the dedup state store must carry
+    digests across batch boundaries to collapse it (a self-union of one
+    readStream cannot test this: both legs advance in lockstep, landing
+    the original and its duplicate in the SAME batch)."""
+    once, _ = source_wire(
+        spark, sf_dir, "documents", "docwire", ("doc_id",), lambda d: d.select("doc_id", "text")
+    )
+    base = source_tagged_dir("docwire2", sf_dir, "documents")
+    return doubled_wire(once, os.path.join(base, "wire")), base
 
 
 @query(

@@ -164,9 +164,9 @@ def streaming_funnel_levels_ttl(
     )
 
 
-from kafka_clickhouse_implementation_spark.io import load  # noqa: E402
 from kafka_clickhouse_implementation_spark.operators.funnels import _FUNNEL_ORACLE  # noqa: E402
 from kafka_clickhouse_implementation_spark.registry import query  # noqa: E402
+from kafka_clickhouse_implementation_spark.sources.streams import source_wire  # noqa: E402
 from kafka_clickhouse_implementation_spark.streaming.drain import drain  # noqa: E402
 
 
@@ -179,32 +179,16 @@ WIRE_SCHEMA = "user_id long, event_id long, event_type string, e_us long"
 
 
 def ordered_event_wire(spark, sf_dir: str) -> tuple[str, str]:
-    """Spark-written ts-sorted JSON replay of `events` (no driver
-    collect; range-partitioned so file order == time order). Returns
+    """The `events` replay in (e_us, event_id) order, 4 parts. Returns
     (wire_dir, base_dir); the wire is immutable per SOURCE PARQUET
     IDENTITY (realpath + size + mtime via cachedirs — a driver-side
     testdata regeneration invalidates it) and shared by every stateful
     replay query. (`stateful2` flavor = wire format v2,
     micros-as-long.)"""
-    import os
-
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    base = source_tagged_dir("stateful2", sf_dir, "events")
-    wire_dir = os.path.join(base, "wire")
-    if not os.path.exists(os.path.join(wire_dir, "_SUCCESS")):
-        ev = load(spark, sf_dir, "events")
-        (
-            ev.select(
-                "user_id", "event_id", "event_type",
-                F.unix_micros("ts").alias("e_us"),
-            )
-            .repartitionByRange(4, "e_us", "event_id")
-            .sortWithinPartitions("e_us", "event_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-    return wire_dir, base
+    return source_wire(
+        spark, sf_dir, "events", "stateful2", ("e_us", "event_id"),
+        lambda ev: ev.select("user_id", "event_id", "event_type", F.unix_micros("ts").alias("e_us")),
+    )
 
 
 def wire_stream(

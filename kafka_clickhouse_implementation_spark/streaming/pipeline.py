@@ -35,7 +35,11 @@ from pyspark.sql import functions as F
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.plans.layout import read_rollup, write_rollup_batch
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import file_stream, write_wire_format
+from kafka_clickhouse_implementation_spark.sources.streams import (
+    file_stream,
+    wire_ready,
+    write_wire_format,
+)
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 
@@ -178,9 +182,8 @@ def q_stream_mv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(rollup_dir, ignore_errors=True)
     shutil.rmtree(checkpoint_dir, ignore_errors=True)
 
-    if not os.path.exists(os.path.join(wire_dir, "_SUCCESS")):
-        events = load(spark, sf_dir, "events")
-        write_wire_format(events, wire_dir)
+    if not wire_ready(wire_dir):
+        write_wire_format(load(spark, sf_dir, "events"), wire_dir)
     run_mv_pipeline(spark, wire_dir, rollup_dir, checkpoint_dir)
     return read_rollup(spark, rollup_dir)
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
     ordered_event_wire,
@@ -99,42 +100,6 @@ def q_stream_sum_map(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def interleaved_doubled_wire(wire_dir: str, base: str) -> str:
-    """Sibling wire dir where every ts-slice file appears twice, with
-    mtimes interleaved orig_0 < dup_0 < orig_1 < dup_1 < … — so under
-    maxFilesPerTrigger=1 each slice's duplicate arrives exactly one
-    micro-batch AFTER its original (cross-batch, unlike a self-union
-    whose legs advance in lockstep) while still inside the watermark
-    horizon (a dup file delayed past later slices would be dropped as
-    LATE data instead of exercising the dedup state lookup).
-    ``_DUP_READY`` gates reuse so a crash mid-copy never leaves a
-    half-built wire."""
-    import shutil
-    import time
-
-    dst = os.path.join(base, "wire_doubled")
-    ready = os.path.join(dst, "_DUP_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst)
-        parts = sorted(
-            f for f in os.listdir(wire_dir)
-            if f.startswith("part-") and f.endswith(".json")
-        )
-        now = time.time()
-        for i, p in enumerate(parts):
-            src = os.path.join(wire_dir, p)
-            orig = os.path.join(dst, p)
-            dup = os.path.join(dst, f"dup-{i:05d}.json")
-            shutil.copyfile(src, orig)
-            os.utime(orig, (now + 20.0 * i, now + 20.0 * i))
-            shutil.copyfile(src, dup)
-            os.utime(dup, (now + 20.0 * i + 10.0, now + 20.0 * i + 10.0))
-        with open(ready, "w"):
-            pass
-    return dst
-
-
 @query(
     "q_stream_dedup",
     # After exact-duplicate injection (every ts-slice file replayed
@@ -162,7 +127,10 @@ def q_stream_dedup(spark, sf_dir: str) -> DataFrame:
     ``dropDuplicates`` would not."""
     wire_dir, base = ordered_event_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_dedup")
-    doubled_dir = interleaved_doubled_wire(wire_dir, base)
+    # interleaved, not after every original: a dup delayed past later
+    # slices would be dropped as LATE data instead of exercising the
+    # dedup state lookup
+    doubled_dir = doubled_wire(wire_dir, os.path.join(base, "wire_doubled"), interleaved=True)
     doubled = wire_stream(spark, doubled_dir, max_files_per_trigger=1)
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]

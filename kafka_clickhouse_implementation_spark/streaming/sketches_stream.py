@@ -53,6 +53,7 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     K,
 )
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import source_wire
 from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
     _DOC_WIRE_SCHEMA,
     document_wire,
@@ -334,45 +335,17 @@ def q_stream_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch ordered fold exactly. This is the
     ClickHouse-combinator story (`exponentialMovingAverageState` /
     `-Merge`) for an operator whose state is a scalar, the cheapest
-    possible stateful streaming aggregate. Rides a dedicated ts-ranged
-    wire (the shared funnel wire carries no `value` column); the
-    doubles round-trip the JSON wire via Python float repr, which is
-    exact for IEEE doubles."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    base = source_tagged_dir("emawire1", sf_dir, "events")
-    wire_dir = os.path.join(base, "wire")
-    ready = os.path.join(wire_dir, "_WIRE_READY")
-    if not os.path.exists(ready):
-        import shutil
-        import time
-
-        shutil.rmtree(wire_dir, ignore_errors=True)
-        (
-            load(spark, sf_dir, "events")
-            .filter(F.col("user_id") < 100)
-            .select(
-                "user_id", "event_id", "value",
-                F.unix_micros("ts").alias("e_us"),
-            )
-            .repartitionByRange(4, "e_us", "event_id")
-            .sortWithinPartitions("e_us", "event_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-        # One Spark job writes all slices with ~equal mtimes, but the
-        # EMA fold is ORDER-SENSITIVE and the file source processes
-        # oldest-mtime-first — stamp strictly increasing mtimes in
-        # part-name (== time-range) order so batch order IS time order.
-        parts = sorted(
-            f for f in os.listdir(wire_dir)
-            if f.startswith("part-") and f.endswith(".json")
-        )
-        now = time.time()
-        for i, p in enumerate(parts):
-            os.utime(os.path.join(wire_dir, p), (now + 10.0 * i, now + 10.0 * i))
-        with open(ready, "w"):
-            pass
+    possible stateful streaming aggregate. Rides a dedicated wire in
+    (e_us, event_id) order (the shared funnel wire carries no `value`
+    column), so batch order is time order, which the ORDER-SENSITIVE
+    fold needs; the doubles round-trip the JSON wire via Python float
+    repr, which is exact for IEEE doubles."""
+    wire_dir, base = source_wire(
+        spark, sf_dir, "events", "emawire1", ("e_us", "event_id"),
+        lambda ev: ev.filter(F.col("user_id") < 100).select(
+            "user_id", "event_id", "value", F.unix_micros("ts").alias("e_us")
+        ),
+    )
     ckpt = os.path.join(base, "ckpt_ema")
     ev = (
         spark.readStream.schema("user_id long, event_id long, value double, e_us long")

@@ -39,6 +39,7 @@ from kafka_clickhouse_implementation_spark.operators.clustering import (
     _QUANT,
 )
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 _IVF_INGEST_ORACLE = f"""
@@ -63,24 +64,14 @@ FROM asgF GROUP BY cid
 
 
 def embedding_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """JSON replay of `embeddings` with the micro-quantized vector as
-    an array of longs (JSON round-trips longs losslessly; the floats
-    never cross the wire). 4 files → 4 micro-batches."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    base = source_tagged_dir("vecwire", sf_dir, "embeddings")
-    wire_dir = os.path.join(base, "wire")
-    if not os.path.exists(os.path.join(wire_dir, "_SUCCESS")):
-        emb = load(spark, sf_dir, "embeddings")
-        (
-            emb.select(
-                "vec_id", F.expr(f"transform(embedding, x -> {_QUANT})").alias("eq")
-            )
-            .repartitionByRange(4, "vec_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-    return wire_dir, base
+    """The `embeddings` replay in vec_id order, with the
+    micro-quantized vector as an array of longs (JSON round-trips longs
+    losslessly; the floats never cross the wire). 4 files → 4
+    micro-batches."""
+    return source_wire(
+        spark, sf_dir, "embeddings", "vecwire", ("vec_id",),
+        lambda emb: emb.select("vec_id", F.expr(f"transform(embedding, x -> {_QUANT})").alias("eq")),
+    )
 
 
 @query("q_stream_ivf_ingest", oracle=_IVF_INGEST_ORACLE)
@@ -220,41 +211,13 @@ FROM mem m LEFT JOIN pagg p ON p.cid = m.cid
 
 def embedding_wire_dup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The C119 embedding wire PLUS duplicate injection: every part
-    file copied as a later-mtime ``dup-*.json`` (the document_wire
-    mechanics — the file source processes oldest-mtime-first, so each
-    vector's duplicate arrives in a LATER micro-batch and only
-    cross-batch dedup state can collapse it). ``_DUP_READY`` gates
-    reuse so a crash mid-injection never leaves a half-built wire."""
-    import shutil
-
+    arrives again as a ``dup-*.json`` after all the originals, so each
+    vector's duplicate lands in a LATER micro-batch and only
+    cross-batch dedup state can collapse it."""
     from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
 
     base = source_tagged_dir("vecwiredup", sf_dir, "embeddings")
-    wire_dir = os.path.join(base, "wire")
-    ready = os.path.join(wire_dir, "_DUP_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(wire_dir, ignore_errors=True)
-        emb = load(spark, sf_dir, "embeddings")
-        (
-            emb.select(
-                "vec_id", F.expr(f"transform(embedding, x -> {_QUANT})").alias("eq")
-            )
-            .repartitionByRange(4, "vec_id")
-            .write.mode("overwrite")
-            .json(wire_dir)
-        )
-        parts = sorted(
-            f for f in os.listdir(wire_dir)
-            if f.startswith("part-") and f.endswith(".json")
-        )
-        latest = max(os.path.getmtime(os.path.join(wire_dir, p)) for p in parts)
-        for i, p in enumerate(parts):
-            dup = os.path.join(wire_dir, f"dup-{i:05d}.json")
-            shutil.copyfile(os.path.join(wire_dir, p), dup)
-            stamp = latest + 60.0 + i
-            os.utime(dup, (stamp, stamp))
-        with open(ready, "w"):
-            pass
+    wire_dir = doubled_wire(embedding_wire(spark, sf_dir)[0], os.path.join(base, "wire"))
     return wire_dir, base
 
 

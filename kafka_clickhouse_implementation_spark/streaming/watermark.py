@@ -48,16 +48,13 @@ unbounded stream.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
     streaming_funnel_levels_ttl,
@@ -73,70 +70,35 @@ TTL_US = 8 * 86400 * 1_000_000  # > max within-user gap at every sf
 TRUNCATE_DAYS_US = 12 * 86400 * 1_000_000
 
 
-def _stream_base(sf_dir: str, flavor: str, table: str = "events") -> str:
-    """Wire cache dir keyed by the SOURCE parquet's identity (size +
-    mtime, via cachedirs) so a driver-side testdata regeneration can
-    never replay a stale wire."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    return source_tagged_dir(flavor, sf_dir, table)
-
-
 def chunked_late_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """One JSON wire file per 7-day arrival chunk, mtimes strictly
-    increasing, plus a far-future flush sentinel as the last file (it
-    pushes the final watermark past every real window so every kept
-    window is emitted in append mode). Spark writes the data
-    (partitionBy on the chunk — one job, no driver collect); the
-    Python side only renames files and stamps mtimes."""
-    base = _stream_base(sf_dir, "latedrop1")
-    wire = os.path.join(base, "wire")
-    ready = os.path.join(base, "_WIRE_READY")
-    if os.path.exists(ready):
-        return wire, base
-    shutil.rmtree(base, ignore_errors=True)
-    staged = os.path.join(base, "staged")
-    ev = load(spark, sf_dir, "events").select(
-        F.expr(f"unix_micros(ts) div {CHUNK_US}").alias("chunk"),
-        "event_type",
-        F.when(
-            F.col("user_id") % 10 == 7,
-            F.unix_micros("ts") - F.lit(LATE_SHIFT_US),
+    """One JSON wire file per 7-day arrival chunk, in chunk order, plus
+    a far-future flush sentinel as the last file (it pushes the final
+    watermark past every real window so every kept window is emitted
+    in append mode). The sentinel is one more row, in a chunk of its
+    own 30 days past the max ARRIVAL time, so the one Spark write
+    produces it too."""
+
+    def rows(ev: DataFrame) -> DataFrame:
+        shifted = ev.select(
+            F.expr(f"unix_micros(ts) div {CHUNK_US}").alias("chunk"),
+            "event_type",
+            F.when(
+                F.col("user_id") % 10 == 7,
+                F.unix_micros("ts") - F.lit(LATE_SHIFT_US),
+            )
+            .otherwise(F.unix_micros("ts"))
+            .alias("e_us"),
         )
-        .otherwise(F.unix_micros("ts"))
-        .alias("e_us"),
-    )
-    # repartition by chunk => every chunk's rows sit in one task, so
-    # each chunk directory gets exactly one part file (a hash collision
-    # only makes one task write two directories, never splits one)
-    ev.repartition("chunk").write.partitionBy("chunk").mode("overwrite").json(staged)
-    os.makedirs(wire, exist_ok=True)
-    chunk_dirs = sorted(
-        glob.glob(os.path.join(staged, "chunk=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
-    )
-    mtime0 = 1_700_000_000
-    for i, d in enumerate(chunk_dirs):
-        dst = os.path.join(wire, f"chunk-{i:04d}.json")
-        with open(dst, "wb") as out:
-            for part in sorted(glob.glob(os.path.join(d, "part-*.json"))):
-                with open(part, "rb") as src:
-                    out.write(src.read())
-        os.utime(dst, (mtime0 + 10 * i,) * 2)
-    # flush sentinel: 30 days past the max ARRIVAL time
-    mx = (
-        load(spark, sf_dir, "events")
-        .agg(F.max(F.unix_micros("ts")).alias("mx"))
-        .first()["mx"]
-    )
-    flush = os.path.join(wire, f"chunk-{len(chunk_dirs):04d}.json")
-    with open(flush, "w") as f:
-        f.write(json.dumps({"event_type": "__flush", "e_us": mx + 30 * 86400 * 1_000_000}) + "\n")
-    os.utime(flush, (mtime0 + 10 * len(chunk_dirs),) * 2)
-    shutil.rmtree(staged, ignore_errors=True)
-    with open(ready, "w"):
-        pass
-    return wire, base
+        flush = ev.agg(
+            (F.max(F.unix_micros("ts")) + F.lit(30 * 86400 * 1_000_000)).alias("e_us")
+        ).select(
+            F.expr(f"e_us div {CHUNK_US}").alias("chunk"),
+            F.lit("__flush").alias("event_type"),
+            "e_us",
+        )
+        return shifted.unionByName(flush)
+
+    return source_wire(spark, sf_dir, "events", "latedrop1", ("e_us",), rows, split="chunk")
 
 
 @query(
@@ -210,35 +172,27 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def truncated_ttl_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """ts-ordered JSON wire (range-partitioned, no driver collect) of
-    `events` with the user_id%7==3 cohort truncated 12 days before
-    stream end — the cohort whose funnels the TTL must evict."""
-    base = _stream_base(sf_dir, "funnelttl1")
-    wire = os.path.join(base, "wire")
-    if os.path.exists(os.path.join(wire, "_SUCCESS")):
-        return wire, base
-    ev = load(spark, sf_dir, "events")
-    mx = ev.agg(F.max(F.unix_micros("ts")).alias("mx_us"))
-    kept = (
-        ev.crossJoin(F.broadcast(mx))
-        .filter(
-            ~(
-                (F.col("user_id") % 7 == 3)
-                & (F.unix_micros("ts") > F.col("mx_us") - F.lit(TRUNCATE_DAYS_US))
+    """The `events` replay in (e_us, event_id) order with the
+    user_id%7==3 cohort truncated 12 days before stream end — the
+    cohort whose funnels the TTL must evict."""
+
+    def kept(ev: DataFrame) -> DataFrame:
+        mx = ev.agg(F.max(F.unix_micros("ts")).alias("mx_us"))
+        return (
+            ev.crossJoin(F.broadcast(mx))
+            .filter(
+                ~(
+                    (F.col("user_id") % 7 == 3)
+                    & (F.unix_micros("ts") > F.col("mx_us") - F.lit(TRUNCATE_DAYS_US))
+                )
+            )
+            .select(
+                "user_id", "event_id", "event_type",
+                F.unix_micros("ts").alias("e_us"),
             )
         )
-        .select(
-            "user_id", "event_id", "event_type",
-            F.unix_micros("ts").alias("e_us"),
-        )
-    )
-    (
-        kept.repartitionByRange(4, "e_us", "event_id")
-        .sortWithinPartitions("e_us", "event_id")
-        .write.mode("overwrite")
-        .json(wire)
-    )
-    return wire, base
+
+    return source_wire(spark, sf_dir, "events", "funnelttl1", ("e_us", "event_id"), kept)
 
 
 @query(
