@@ -1,5 +1,6 @@
 """Source-identity-tagged temp cache directories for derived artifacts
-(stream replay wires, day-partitioned fact copies, interchange files).
+(stream replay wires, day-partitioned fact copies, interchange files),
+and the one build-once convention for computed result products.
 
 Every derived-on-disk artifact MUST be keyed by the identity of the
 parquet it was built from — realpath + size + mtime — not just the
@@ -9,13 +10,56 @@ encoding), and a path-keyed cache would have replayed STALE data into
 every hermetic streaming query, failing their oracles with no code at
 fault. A regeneration now changes the tag, so the cache rebuilds
 itself.
+
+A result product (a feature table, a clipped corpus, a tokenizer, a
+trained index's books) is built once per root and read many times:
+
+- ``publish_product(root, build, partition_by)`` returns at once if
+  ``root`` holds a published product. Otherwise it deletes ``root``
+  (whatever a failed build left there), calls ``build()`` for a
+  ``{name: DataFrame}`` dict and writes each table with Spark as
+  parquet under ``root/<name>`` (``partitionBy`` for the names in
+  ``partition_by``). Each table's schema is recorded in its
+  ``_schema.json`` (the ``plans.layout`` fact-table convention): what a
+  read with the frame's schema returns, partition columns typed from
+  their directory values as inference types them, with no footer
+  inference. The marker ``_PRODUCT_PUBLISHED`` is written last; it
+  names the tables and holds a fresh build id, so a root without it is
+  rebuilt from scratch on next use.
+- ``read_product(spark, root)`` returns every table of the published
+  product read with its recorded schema: no read-back runs a schema
+  inference job.
+- ``product_id(root)`` is the build id, or ``None`` while nothing is
+  published; state stamped with it (a maintained coded table, a
+  re-code) is invalidated by every rebuild.
+
+A product may sit inside another's root (the epoch-2 books, the unigram
+shards): the outer build deletes it with the root, and each reader
+reads only the tables its own marker names.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import shutil
 import tempfile
+import uuid
+from collections.abc import Callable
+from typing import TYPE_CHECKING
+
+from pyspark.sql import types as T
+
+from kafka_clickhouse_implementation_spark.plans.layout import (
+    record_schema,
+    recorded_schema,
+)
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+
+PUBLISHED = "_PRODUCT_PUBLISHED"
 
 
 def _source(sf_dir: str, table: str) -> tuple[str, str]:
@@ -29,8 +73,8 @@ def _source(sf_dir: str, table: str) -> tuple[str, str]:
 def source_tagged_dir(flavor: str, sf_dir: str, table: str) -> str:
     """Temp dir for an artifact derived from ``{sf_dir}/{table}.parquet``,
     whose name digests the source file's identity. A replay wire inside
-    it is ready when ``sources.streams.wire_ready`` says so; other
-    artifacts keep their own completion markers."""
+    it is ready when ``sources.streams.wire_ready`` says so, a product
+    when ``product_id`` returns its build id."""
     resolved, prefix = _source(sf_dir, table)
     st = os.stat(resolved)
     tag = hashlib.md5(
@@ -90,3 +134,48 @@ def purge_result_products(sf_dir: str | None = None) -> list[str]:
         shutil.rmtree(os.path.join(root, name), ignore_errors=True)
         purged.append(name)
     return purged
+
+
+def product_id(root: str) -> str | None:
+    """The build id of the product published under ``root``, or ``None``."""
+    try:
+        with open(os.path.join(root, PUBLISHED)) as f:
+            return json.load(f)["id"]
+    except (OSError, ValueError, KeyError):
+        return None
+
+
+def publish_product(
+    root: str,
+    build: Callable[[], dict[str, DataFrame]],
+    partition_by: dict[str, str] | None = None,
+) -> str:
+    """Build and publish the product under ``root`` unless it is
+    published already (see the module docstring); returns ``root``."""
+    if product_id(root) is not None:
+        return root
+    shutil.rmtree(root, ignore_errors=True)
+    tables = build()
+    for name, df in tables.items():
+        path = os.path.join(root, name)
+        part = (partition_by or {}).get(name)
+        writer = df.write.mode("overwrite")
+        (writer.partitionBy(part) if part else writer).parquet(path)
+        data = T.StructType([f for f in df.schema.fields if f.name != part])
+        record_schema(path, df.sparkSession.read.schema(data).parquet(path).schema)
+    tmp = os.path.join(root, PUBLISHED + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"id": uuid.uuid4().hex, "tables": list(tables)}, f)
+    os.replace(tmp, os.path.join(root, PUBLISHED))
+    return root
+
+
+def read_product(spark: SparkSession, root: str) -> dict[str, DataFrame]:
+    """Every table of the product published under ``root``, read with
+    its recorded schema."""
+    with open(os.path.join(root, PUBLISHED)) as f:
+        paths = [os.path.join(root, n) for n in json.load(f)["tables"]]
+    return {
+        os.path.basename(p): spark.read.schema(recorded_schema(p)).parquet(p)
+        for p in paths
+    }

@@ -203,10 +203,10 @@ def features_product(spark, sf_dir: str) -> DataFrame:
     consumers keep deriving features from the wire (their state IS the
     feature table), and every oracle replays the extraction from raw
     parquet, so a stale product hash-fails."""
-    import os
-
     from kafka_clickhouse_implementation_spark.cachedirs import (
         product_dir,
+        publish_product,
+        read_product,
     )
 
     # The flavor tag folds in the OPERATOR CONFIG (r15 advisory — the
@@ -219,12 +219,11 @@ def features_product(spark, sf_dir: str) -> DataFrame:
     cfg = hashlib.md5(
         f"{_FEATS_EXPR}|{_bucket('feat')}".encode()
     ).hexdigest()[:8]
-    out = product_dir(f"feats{N_BUCKETS}_{cfg}", sf_dir, "documents")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        doc_features(load(spark, sf_dir, "documents")).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return spark.read.parquet(out)
+    root = publish_product(
+        product_dir(f"feats{N_BUCKETS}_{cfg}", sf_dir, "documents"),
+        lambda: {"features": doc_features(load(spark, sf_dir, "documents"))},
+    )
+    return read_product(spark, root)["features"]
 
 
 def target_ids(docs: DataFrame) -> DataFrame:

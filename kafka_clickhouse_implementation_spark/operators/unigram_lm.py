@@ -759,31 +759,29 @@ def write_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> str:
     """Persist (pieces, seg) under one source-identity- AND
     config-tagged root (the r15 product-tag rule: a budget change must
     rebuild, not serve stale files); returns the root."""
-    import os
-
     from kafka_clickhouse_implementation_spark.cachedirs import (
         product_dir,
+        publish_product,
     )
 
-    root = product_dir(
-        f"unitok_r{UNI_EXPORT_ROUNDS}m{UNI_EXPORT_MULTI}L{UNI_L}",
-        sf_dir,
-        "documents",
-    )
-    dirs = {n: os.path.join(root, n) for n in ("pieces", "seg")}
-    if not all(
-        os.path.exists(os.path.join(d, "_SUCCESS")) for d in dirs.values()
-    ):
+    def build() -> dict[str, DataFrame]:
         words = _seed_words(load(spark, sf_dir, "documents"))
         _traj, seg, model = _em_rounds_from_words(
             words, rounds=UNI_EXPORT_ROUNDS, multi=UNI_EXPORT_MULTI
         )
-        model.join(
-            _spark_scores(model).withColumnRenamed("sc", "score_nano"),
-            "piece",
-        ).write.mode("overwrite").parquet(dirs["pieces"])
-        seg.write.mode("overwrite").parquet(dirs["seg"])
-    return root
+        pieces = model.join(
+            _spark_scores(model).withColumnRenamed("sc", "score_nano"), "piece"
+        )
+        return {"pieces": pieces, "seg": seg}
+
+    return publish_product(
+        product_dir(
+            f"unitok_r{UNI_EXPORT_ROUNDS}m{UNI_EXPORT_MULTI}L{UNI_L}",
+            sf_dir,
+            "documents",
+        ),
+        build,
+    )
 
 
 def _export_oracle() -> str:
@@ -821,11 +819,10 @@ def q_unigram_tokenizer_export(
     independent DuckDB replay of the full EM loop at the same budget.
     Tokenizer-family parity with C190: both tokenizer tiers now ship
     release artifacts, certified row-for-row."""
-    import os
+    from kafka_clickhouse_implementation_spark.cachedirs import read_product
 
-    root = write_unigram_tokenizer(spark, sf_dir)
-    pieces = spark.read.parquet(os.path.join(root, "pieces"))
-    seg = spark.read.parquet(os.path.join(root, "seg"))
+    tok = read_product(spark, write_unigram_tokenizer(spark, sf_dir))
+    pieces, seg = tok["pieces"], tok["seg"]
     use = (
         seg.select("w", "f", F.explode("segs").alias("piece"))
         .groupBy("piece")
@@ -879,13 +876,12 @@ def _unigram_pack_inputs(
     arrays (posexplode), the vocabulary is the ranked distinct pieces.
     Shared by the batch product (C194) and its streaming twin (C195) so
     both certify the same release artifact."""
-    import os
-
+    from kafka_clickhouse_implementation_spark.cachedirs import read_product
     from kafka_clickhouse_implementation_spark.pipelines.shards import (
         token_vocab,
     )
 
-    seg = spark.read.parquet(os.path.join(root, "seg"))
+    seg = read_product(spark, root)["seg"]
     wpieces = seg.select(
         "w", F.posexplode("segs").alias("pidx0", "piece")
     ).select(
@@ -897,34 +893,35 @@ def _unigram_pack_inputs(
 
 
 def unigram_shards_product(spark: SparkSession, sf_dir: str) -> str:
-    """Write the unigram-tokenized shard product under the C191 root
-    (shards/ partitioned by shard); returns the shards dir."""
+    """Write the unigram-tokenized shard product inside the C191 root
+    (``packed/shards``, partitioned by shard, so a tokenizer rebuild
+    deletes it too); returns the shards dir."""
     import os
 
+    from kafka_clickhouse_implementation_spark.cachedirs import publish_product
     from kafka_clickhouse_implementation_spark.pipelines.shards import (
         pack_sequences,
         wpieces_fits_broadcast,
     )
 
     root = write_unigram_tokenizer(spark, sf_dir)
-    shards_dir = os.path.join(root, "shards")
-    if not os.path.exists(os.path.join(shards_dir, "_SUCCESS")):
+
+    def build() -> dict[str, DataFrame]:
         wpieces, vocab = _unigram_pack_inputs(spark, root)
         docs = (
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 == 0)
             .select("doc_id", "source", "text")
         )
-        (
-            pack_sequences(
-                docs, wpieces, vocab,
-                wp_broadcast=wpieces_fits_broadcast(wpieces),
-            )
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(shards_dir)
+        shards = pack_sequences(
+            docs, wpieces, vocab, wp_broadcast=wpieces_fits_broadcast(wpieces)
         )
-    return shards_dir
+        return {"shards": shards}
+
+    packed = publish_product(
+        os.path.join(root, "packed"), build, partition_by={"shards": "shard"}
+    )
+    return os.path.join(packed, "shards")
 
 
 def _unigram_shards_oracle() -> str:
@@ -1008,24 +1005,9 @@ def q_token_shards_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     than {_MAX_WLEN} chars are outside the tokenizer's domain (module
     docstring) and are skipped by both engines; every doc still
     contributes its EOS."""
-    shards_dir = unigram_shards_product(spark, sf_dir)
-    return (
-        spark.read.option("basePath", shards_dir)
-        .parquet(shards_dir)
-        .select(
-            "seq_id",
-            F.size("tok_ids").cast("long").alias("n_tokens"),
-            "n_docs",
-            "first_doc",
-            "last_doc",
-            "sources",
-            F.md5(
-                F.concat_ws(
-                    ",", F.expr("transform(tok_ids, t -> CAST(t AS STRING))")
-                ).cast("binary")
-            ).alias("fp"),
-        )
-    )
+    from kafka_clickhouse_implementation_spark.pipelines.shards import read_shards
+
+    return read_shards(spark, unigram_shards_product(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------

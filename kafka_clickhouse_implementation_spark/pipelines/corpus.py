@@ -290,10 +290,10 @@ def neardup_pairs_product(
     frame is collision-bounded (banded candidates only, never n²) and
     consumers shuffle (doc_a, doc_b, jaccard) triples against id
     tables — never shingles or text."""
-    import os
-
     from kafka_clickhouse_implementation_spark.cachedirs import (
         product_dir,
+        publish_product,
+        read_product,
     )
     from kafka_clickhouse_implementation_spark.operators.minhash_portable import (
         BAND_ROWS,
@@ -301,19 +301,20 @@ def neardup_pairs_product(
         N_HASHES,
     )
 
-    flavor = (
-        f"neardup_{N_HASHES}x{BAND_ROWS}_t{int(JACCARD_T * 100)}_m{mod}"
-    )
-    out = product_dir(flavor, sf_dir, "documents")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build() -> dict[str, DataFrame]:
         if mod == 0:
             docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         else:
             docs = clipped_corpus(spark, sf_dir, mod=mod).select(
                 "doc_id", F.col("kept_text").alias("text")
             )
-        verified_pairs(docs).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+        return {"pairs": verified_pairs(docs)}
+
+    flavor = (
+        f"neardup_{N_HASHES}x{BAND_ROWS}_t{int(JACCARD_T * 100)}_m{mod}"
+    )
+    root = publish_product(product_dir(flavor, sf_dir, "documents"), build)
+    return read_product(spark, root)["pairs"]
 
 
 def _restrict_pairs(pairs: DataFrame, ids: DataFrame) -> DataFrame:
@@ -427,10 +428,10 @@ def clipped_corpus(spark: SparkSession, sf_dir: str, mod: int = 1) -> DataFrame:
     largest repeated cost at sf1 (~17 s per full-corpus consumer).
     Correctness unchanged: each consumer's oracle replays the clip
     from raw parquet, so a stale or corrupt product hash-fails."""
-    import os
-
     from kafka_clickhouse_implementation_spark.cachedirs import (
         product_dir,
+        publish_product,
+        read_product,
     )
     from kafka_clickhouse_implementation_spark.operators.corpus_ext import (
         substring_clip,
@@ -445,15 +446,17 @@ def clipped_corpus(spark: SparkSession, sf_dir: str, mod: int = 1) -> DataFrame:
         GRAM_STRIDE,
     )
 
-    out = product_dir(
-        f"clipped_g{GRAM_LEN}s{GRAM_STRIDE}_mod{mod}", sf_dir, "documents"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build() -> dict[str, DataFrame]:
         docs = load(spark, sf_dir, "documents")
         if mod != 1:
             docs = docs.filter(F.col("doc_id") % mod == 0)
-        substring_clip(docs).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+        return {"clipped": substring_clip(docs)}
+
+    root = publish_product(
+        product_dir(f"clipped_g{GRAM_LEN}s{GRAM_STRIDE}_mod{mod}", sf_dir, "documents"),
+        build,
+    )
+    return read_product(spark, root)["clipped"]
 
 
 def _clipped_oracle(sampled: bool = False) -> str:
@@ -648,10 +651,10 @@ def _corpus_export(
     a source-partitioned parquet product under cache tag ``tag``, and
     the certified result read back from the files (fp re-derived from
     text-on-disk) unioned with the keep/drop attribution."""
-    import os
-
     from kafka_clickhouse_implementation_spark.cachedirs import (
         product_dir,
+        publish_product,
+        read_product,
     )
     from kafka_clickhouse_implementation_spark.operators.quality_ext import (
         kn_score_bigrams,
@@ -692,9 +695,8 @@ def _corpus_export(
     kept_ids = kept_exact.join(losers, "doc_id", "left_anti").select("doc_id")
 
     # ---- the PRODUCT: kept docs + lineage, partitioned by source ----
-    out = product_dir(tag, sf_dir, "documents")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
+    def build() -> dict[str, DataFrame]:
+        kept = (
             flagged.join(kept_ids, "doc_id", "left_semi")
             .join(compdf, "doc_id", "left")
             .select(
@@ -706,10 +708,12 @@ def _corpus_export(
                 F.coalesce("comp", F.col("doc_id")).cast("long").alias("comp"),
                 "source",
             )
-            .write.mode("overwrite")
-            .partitionBy("source")
-            .parquet(out)
         )
+        return {"kept": kept}
+
+    root = publish_product(
+        product_dir(tag, sf_dir, "documents"), build, partition_by={"kept": "source"}
+    )
 
     # ---- KN provenance score over the clipped slice (model = full
     # raw corpus even half, the shared C142 recipe) ----
@@ -733,8 +737,7 @@ def _corpus_export(
 
     # ---- read-back audit: kept rows FROM THE FILES, fp re-derived ----
     kept_back = (
-        spark.read.option("basePath", out)
-        .parquet(out)
+        read_product(spark, root)["kept"]
         .select(
             "doc_id",
             "source",

@@ -84,7 +84,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_clickhouse_implementation_spark.cachedirs import product_dir
+from kafka_clickhouse_implementation_spark.cachedirs import (
+    product_dir,
+    product_id,
+    publish_product,
+    read_product,
+)
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.operators.bpe import (
     _oracle_sql_batched,
@@ -305,22 +310,46 @@ def shard_inputs(
     tokenizer to compute a mixture rollup. Correctness is unchanged —
     the oracle replays the full chain from raw parquet, so these
     tables are certified on every read."""
-    root = product_dir(f"shard_inputs_{_PRODUCT_TAG}", sf_dir, "documents")
-    dirs = {n: os.path.join(root, n) for n in ("kept", "wpieces", "vocab")}
-    if not all(
-        os.path.exists(os.path.join(d, "_SUCCESS")) for d in dirs.values()
-    ):
-        clean_kept_slice(spark, sf_dir).write.mode("overwrite").parquet(
-            dirs["kept"]
-        )
+
+    def build() -> dict[str, DataFrame]:
         wpieces = bpe_piece_table(spark, sf_dir).localCheckpoint()
-        wpieces.write.mode("overwrite").parquet(dirs["wpieces"])
-        token_vocab(wpieces).write.mode("overwrite").parquet(dirs["vocab"])
-    return (
-        spark.read.parquet(dirs["kept"]),
-        spark.read.parquet(dirs["wpieces"]),
-        spark.read.parquet(dirs["vocab"]),
+        return {
+            "kept": clean_kept_slice(spark, sf_dir),
+            "wpieces": wpieces,
+            "vocab": token_vocab(wpieces),
+        }
+
+    t = read_product(spark, publish_product(_inputs_root(sf_dir), build))
+    return t["kept"], t["wpieces"], t["vocab"]
+
+
+def _inputs_root(sf_dir: str) -> str:
+    return product_dir(f"shard_inputs_{_PRODUCT_TAG}", sf_dir, "documents")
+
+
+def _rederived(shards: DataFrame) -> DataFrame:
+    """Written sequences with n_tokens and the per-sequence content
+    fingerprint re-derived from the stored token arrays, so a corrupt
+    write hash-fails."""
+    return shards.select(
+        "seq_id",
+        F.size("tok_ids").cast("long").alias("n_tokens"),
+        "n_docs",
+        "first_doc",
+        "last_doc",
+        "sources",
+        F.md5(
+            F.concat_ws(
+                ",", F.expr("transform(tok_ids, t -> CAST(t AS STRING))")
+            ).cast("binary")
+        ).alias("fp"),
     )
+
+
+def read_shards(spark: SparkSession, shards_dir: str) -> DataFrame:
+    """The shard table a ``write_*shards`` builder returned, read back
+    through its product and re-derived (``_rederived``)."""
+    return _rederived(read_product(spark, os.path.dirname(shards_dir))["shards"])
 
 
 def wpieces_fits_broadcast(wpieces: DataFrame) -> bool:
@@ -488,27 +517,21 @@ def _assemble_sequences(stream: DataFrame, doc_expr: str) -> DataFrame:
 def write_token_shards(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the product: shards/ (parquet partitioned by shard)
     and vocab/ (piece, tok_id) under one source-tagged cache root.
-    Idempotent per testdata identity (each write gated on its own
-    _SUCCESS). Returns (shards_dir, vocab_dir)."""
-    root = product_dir(f"token_shards_{_PRODUCT_TAG}", sf_dir, "documents")
-    shards_dir = os.path.join(root, "shards")
-    vocab_dir = os.path.join(root, "vocab")
-    if not (
-        os.path.exists(os.path.join(shards_dir, "_SUCCESS"))
-        and os.path.exists(os.path.join(vocab_dir, "_SUCCESS"))
-    ):
+    Built once per testdata identity. Returns (shards_dir, vocab_dir)."""
+
+    def build() -> dict[str, DataFrame]:
         kept, wpieces, vocab = shard_inputs(spark, sf_dir)
-        vocab.write.mode("overwrite").parquet(vocab_dir)
-        (
-            pack_sequences(
-                kept, wpieces, vocab,
-                wp_broadcast=wpieces_fits_broadcast(wpieces),
-            )
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(shards_dir)
+        shards = pack_sequences(
+            kept, wpieces, vocab, wp_broadcast=wpieces_fits_broadcast(wpieces)
         )
-    return shards_dir, vocab_dir
+        return {"vocab": vocab, "shards": shards}
+
+    root = publish_product(
+        product_dir(f"token_shards_{_PRODUCT_TAG}", sf_dir, "documents"),
+        build,
+        partition_by={"shards": "shard"},
+    )
+    return os.path.join(root, "shards"), os.path.join(root, "vocab")
 
 
 @query("q_token_shards", oracle=_shards_oracle())
@@ -521,23 +544,7 @@ def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global packing order, every sequence's exact token content as
     written, and the doc-span/source-mix provenance."""
     shards_dir, _vocab_dir = write_token_shards(spark, sf_dir)
-    return (
-        spark.read.option("basePath", shards_dir)
-        .parquet(shards_dir)
-        .select(
-            "seq_id",
-            F.size("tok_ids").cast("long").alias("n_tokens"),
-            "n_docs",
-            "first_doc",
-            "last_doc",
-            "sources",
-            F.md5(
-                F.concat_ws(
-                    ",", F.expr("transform(tok_ids, t -> CAST(t AS STRING))")
-                ).cast("binary")
-            ).alias("fp"),
-        )
-    )
+    return read_shards(spark, shards_dir)
 
 
 @query("q_stream_token_shards", oracle=_shards_oracle())
@@ -1045,27 +1052,25 @@ def write_resampled_shards(spark: SparkSession, sf_dir: str) -> str:
     provenance in ORIGINAL doc ids. Idempotent per testdata identity;
     returns the shards dir. The vocab table is C177's (the mixture
     changes the data mix, never the tokenizer)."""
-    root = product_dir(
-        f"token_shards_resampled_{_PRODUCT_TAG}", sf_dir, "documents"
-    )
-    shards_dir = os.path.join(root, "shards")
-    if not os.path.exists(os.path.join(shards_dir, "_SUCCESS")):
+
+    def build() -> dict[str, DataFrame]:
         kept, wpieces, vocab = shard_inputs(spark, sf_dir)
         wp_bc = wpieces_fits_broadcast(wpieces)
         wq = resample_weights(
             kept, wpieces, vocab, _RESAMPLE_TARGET_PERMILLE, wp_bc
         )
         inst = resampled_instances(kept, wq).localCheckpoint()
-        (
-            pack_sequences(
-                inst, wpieces, vocab,
-                doc_expr="doc_id div 1000", wp_broadcast=wp_bc,
-            )
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(shards_dir)
+        shards = pack_sequences(
+            inst, wpieces, vocab, doc_expr="doc_id div 1000", wp_broadcast=wp_bc
         )
-    return shards_dir
+        return {"shards": shards}
+
+    root = publish_product(
+        product_dir(f"token_shards_resampled_{_PRODUCT_TAG}", sf_dir, "documents"),
+        build,
+        partition_by={"shards": "shard"},
+    )
+    return os.path.join(root, "shards")
 
 
 @query(
@@ -1083,24 +1088,7 @@ def q_token_shards_resampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     instance re-pack, every written sequence's exact token content,
     and the original-doc provenance spans — i.e., the file set a
     training job would actually mount, mixed to target."""
-    shards_dir = write_resampled_shards(spark, sf_dir)
-    return (
-        spark.read.option("basePath", shards_dir)
-        .parquet(shards_dir)
-        .select(
-            "seq_id",
-            F.size("tok_ids").cast("long").alias("n_tokens"),
-            "n_docs",
-            "first_doc",
-            "last_doc",
-            "sources",
-            F.md5(
-                F.concat_ws(
-                    ",", F.expr("transform(tok_ids, t -> CAST(t AS STRING))")
-                ).cast("binary")
-            ).alias("fp"),
-        )
-    )
+    return read_shards(spark, write_resampled_shards(spark, sf_dir))
 
 
 @query(
@@ -1246,7 +1234,7 @@ def stream_resampled_shards_upsert(
     """Drain the duplicate-injecting document wire through stateful
     dedup into an epoch-versioned sequence-shard table; returns the
     upsert table path. Maintained across calls (the C178 marker
-    recipe, stamped with the tokenizer product's build identity): an
+    recipe, stamped with the shard_inputs product's build id): an
     intact marker + table + checkpoint means the availableNow restart
     below processes only unseen wire files — zero on an unchanged
     wire.
@@ -1271,6 +1259,8 @@ def stream_resampled_shards_upsert(
     from kafka_clickhouse_implementation_spark.plans.upsert import (
         append_versions,
         read_latest,
+        stamp,
+        stamped_or_reset,
     )
     from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
         _DOC_WIRE_SCHEMA,
@@ -1282,34 +1272,15 @@ def stream_resampled_shards_upsert(
     wpieces = wpieces.localCheckpoint()
     vocab = vocab.localCheckpoint()
     wp_bc = wpieces_fits_broadcast(wpieces)
-    inputs_root = product_dir(
-        f"shard_inputs_{_PRODUCT_TAG}", sf_dir, "documents"
-    )
-    books_identity = "{}|{}".format(
-        inputs_root,
-        os.stat(os.path.join(inputs_root, "vocab", "_SUCCESS")).st_mtime_ns,
-    )
+    identity = product_id(_inputs_root(sf_dir))
 
     wire, base = document_wire(spark, sf_dir)
     path = os.path.join(base, "resampled_shards_upsert")
     ckpt = os.path.join(base, "ckpt_resampled_shards_upsert")
     docs_acc = os.path.join(base, "resampled_shards_docs_acc")
     marker = os.path.join(base, "resampled_shards_upsert_DRAINED")
-
-    def _marker_current() -> bool:
-        try:
-            with open(marker) as f:
-                return f.read().strip() == books_identity
-        except OSError:
-            return False
-
-    if not (
-        _marker_current() and os.path.isdir(path) and os.path.isdir(ckpt)
-    ):
-        for d in (path, ckpt, docs_acc):
-            shutil.rmtree(d, ignore_errors=True)
-        if os.path.exists(marker):
-            os.remove(marker)
+    if not stamped_or_reset(marker, identity, path, ckpt):
+        shutil.rmtree(docs_acc, ignore_errors=True)
 
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
 
@@ -1383,8 +1354,7 @@ def stream_resampled_shards_upsert(
         .select("doc_id", "text")
     )
     drain(spark, (deduped, upsert_batch, ckpt, "update"), resume=True)
-    with open(marker, "w") as f:
-        f.write(books_identity + "\n")
+    stamp(marker, identity)
     return path
 
 
@@ -1411,19 +1381,7 @@ def q_stream_shards_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = read_latest(spark, path, ("seq_id",), "version").filter(
         ~F.col("deleted")
     )
-    return live.select(
-        "seq_id",
-        F.size("tok_ids").cast("long").alias("n_tokens"),
-        "n_docs",
-        "first_doc",
-        "last_doc",
-        "sources",
-        F.md5(
-            F.concat_ws(
-                ",", F.expr("transform(tok_ids, t -> CAST(t AS STRING))")
-            ).cast("binary")
-        ).alias("fp"),
-    )
+    return _rederived(live)
 
 
 # ---------------------------------------------------------------------
@@ -1600,9 +1558,8 @@ def write_tokenizer(spark: SparkSession, sf_dir: str) -> str:
         _BATCH_SCHEMA,
     )
 
-    root = product_dir(f"tokenizer_{_PRODUCT_TAG}", sf_dir, "documents")
-    merges_dir = os.path.join(root, "merges")
-    if not os.path.exists(os.path.join(merges_dir, "_SUCCESS")):
+
+    def build() -> dict[str, DataFrame]:
         raw = load(spark, sf_dir, "documents")
         vocab_words = _symbolized_vocab(
             raw.select(F.explode(F.split("text", " ")).alias("w"))
@@ -1613,10 +1570,12 @@ def write_tokenizer(spark: SparkSession, sf_dir: str) -> str:
         traj, _final = _train_batched_full(
             spark, vocab_words, rounds=SHARD_BPE_ROUNDS, batch_n=SHARD_BATCH_N
         )
-        spark.createDataFrame(traj, _BATCH_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(merges_dir)
-    return merges_dir
+        return {"merges": spark.createDataFrame(traj, _BATCH_SCHEMA)}
+
+    root = publish_product(
+        product_dir(f"tokenizer_{_PRODUCT_TAG}", sf_dir, "documents"), build
+    )
+    return os.path.join(root, "merges")
 
 
 @query(
@@ -1635,7 +1594,7 @@ def q_tokenizer_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the artifact a tokenizer RELEASE ships; the shard products
     (C177/C184/C189) are its downstream consumers."""
     merges_dir = write_tokenizer(spark, sf_dir)
-    return spark.read.parquet(merges_dir).select(
+    return read_product(spark, os.path.dirname(merges_dir))["merges"].select(
         "merge_rank",
         "round",
         "left_sym",

@@ -135,7 +135,7 @@ def write_day_partitioned(
     out = df.withColumn(partition_col, F.date_format(F.col(ts_col), "yyyyMMdd"))
     schema = _table_schema(out, partition_col)
     if mode == "append":
-        recorded = _recorded_schema(path)
+        recorded = recorded_schema(path)
         if recorded is not None and not _same_columns(schema, recorded):
             raise ValueError(
                 f"append to {path}: columns {schema.simpleString()} differ from"
@@ -164,10 +164,7 @@ def write_day_partitioned(
         )
         out.parquet(path)
     if new_table:
-        tmp = os.path.join(path, SCHEMA_FILE + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(schema.json())
-        os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+        record_schema(path, schema)
 
 
 def _write_days(table, path: str, partition_col: str, order: list[str], int96: bool) -> None:
@@ -202,7 +199,17 @@ def _same_columns(a: T.StructType, b: T.StructType) -> bool:
     return a.simpleString() == b.simpleString()
 
 
-def _recorded_schema(path: str) -> T.StructType | None:
+def record_schema(path: str, schema: T.StructType) -> None:
+    """Record ``schema`` as the table at ``path``'s ``_schema.json``
+    (temp name, then rename)."""
+    tmp = os.path.join(path, SCHEMA_FILE + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(schema.json())
+    os.replace(tmp, os.path.join(path, SCHEMA_FILE))
+
+
+def recorded_schema(path: str) -> T.StructType | None:
+    """The schema recorded for the table at ``path``, or ``None``."""
     try:
         with open(os.path.join(path, SCHEMA_FILE)) as f:
             return T.StructType.fromJson(json.load(f))
@@ -213,7 +220,7 @@ def _recorded_schema(path: str) -> T.StructType | None:
 def read_day_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """The fact table, read with its recorded schema; a table without a
     record falls back to schema inference."""
-    schema = _recorded_schema(path)
+    schema = recorded_schema(path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
 

@@ -15,12 +15,52 @@ layout.py does for SummingMergeTree:
 At 100 TB: appends are blind writes; the read-time rank shuffles once
 on the key; compaction runs off-peak. For heavy update rates you'd
 partition by key-hash so compaction is per-partition incremental.
+
+A maintained table is derived from a published result product (the
+books it was coded with, the tokenizer it was packed with), so a
+finished drain stamps a marker file with that product's build id
+(``cachedirs.product_id``). ``stamped_or_reset`` keeps the table, its
+checkpoint and its marker while the stamp still matches; otherwise it
+deletes the marker, the markers stamped over the table, then the dirs,
+so the next drain rebuilds from scratch.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+
+def stamped_or_reset(
+    marker: str, identity: str, *dirs: str, dependents: tuple[str, ...] = ()
+) -> bool:
+    """True when ``marker`` is stamped with ``identity`` and every one of
+    ``dirs`` exists. Otherwise remove ``marker`` and the ``dependents``
+    (markers certifying state inside these dirs), then the dirs, and
+    return False; markers go first, so a reset cut short never leaves a
+    stamp over a half-deleted table."""
+    try:
+        with open(marker) as f:
+            if f.read().strip() == identity and all(map(os.path.isdir, dirs)):
+                return True
+    except OSError:
+        pass
+    for m in (marker, *dependents):
+        if os.path.exists(m):
+            os.remove(m)
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return False
+
+
+def stamp(marker: str, identity: str) -> None:
+    """Stamp ``marker`` with ``identity`` (temp name, then rename)."""
+    with open(marker + ".tmp", "w") as f:
+        f.write(identity + "\n")
+    os.replace(marker + ".tmp", marker)
 
 
 def append_versions(updates: DataFrame, path: str) -> None:

@@ -147,33 +147,23 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB table evolves in place without rewriting history. The
     aggregation counts both generations and sums the new column, all
     value-hash-checked against the original parquet."""
-    base = _fmt_base(sf_dir, "evolve")
-    v1, v2 = os.path.join(base, "gen=1"), os.path.join(base, "gen=2")
-    ready = os.path.join(base, "_GEN_READY")
-    ev = load(spark, sf_dir, "events")
-    half = ev.count() // 2
-    if not os.path.exists(ready):
-        (
-            ev.filter(F.col("event_id") < half)
-            .select("event_id", "event_type")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(v1)
+    from kafka_clickhouse_implementation_spark.cachedirs import publish_product
+
+    def build() -> dict[str, DataFrame]:
+        ev = load(spark, sf_dir, "events")
+        half = ev.count() // 2
+        v1 = ev.filter(F.col("event_id") < half).select("event_id", "event_type")
+        v2 = ev.filter(F.col("event_id") >= half).select(
+            "event_id",
+            "event_type",
+            F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
         )
-        (
-            ev.filter(F.col("event_id") >= half)
-            .select(
-                "event_id",
-                "event_type",
-                F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("cents"),
-            )
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(v2)
-        )
-        with open(ready, "w"):
-            pass
-    merged = spark.read.option("mergeSchema", "true").parquet(v1, v2)
+        return {"gen=1": v1.repartition(2), "gen=2": v2.repartition(2)}
+
+    base = publish_product(_fmt_base(sf_dir, "evolve"), build)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(base, "gen=1"), os.path.join(base, "gen=2")
+    )
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("cents").alias("n_with_value"),

@@ -30,6 +30,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_clickhouse_implementation_spark.cachedirs import (
+    product_id,
+    publish_product,
+    read_product,
+    source_tagged_dir,
+)
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.operators.clustering import (
     ITERS,
@@ -214,8 +220,6 @@ def embedding_wire_dup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     arrives again as a ``dup-*.json`` after all the originals, so each
     vector's duplicate lands in a LATER micro-batch and only
     cross-batch dedup state can collapse it."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
     base = source_tagged_dir("vecwiredup", sf_dir, "embeddings")
     wire_dir = doubled_wire(embedding_wire(spark, sf_dir)[0], os.path.join(base, "wire"))
     return wire_dir, base
@@ -363,41 +367,53 @@ from kafka_clickhouse_implementation_spark.operators.clustering import (  # noqa
 )
 
 
+def _coarse_book(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The coarse quantizer trained on the lake vectors, as (cid, dim, x)
+    rows."""
+    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
+    _asg, asg_carr, _cents = _lloyd_arrays(spark, eq, ivf_k(eq.count()), ITERS)
+    return spark.createDataFrame(
+        [(cid, d, x) for cid, arr in asg_carr for d, x in enumerate(arr)],
+        schema="cid LONG, dim INT, x LONG",
+    )
+
+
+def _ivfpq_books(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The IVF-PQ books trained on the lake vectors: the coarse quantizer
+    and the PQ assignment and ADC codebooks."""
+    coarse = _coarse_book(spark, sf_dir)
+    _pts, _codes, cdf, acdf = _pq_train(spark, sf_dir, pq_k=PQ_K16)
+    return {"coarse_asg_book": coarse, "pq_asg_book": acdf, "pq_adc_book": cdf}
+
+
 def ann_index_product(spark: SparkSession, sf_dir: str) -> str:
     """Train (once per testdata identity) and persist the C167 models;
     returns the product root. Searches LOAD these — no retraining."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    root = source_tagged_dir("ann_index", sf_dir, "embeddings")
-    marker = os.path.join(root, "_MODELS_READY")
-    if not os.path.exists(marker):
-        eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-        k = ivf_k(eq.count())
-        _asg, asg_carr, _cents = _lloyd_arrays(spark, eq, k, ITERS)
-        coarse = spark.createDataFrame(
-            [(cid, d, x) for cid, arr in asg_carr for d, x in enumerate(arr)],
-            schema="cid LONG, dim INT, x LONG",
-        )
-        _pts, _codes, cdf, acdf = _pq_train(spark, sf_dir, pq_k=PQ_K16)
-        coarse.write.mode("overwrite").parquet(
-            os.path.join(root, "coarse_asg_book")
-        )
-        acdf.write.mode("overwrite").parquet(os.path.join(root, "pq_asg_book"))
-        cdf.write.mode("overwrite").parquet(os.path.join(root, "pq_adc_book"))
-        with open(marker, "w"):
-            pass
-    return root
+    return publish_product(
+        source_tagged_dir("ann_index", sf_dir, "embeddings"),
+        lambda: _ivfpq_books(spark, sf_dir),
+    )
 
 
 def _load_coarse_book(spark: SparkSession, root: str):
-    """coarse_asg_book parquet -> the [(cid, [x..])] driver-side form
+    """The books' coarse_asg_book -> the [(cid, [x..])] driver-side form
     _code_points/_assign_np take (model-sized collect)."""
     by_cid: dict[int, dict[int, int]] = {}
-    for r in spark.read.parquet(os.path.join(root, "coarse_asg_book")).collect():
+    for r in read_product(spark, root)["coarse_asg_book"].collect():
         by_cid.setdefault(int(r.cid), {})[int(r.dim)] = int(r.x)
     return sorted(
         (cid, [dims[d] for d in sorted(dims)]) for cid, dims in by_cid.items()
     )
+
+
+def _coding_books(spark: SparkSession, root: str):
+    """(coarse book, PQ assignment book) of the IVF-PQ books under
+    ``root``, in the driver-side forms ``_coded_index_rows`` takes."""
+    pq_book = [
+        (int(r.sub), int(r.cid), int(r.dim), int(r.c))
+        for r in read_product(spark, root)["pq_asg_book"].collect()
+    ]
+    return _load_coarse_book(spark, root), pq_book
 
 
 def _pq_code_rows(vecs: DataFrame, pq_book) -> DataFrame:
@@ -449,73 +465,43 @@ def _coded_index_rows(vecs: DataFrame, coarse_carr, pq_book) -> DataFrame:
     return coarse_rows.unionByName(_pq_code_rows(vecs, pq_book))
 
 
-def stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Run the duplicate-injecting embedding wire through stateful
-    dedup + the loaded-book coding projection in UPDATE mode,
-    foreachBatch-appending (vec_id, sub, cid, version=epoch) parquet
-    row versions — the C168 recipe on the coded-vector table. Returns
-    (index product root, coded-table path)."""
-    import shutil
+def _maintain_codes(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str,
+    table: str,
+    code,
+    dependents: tuple[str, ...] = (),
+) -> str:
+    """Drain the duplicate-injecting embedding wire through stateful
+    vec_id dedup and ``code`` (a stateless coding projection against the
+    books loaded from ``root``) in UPDATE mode, foreachBatch-appending
+    its rows with version=epoch to ``<wire base>/<table>``; returns that
+    path.
 
+    Incremental maintenance (r12 advisory): a completed drain stamps
+    ``<table>_DRAINED`` with the books' build id; with the stamp, table
+    and checkpoint intact, the availableNow restart processes only wire
+    files the checkpoint has not seen (zero on an unchanged wire). Codes
+    from one set of books searched against rebuilt books would be
+    silently wrong (r13 advisory), so any other state rebuilds the table
+    from scratch and first drops the ``dependents`` markers under the
+    wire base, which certify rows in it."""
     from kafka_clickhouse_implementation_spark.plans.upsert import (
         append_versions,
+        stamp,
+        stamped_or_reset,
     )
 
-    root = ann_index_product(spark, sf_dir)
-    coarse_carr = _load_coarse_book(spark, root)
-    pq_book = [
-        (int(r.sub), int(r.cid), int(r.dim), int(r.c))
-        for r in spark.read.parquet(os.path.join(root, "pq_asg_book")).collect()
-    ]
     wire, base = embedding_wire_dup(spark, sf_dir)
-    path = os.path.join(base, "ann_codes_upsert")
-    ckpt = os.path.join(base, "ckpt_ann_codes_upsert")
-    # Incremental maintenance (r12 advisory): a completed prior drain
-    # leaves a marker; with marker + table + checkpoint intact, the
-    # availableNow restart below processes only wire files the
-    # checkpoint has not seen (zero on an unchanged wire) — the
-    # MAINTAINED-index path the C178 narrative describes, and what the
-    # bench row measures after the first build. Only a missing marker
-    # (first build, or a crash mid-drain) triggers the from-scratch
-    # rebuild.
-    #
-    # The marker is STAMPED with the index product's build identity
-    # (r13 advisory): the coded table's rows were produced by one
-    # specific set of trained books, so a rebuilt product under root
-    # (e.g. a manually cleared model cache retrained after this drain)
-    # must invalidate the codes — old-book codes searched against
-    # newly trained books would be silently wrong. The identity is the
-    # _MODELS_READY marker's mtime: ann_index_product touches it
-    # exactly once per product build.
-    books_identity = (
-        f"{root}|{os.stat(os.path.join(root, '_MODELS_READY')).st_mtime_ns}"
+    path = os.path.join(base, table)
+    ckpt = os.path.join(base, f"ckpt_{table}")
+    marker = os.path.join(base, f"{table}_DRAINED")
+    identity = product_id(root)
+    stamped_or_reset(
+        marker, identity, path, ckpt,
+        dependents=tuple(os.path.join(base, d) for d in dependents),
     )
-    marker = os.path.join(base, "ann_codes_upsert_DRAINED")
-
-    def _marker_current() -> bool:
-        try:
-            with open(marker) as f:
-                return f.read().strip() == books_identity
-        except OSError:
-            return False
-
-    if not (
-        _marker_current()
-        and os.path.isdir(path)
-        and os.path.isdir(ckpt)
-    ):
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if os.path.exists(marker):
-            os.remove(marker)
-        # (r15 advisory) the epoch-2 recode marker describes rows in
-        # the table being invalidated — a surviving marker after this
-        # rebuild would make ann_index_retrain skip the re-code and
-        # search epoch-2 books against a table holding no epoch-2
-        # rows. Drop it with the table it certifies.
-        recode_marker = os.path.join(base, "ann_codes_recode_EPOCH2")
-        if os.path.exists(recode_marker):
-            os.remove(recode_marker)
     deduped = (
         spark.readStream.schema("vec_id long, eq array<long>")
         .option("maxFilesPerTrigger", "1")
@@ -528,18 +514,23 @@ def stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]
             bdf.withColumn("version", F.lit(epoch_id).cast("long")), path
         )
 
-    drain(
-        spark,
-        (_coded_index_rows(deduped, coarse_carr, pq_book), upsert_batch, ckpt, "update"),
-        resume=True,
+    drain(spark, (code(deduped), upsert_batch, ckpt, "update"), resume=True)
+    stamp(marker, identity)
+    return path
+
+
+def stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Maintain the coded-vector table of (vec_id, sub, cid, version)
+    row versions from the embedding wire against the loaded IVF-PQ books
+    (the C168 recipe, ``_maintain_codes``). Returns (index product root,
+    coded-table path)."""
+    root = ann_index_product(spark, sf_dir)
+    coarse_carr, pq_book = _coding_books(spark, root)
+    path = _maintain_codes(
+        spark, sf_dir, root, "ann_codes_upsert",
+        lambda vecs: _coded_index_rows(vecs, coarse_carr, pq_book),
+        dependents=("ann_codes_recode_EPOCH2",),
     )
-    # Preserve the marker's mtime on a no-op incremental drain: the
-    # mtime is the epoch-1 table's BUILD identity, folded into the
-    # recode marker's identity below (r15 advisory) — rewriting it
-    # every call would force a spurious epoch-2 re-code per run.
-    if not _marker_current():
-        with open(marker, "w") as f:
-            f.write(books_identity + "\n")
     return root, path
 
 
@@ -552,19 +543,8 @@ def q_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared _ivfpq_search plan, and the UNCHANGED C167 oracle: one hash
     certifies persisted == trained, maintained == batch-coded, and the
     whole search end to end."""
-    from kafka_clickhouse_implementation_spark.plans.upsert import read_latest
-
     root, path = stream_ann_index_upsert(spark, sf_dir)
-    latest = read_latest(spark, path, ("vec_id", "sub"), "version").localCheckpoint()
-    asg = latest.filter(F.col("sub") == -1).select("vec_id", "cid")
-    codes = latest.filter(F.col("sub") >= 0).select(
-        F.col("sub").cast("int").alias("sub"), "vec_id", "cid"
-    )
-    cdf = spark.read.parquet(os.path.join(root, "pq_adc_book"))
-    coarse_carr = _load_coarse_book(spark, root)
-    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-    pts = _split_subspaces(_pts_long(spark, sf_dir))
-    return _ivfpq_search(spark, eq, pts, coarse_carr, asg, codes, cdf)
+    return _search_maintained(spark, sf_dir, root, path)
 
 
 # ---------------------------------------------------------------------
@@ -612,24 +592,10 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-identical to the full-index replay; a pytest additionally
     compacts the markers in physically (compact_versions drop_keys)
     and asserts compacted-plain-read == marker-anti-join read."""
-    from kafka_clickhouse_implementation_spark.plans.upsert import read_latest
-
     root, path = stream_ann_index_upsert(spark, sf_dir)
-    marks = index_delete_markers(spark, sf_dir)
-    latest = (
-        read_latest(spark, path, ("vec_id", "sub"), "version")
-        .join(F.broadcast(marks), "vec_id", "left_anti")
-        .localCheckpoint()
+    return _search_maintained(
+        spark, sf_dir, root, path, marks=index_delete_markers(spark, sf_dir)
     )
-    asg = latest.filter(F.col("sub") == -1).select("vec_id", "cid")
-    codes = latest.filter(F.col("sub") >= 0).select(
-        F.col("sub").cast("int").alias("sub"), "vec_id", "cid"
-    )
-    cdf = spark.read.parquet(os.path.join(root, "pq_adc_book"))
-    coarse_carr = _load_coarse_book(spark, root)
-    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-    pts = _split_subspaces(_pts_long(spark, sf_dir))
-    return _ivfpq_search(spark, eq, pts, coarse_carr, asg, codes, cdf)
 
 
 # ---------------------------------------------------------------------
@@ -698,7 +664,7 @@ def _search_maintained(
     codes = latest.filter(F.col("sub") >= 0).select(
         F.col("sub").cast("int").alias("sub"), "vec_id", "cid"
     )
-    cdf = spark.read.parquet(os.path.join(books_dir, "pq_adc_book"))
+    cdf = read_product(spark, books_dir)["pq_adc_book"]
     coarse_carr = _load_coarse_book(spark, books_dir)
     eq = _eq_arrays(spark, sf_dir).localCheckpoint()
     pts = _split_subspaces(_pts_long(spark, sf_dir))
@@ -710,59 +676,22 @@ def ann_index_retrain(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     per product identity), re-code every lake vector against them, and
     append the codes at RETRAIN_VERSION_BASE. Returns (epoch2 books
     dir, coded-table path)."""
+    from kafka_clickhouse_implementation_spark.plans.upsert import (
+        append_versions,
+        stamp,
+        stamped_or_reset,
+    )
+
     root, path = stream_ann_index_upsert(spark, sf_dir)
-    ep2 = os.path.join(root, "epoch2")
-    marker = os.path.join(ep2, "_MODELS_READY")
-    if not os.path.exists(marker):
-        os.makedirs(ep2, exist_ok=True)
-        eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-        k = ivf_k(eq.count())
-        _asg, asg_carr, _cents = _lloyd_arrays(spark, eq, k, ITERS)
-        coarse = spark.createDataFrame(
-            [(cid, d, x) for cid, arr in asg_carr for d, x in enumerate(arr)],
-            schema="cid LONG, dim INT, x LONG",
-        )
-        _pts, _codes, cdf, acdf = _pq_train(spark, sf_dir, pq_k=PQ_K16)
-        coarse.write.mode("overwrite").parquet(
-            os.path.join(ep2, "coarse_asg_book")
-        )
-        acdf.write.mode("overwrite").parquet(os.path.join(ep2, "pq_asg_book"))
-        cdf.write.mode("overwrite").parquet(os.path.join(ep2, "pq_adc_book"))
-        with open(marker, "w"):
-            pass
-    recode_marker = os.path.join(
-        os.path.dirname(path), "ann_codes_recode_EPOCH2"
-    )
-    # The recode marker certifies epoch-2 rows IN one specific build of
-    # the epoch-1 coded table, so its identity folds in the DRAINED
-    # marker's mtime (stable across no-op incremental drains, new on
-    # every from-scratch rebuild) alongside the epoch-2 books' own
-    # identity (r15 advisory — belt to the invalidation-branch delete).
-    drained = os.path.join(os.path.dirname(path), "ann_codes_upsert_DRAINED")
-    ep2_identity = (
-        f"{ep2}|{os.stat(marker).st_mtime_ns}"
-        f"|{os.stat(drained).st_mtime_ns}"
-    )
-
-    def _recode_current() -> bool:
-        try:
-            with open(recode_marker) as f:
-                return f.read().strip() == ep2_identity
-        except OSError:
-            return False
-
-    if not _recode_current():
-        from kafka_clickhouse_implementation_spark.plans.upsert import (
-            append_versions,
-        )
-
-        coarse_carr = _load_coarse_book(spark, ep2)
-        pq_book = [
-            (int(r.sub), int(r.cid), int(r.dim), int(r.c))
-            for r in spark.read.parquet(
-                os.path.join(ep2, "pq_asg_book")
-            ).collect()
-        ]
+    ep2 = publish_product(os.path.join(root, "epoch2"), lambda: _ivfpq_books(spark, sf_dir))
+    # The recode marker certifies epoch-2 rows IN the coded table: it is
+    # stamped with the epoch-2 books' build id, and every from-scratch
+    # rebuild of the table drops it first (a dependent of the table's
+    # drain marker, r15 advisory).
+    recode_marker = os.path.join(os.path.dirname(path), "ann_codes_recode_EPOCH2")
+    identity = product_id(ep2)
+    if not stamped_or_reset(recode_marker, identity):
+        coarse_carr, pq_book = _coding_books(spark, ep2)
         vecs = _eq_arrays(spark, sf_dir).localCheckpoint()
         append_versions(
             _coded_index_rows(vecs, coarse_carr, pq_book).withColumn(
@@ -770,8 +699,7 @@ def ann_index_retrain(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ),
             path,
         )
-        with open(recode_marker, "w") as f:
-            f.write(ep2_identity + "\n")
+        stamp(recode_marker, identity)
     return ep2, path
 
 
@@ -818,8 +746,8 @@ def q_ann_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats, against the UNCHANGED C196 oracle — one hash certifies
 # persisted models == trained models AND stream-maintained codes ==
 # batch codes, the C178 statement on the second quantizer family.
-# Incremental maintenance, marker identity, and invalidation follow
-# stream_ann_index_upsert line for line.
+# Incremental maintenance, marker identity, and invalidation are
+# stream_ann_index_upsert's (one _maintain_codes).
 # ---------------------------------------------------------------------
 
 from kafka_clickhouse_implementation_spark.operators.clustering import (  # noqa: E402
@@ -833,26 +761,13 @@ from kafka_clickhouse_implementation_spark.operators.clustering import (  # noqa
 def ann_sq8_index_product(spark: SparkSession, sf_dir: str) -> str:
     """Train (once per testdata identity) and persist the C196 models;
     returns the product root."""
-    from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
-
-    root = source_tagged_dir("ann_sq8_index", sf_dir, "embeddings")
-    marker = os.path.join(root, "_MODELS_READY")
-    if not os.path.exists(marker):
-        eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-        k = ivf_k(eq.count())
-        _asg, asg_carr, _cents = _lloyd_arrays(spark, eq, k, ITERS)
-        coarse = spark.createDataFrame(
-            [(cid, d, x) for cid, arr in asg_carr for d, x in enumerate(arr)],
-            schema="cid LONG, dim INT, x LONG",
-        )
-        stats = _sq8_train(_pts_long(spark, sf_dir))
-        coarse.write.mode("overwrite").parquet(
-            os.path.join(root, "coarse_asg_book")
-        )
-        stats.write.mode("overwrite").parquet(os.path.join(root, "sq8_stats"))
-        with open(marker, "w"):
-            pass
-    return root
+    return publish_product(
+        source_tagged_dir("ann_sq8_index", sf_dir, "embeddings"),
+        lambda: {
+            "coarse_asg_book": _coarse_book(spark, sf_dir),
+            "sq8_stats": _sq8_train(_pts_long(spark, sf_dir)),
+        },
+    )
 
 
 def _sq8_code_array_rows(
@@ -887,72 +802,46 @@ def _sq8_code_array_rows(
 def _load_sq8_stats(spark: SparkSession, root: str) -> list[tuple[int, int, int]]:
     return sorted(
         (int(r.dim), int(r.mn), int(r.mx))
-        for r in spark.read.parquet(os.path.join(root, "sq8_stats")).collect()
+        for r in read_product(spark, root)["sq8_stats"].collect()
     )
 
 
 def stream_ann_sq8_upsert(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """The C178 upsert recipe on the SQ8 coded table: duplicate-
-    injecting embedding wire → stateful dedup → loaded-book coding →
-    foreachBatch append of (vec_id, cid, codes, version=epoch) row
-    versions. Returns (product root, coded-table path)."""
-    import shutil
-
-    from kafka_clickhouse_implementation_spark.plans.upsert import (
-        append_versions,
-    )
-
+    """The C178 upsert recipe on the SQ8 coded table (``_maintain_codes``):
+    (vec_id, cid, codes, version=epoch) row versions coded against the
+    loaded SQ8 books. Returns (product root, coded-table path)."""
     root = ann_sq8_index_product(spark, sf_dir)
     coarse_carr = _load_coarse_book(spark, root)
     stats_rows = _load_sq8_stats(spark, root)
-    wire, base = embedding_wire_dup(spark, sf_dir)
-    path = os.path.join(base, "ann_sq8_upsert")
-    ckpt = os.path.join(base, "ckpt_ann_sq8_upsert")
-    books_identity = (
-        f"{root}|{os.stat(os.path.join(root, '_MODELS_READY')).st_mtime_ns}"
+    path = _maintain_codes(
+        spark, sf_dir, root, "ann_sq8_upsert",
+        lambda vecs: _sq8_code_array_rows(vecs, coarse_carr, stats_rows),
     )
-    marker = os.path.join(base, "ann_sq8_upsert_DRAINED")
-
-    def _marker_current() -> bool:
-        try:
-            with open(marker) as f:
-                return f.read().strip() == books_identity
-        except OSError:
-            return False
-
-    if not (
-        _marker_current()
-        and os.path.isdir(path)
-        and os.path.isdir(ckpt)
-    ):
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        if os.path.exists(marker):
-            os.remove(marker)
-    deduped = (
-        spark.readStream.schema("vec_id long, eq array<long>")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
-        .dropDuplicates(["vec_id"])
-    )
-
-    def upsert_batch(bdf: DataFrame, epoch_id: int) -> None:
-        append_versions(
-            bdf.withColumn("version", F.lit(epoch_id).cast("long")), path
-        )
-
-    drain(
-        spark,
-        (
-            _sq8_code_array_rows(deduped, coarse_carr, stats_rows), upsert_batch,
-            ckpt, "update",
-        ),
-        resume=True,
-    )
-    if not _marker_current():
-        with open(marker, "w") as f:
-            f.write(books_identity + "\n")
     return root, path
+
+
+def _sq8_search_maintained(
+    spark: SparkSession, sf_dir: str, marks: DataFrame | None = None
+) -> DataFrame:
+    """The shared C197/C198 read path: the maintained SQ8 codes resolved
+    latest-per-key, optionally without delete-marked keys, exploded into
+    the shared _sq8_search plan with the loaded books."""
+    from kafka_clickhouse_implementation_spark.plans.upsert import read_latest
+
+    root, path = stream_ann_sq8_upsert(spark, sf_dir)
+    latest = read_latest(spark, path, ("vec_id",), "version")
+    if marks is not None:
+        latest = latest.join(F.broadcast(marks), "vec_id", "left_anti")
+    latest = latest.localCheckpoint()
+    asg = latest.select("vec_id", "cid")
+    codes_long = latest.select(
+        "vec_id", F.posexplode("codes").alias("dim", "code")
+    )
+    stats = read_product(spark, root)["sq8_stats"]
+    coarse_carr = _load_coarse_book(spark, root)
+    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
+    pts = _pts_long(spark, sf_dir)
+    return _sq8_search(spark, eq, pts, coarse_carr, asg, codes_long, stats)
 
 
 @query("q_ann_sq8_index", oracle=_ivfsq8_oracle())
@@ -966,19 +855,7 @@ def q_ann_sq8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted == trained, maintained == batch-coded, and the whole
     decode-on-read search end to end — the C178 artifact statement on
     the quantizer family docs/ANN_SQ8.json measured at its ceiling."""
-    from kafka_clickhouse_implementation_spark.plans.upsert import read_latest
-
-    root, path = stream_ann_sq8_upsert(spark, sf_dir)
-    latest = read_latest(spark, path, ("vec_id",), "version").localCheckpoint()
-    asg = latest.select("vec_id", "cid")
-    codes_long = latest.select(
-        "vec_id", F.posexplode("codes").alias("dim", "code")
-    )
-    stats = spark.read.parquet(os.path.join(root, "sq8_stats"))
-    coarse_carr = _load_coarse_book(spark, root)
-    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-    pts = _pts_long(spark, sf_dir)
-    return _sq8_search(spark, eq, pts, coarse_carr, asg, codes_long, stats)
+    return _sq8_search_maintained(spark, sf_dir)
 
 
 @query(
@@ -996,21 +873,6 @@ def q_ann_sq8_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and SQ stats are untouched). One hash certifies deleted vec_ids
     leave the results while survivor ranking is bit-identical — the
     delete-wave statement now holds on BOTH quantizer families."""
-    from kafka_clickhouse_implementation_spark.plans.upsert import read_latest
-
-    root, path = stream_ann_sq8_upsert(spark, sf_dir)
-    marks = index_delete_markers(spark, sf_dir)
-    latest = (
-        read_latest(spark, path, ("vec_id",), "version")
-        .join(F.broadcast(marks), "vec_id", "left_anti")
-        .localCheckpoint()
+    return _sq8_search_maintained(
+        spark, sf_dir, marks=index_delete_markers(spark, sf_dir)
     )
-    asg = latest.select("vec_id", "cid")
-    codes_long = latest.select(
-        "vec_id", F.posexplode("codes").alias("dim", "code")
-    )
-    stats = spark.read.parquet(os.path.join(root, "sq8_stats"))
-    coarse_carr = _load_coarse_book(spark, root)
-    eq = _eq_arrays(spark, sf_dir).localCheckpoint()
-    pts = _pts_long(spark, sf_dir)
-    return _sq8_search(spark, eq, pts, coarse_carr, asg, codes_long, stats)

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 from kafka_clickhouse_implementation_spark.plans.upsert import (
     append_versions,
     compact_versions,
     read_latest,
+    stamp,
+    stamped_or_reset,
 )
 
 
@@ -94,3 +98,28 @@ def test_index_delete_read_path_matches_compacted(spark, tmp_path):
     assert not any(
         vid % DELETE_MOD == DELETE_RES for vid, _ in plain_rows
     )
+
+
+def test_stamp_keeps_or_resets_a_maintained_table(tmp_path):
+    """A matching stamp with every dir present keeps them; a stamp of
+    another product build, or a missing dir, removes the marker and the
+    dependent markers, then the dirs."""
+    table, ckpt = tmp_path / "t", tmp_path / "ckpt"
+    marker, dep = str(tmp_path / "t_DRAINED"), str(tmp_path / "t_RECODED")
+
+    def lay_down(identity):
+        for d in (table, ckpt):
+            os.makedirs(d, exist_ok=True)
+        stamp(marker, identity)
+        stamp(dep, "other")
+
+    lay_down("build-1")
+    assert stamped_or_reset(marker, "build-1", str(table), str(ckpt), dependents=(dep,))
+    assert table.is_dir() and os.path.exists(dep)
+    assert not stamped_or_reset(marker, "build-2", str(table), str(ckpt), dependents=(dep,))
+    assert not any(os.path.exists(p) for p in (table, ckpt, marker, dep))
+
+    lay_down("build-1")
+    os.rmdir(ckpt)
+    assert not stamped_or_reset(marker, "build-1", str(table), str(ckpt), dependents=(dep,))
+    assert not any(os.path.exists(p) for p in (table, marker, dep))

@@ -122,10 +122,11 @@ def test_ann_index_upsert_idempotent_and_equals_batch_codes(spark):
 
 def test_ann_index_product_loads_without_retraining(spark):
     """C178: once the product exists, ann_index_product is a pure
-    path lookup (the _MODELS_READY marker gates training), and the
+    path lookup (the published product's marker gates training), and the
     persisted books round-trip to the exact in-query trained models."""
     import os
 
+    from kafka_clickhouse_implementation_spark.cachedirs import product_id
     from kafka_clickhouse_implementation_spark.operators.clustering import (
         PQ_K16,
         _pq_train,
@@ -137,7 +138,7 @@ def test_ann_index_product_loads_without_retraining(spark):
     )
 
     root = ann_index_product(spark, SF_DIR)
-    assert os.path.exists(os.path.join(root, "_MODELS_READY"))
+    assert product_id(root) is not None
     eq = _eq_arrays(spark, SF_DIR).localCheckpoint()
     _asg, asg_carr, _cents = _lloyd_arrays(spark, eq, ivf_k(eq.count()), ITERS)
     assert _load_coarse_book(spark, root) == asg_carr

@@ -113,9 +113,10 @@ def main() -> None:
         _pts_long,
         _split_subspaces,
     )
+    from kafka_clickhouse_implementation_spark.cachedirs import read_product
     from kafka_clickhouse_implementation_spark.streaming.vector_stream import (
         _coded_index_rows,
-        _load_coarse_book,
+        _coding_books,
         ann_index_product,
     )
     from pyspark.sql import Window
@@ -156,19 +157,13 @@ def main() -> None:
 
     def run_index(label: str, books_src_dir: str) -> None:
         root = ann_index_product(spark, books_src_dir)
-        coarse_carr = _load_coarse_book(spark, root)
-        pq_book = [
-            (int(r.sub), int(r.cid), int(r.dim), int(r.c))
-            for r in spark.read.parquet(
-                os.path.join(root, "pq_asg_book")
-            ).collect()
-        ]
+        coarse_carr, pq_book = _coding_books(spark, root)
         coded = _coded_index_rows(eq, coarse_carr, pq_book).localCheckpoint()
         asg = coded.filter(F.col("sub") == -1).select("vec_id", "cid")
         codes = coded.filter(F.col("sub") >= 0).select(
             F.col("sub").cast("int").alias("sub"), "vec_id", "cid"
         )
-        cdf = spark.read.parquet(os.path.join(root, "pq_adc_book"))
+        cdf = read_product(spark, root)["pq_adc_book"]
         cells = {}
         for nprobe in SWEEP_NPROBE:
             for short_r in SWEEP_SHORT_R:

@@ -47,6 +47,10 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from kafka_clickhouse_implementation_spark.io import load  # noqa: E402
 from kafka_clickhouse_implementation_spark.session import get_spark  # noqa: E402
+from kafka_clickhouse_implementation_spark.sources.streams import (  # noqa: E402
+    wire_ready,
+    write_wire,
+)
 from kafka_clickhouse_implementation_spark.streaming.funnel import (  # noqa: E402
     WIRE_SCHEMA,
     streaming_funnel_levels,
@@ -72,34 +76,28 @@ N_WIRE_FILES = 8
 FILES_PER_TRIGGER = 2  # -> 4 micro-batches per run
 
 
+def _replicated(rows: DataFrame, id_col: str, repl: int) -> DataFrame:
+    """``rows`` ``repl`` times, ``id_col`` offset per copy so duplicates
+    stay distinct rows."""
+    n = rows.count()
+    copies = [rows.withColumn(id_col, F.col(id_col) + F.lit(i * n)) for i in range(repl)]
+    out = copies[0]
+    for c in copies[1:]:
+        out = out.unionAll(c)
+    return out
+
+
 def build_wire(spark, sf_dir: str, repl: int) -> str:
     """events replicated ``repl``x (event_ids offset so duplicates stay
     distinct rows) as an 8-file ts-ranged JSON wire."""
     wire = os.path.join(BASE, f"wire_r{repl}")
-    if os.path.exists(os.path.join(wire, "_SUCCESS")):
-        return wire
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.unix_micros("ts").alias("e_us")
-    )
-    n = ev.count()
-    copies = [
-        ev.select(
-            "user_id",
-            (F.col("event_id") + F.lit(i * n)).alias("event_id"),
-            "event_type",
-            "e_us",
+    if not wire_ready(wire):
+        ev = load(spark, sf_dir, "events").select(
+            "user_id", "event_id", "event_type", F.unix_micros("ts").alias("e_us")
         )
-        for i in range(repl)
-    ]
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionAll(c)
-    (
-        out.repartitionByRange(N_WIRE_FILES, "e_us", "event_id")
-        .sortWithinPartitions("e_us", "event_id")
-        .write.mode("overwrite")
-        .json(wire)
-    )
+        write_wire(
+            _replicated(ev, "event_id", repl), wire, ("e_us", "event_id"), files=N_WIRE_FILES
+        )
     return wire
 
 
@@ -120,23 +118,9 @@ def build_doc_wire(spark, sf_dir: str, repl: int) -> str:
     texts — so the distinct-chunk set (the dedup state domain) stays
     constant while the wire row count scales."""
     wire = os.path.join(BASE, f"docwire_r{repl}")
-    if os.path.exists(os.path.join(wire, "_SUCCESS")):
-        return wire
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    n = d.count()
-    copies = [
-        d.select((F.col("doc_id") + F.lit(i * n)).alias("doc_id"), "text")
-        for i in range(repl)
-    ]
-    out = copies[0]
-    for c in copies[1:]:
-        out = out.unionAll(c)
-    (
-        out.repartitionByRange(N_WIRE_FILES, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .json(wire)
-    )
+    if not wire_ready(wire):
+        d = load(spark, sf_dir, "documents").select("doc_id", "text")
+        write_wire(_replicated(d, "doc_id", repl), wire, ("doc_id",), files=N_WIRE_FILES)
     return wire
 
 
