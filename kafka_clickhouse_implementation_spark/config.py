@@ -41,8 +41,3 @@ SINK_SETTINGS: dict = {
     # parquet; row-group size serves the same skipping role.
     "parquet_rowgroup_bytes": 128 * 1024 * 1024,
 }
-
-# Streaming source selector: "kafka" needs a live broker; "file" replays
-# JSON lines in the reference wire format (FIXTURES.md §C); "rate" is a
-# synthetic load generator.
-STREAM_SOURCE: str = os.environ.get("SPARK_GRAFT_STREAM_SOURCE", "file")

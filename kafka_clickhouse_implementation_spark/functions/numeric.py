@@ -40,23 +40,3 @@ def dsum(col: Column, scale: int = 2) -> Column:
     """Deterministic, engine-portable sum of a double expression:
     decimal-accumulate, round the DECIMAL, cast to double once."""
     return F.round(F.sum(col.cast(DEC)), scale).cast("double")
-
-
-def davg(col: Column) -> Column:
-    """Deterministic mean: decimal sum rounded at scale 4 (keeps the
-    unscaled value < 2^53 so the decimal→double cast is exact-identical
-    in both engines), then IEEE-divide by count. The quotient itself is
-    deliberately NOT rounded — see module docstring."""
-    return F.round(F.sum(col.cast(DEC)), 4).cast("double") / F.count(col.cast(DEC))
-
-
-def oracle_dsum(expr: str, scale: int = 2) -> str:
-    """The DuckDB-side twin of dsum for building oracle SQL."""
-    return f"CAST(round(sum(CAST({expr} AS DECIMAL(28,8))), {scale}) AS DOUBLE)"
-
-
-def oracle_davg(expr: str) -> str:
-    return (
-        f"(CAST(round(sum(CAST({expr} AS DECIMAL(28,8))), 4) AS DOUBLE)"
-        f" / count(CAST({expr} AS DECIMAL(28,8))))"
-    )

@@ -262,11 +262,6 @@ def dcast(expr: str, dialect: str = "spark") -> str:
     return f"(CASE WHEN {expr} < 0 THEN -{mag} ELSE {mag} END)"
 
 
-def dcast_py(v: int) -> float:
-    """Reference: Python's int->float IS correctly rounded."""
-    return float(v)
-
-
 # pure-Python references for pytest pinning (same algorithm, evaluated
 # by the CPython float engine — a THIRD independent IEEE implementation)
 def pexp_neg_py(x: float) -> float:

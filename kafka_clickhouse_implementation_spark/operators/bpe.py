@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
 
 # Number of learned merges. At the test corpus's 31-word vocabulary
 # the pair table never exhausts inside 12 rounds (guarded in pytest);
@@ -781,17 +782,12 @@ def q_stream_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAM_THROUGHPUT.json); the word state is vocabulary-sized."""
     import os
 
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
     vocab_counts = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
         .select(F.explode(F.split("text", " ")).alias("w"))
         .filter("w <> ''")

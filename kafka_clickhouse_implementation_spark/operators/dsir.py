@@ -57,6 +57,7 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
 )
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
 
 N_BUCKETS = 4096  # hashed feature space (first 3 md5 nibbles)
 TOP_N = 20  # selected documents returned
@@ -364,10 +365,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     features == independent DuckDB replay."""
     import os
 
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
@@ -375,9 +373,7 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch C155 — only readStream + stateful dedup are streaming-specific,
     # so the two feature extractions cannot drift
     deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
     )
     feat_state = doc_features(deduped)

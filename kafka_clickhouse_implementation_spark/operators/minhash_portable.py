@@ -253,15 +253,6 @@ N_SIM_BITS = 16
 _HEX = "0123456789abcdef"
 
 
-def _simhash_bits_expr() -> str:
-    """SQL expression fragments shared verbatim by both engines:
-    nibble k of md5(token) via instr('0123..f', substr(h, k+1, 1))-1;
-    bit b of nibble via (nibble div 2^b) % 2."""
-    return (
-        "instr('" + _HEX + "', substr(h, CAST(j / 4 AS INT) + 1, 1)) - 1"
-    )
-
-
 @query(
     "q_simhash_portable",
     oracle=f"""

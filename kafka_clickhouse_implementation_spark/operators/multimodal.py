@@ -619,10 +619,6 @@ def decode_audio(payload: bytes) -> dict:
     raise NotImplementedError("compressed audio decode requires soundfile/ffmpeg — not available")
 
 
-def sample_video_frames(payload: bytes, every_n: int = 30) -> "object":
-    raise NotImplementedError("video frame sampling requires ffmpeg — not available")
-
-
 def fake_features(payload: bytes, n: int = 4) -> list[float]:
     """Deterministic stand-in for a feature extractor: n floats derived
     from the sha256 of the payload. Keeps the full pipeline testable."""

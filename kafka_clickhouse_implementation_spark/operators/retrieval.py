@@ -59,6 +59,7 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
 from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
 
 QT_TOTAL = 12  # query terms drawn from the corpus
 QT_PER = 3  # terms per query -> QT_TOTAL / QT_PER queries
@@ -275,19 +276,14 @@ def q_stream_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     any divergence (or a dedup-state failure) hash-fails loudly."""
     import os
 
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     # the streaming frame runs through the SAME doc_tf helper as batch
     # C150 — only readStream + stateful dedup are streaming-specific
     deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
     )
     tf_state = doc_tf(deduped)
@@ -347,13 +343,8 @@ def _wire_doc_count(spark: SparkSession, wire: str) -> DataFrame:
     on a corpus with an empty/whitespace-only document and diverges
     from the oracle's count(*) FROM documents — r11 advisory). The
     wire is at-least-once, so distinct-over-the-files is exact."""
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-    )
-
     return (
-        spark.read.schema(_DOC_WIRE_SCHEMA)
-        .json(wire)
+        read_wire(spark, wire, batch=True)
         .select("doc_id")
         .distinct()
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -374,10 +365,7 @@ def stream_index_upsert(spark: SparkSession, sf_dir: str, project, tag: str) -> 
     from kafka_clickhouse_implementation_spark.plans.upsert import (
         append_versions,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
@@ -385,9 +373,7 @@ def stream_index_upsert(spark: SparkSession, sf_dir: str, project, tag: str) -> 
     ckpt = os.path.join(base, f"ckpt_{tag}_upsert")
     shutil.rmtree(path, ignore_errors=True)
     deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
     )
 
@@ -624,10 +610,7 @@ def q_stream_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings == independent DuckDB replay."""
     import os
 
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
@@ -637,9 +620,7 @@ def q_stream_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrival groupBy are streaming-specific, so the two positional
     # projections cannot drift
     deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
     )
     pos_state = (

@@ -81,6 +81,7 @@ from kafka_clickhouse_implementation_spark.functions.portable_math import (
 from kafka_clickhouse_implementation_spark import gate
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
 
 UNI_ROUNDS = 3  # EM rounds in the declared trajectory
 UNI_L = 4  # max piece length
@@ -644,17 +645,12 @@ def q_stream_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized — both the C138-measured guarantees."""
     import os
 
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     wire, base = document_wire(spark, sf_dir)
     vocab_counts = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .dropDuplicates(["doc_id"])
         .select(F.explode(F.split("text", " ")).alias("w"))
         .filter(f"w <> '' AND length(w) <= {_MAX_WLEN}")
@@ -1052,17 +1048,12 @@ def q_stream_token_shards_unigram(
         pack_sequences,
         wpieces_fits_broadcast,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
     wire, base = document_wire(spark, sf_dir)
     deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .filter(F.col("doc_id") % 10 == 0)  # the C194 slice
         .dropDuplicates(["doc_id"])
         .select("doc_id", "text")

@@ -108,6 +108,7 @@ from kafka_clickhouse_implementation_spark.operators.minhash_portable import (
 )
 from kafka_clickhouse_implementation_spark.plans.prefix import ranged_prefix
 from kafka_clickhouse_implementation_spark.registry import query
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
 
 SEQ_LEN = 128  # tokens per packed training sequence
 N_SHARDS = 8  # shard = seq_id % N_SHARDS (the write's partition key)
@@ -275,6 +276,38 @@ def clean_kept_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.col("kept_text").alias("text")
     )
     return _clean_kept_clipped(clipped)
+
+
+def _wire_slice(spark: SparkSession, wire: str, files_per_trigger: int) -> DataFrame:
+    """The doc_id % SHARD_SLICE_MOD slice of the document wire as a
+    stream, deduplicated on doc_id in the state store."""
+    return (
+        read_wire(spark, wire, files_per_trigger)
+        .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
+        .dropDuplicates(["doc_id"])
+        .select("doc_id", "text")
+    )
+
+
+def _streamed_kept(spark: SparkSession, sf_dir: str, table: str, ckpt: str) -> DataFrame:
+    """clean_kept over the streamed slice (the -State twins' input): the
+    deduplicated wire slice drained into ``table`` (checkpoint ``ckpt``)
+    beside the document wire, with ``source`` (absent from the wire)
+    joined back from the table by doc_id."""
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
+    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
+
+    wire, base = document_wire(spark, sf_dir)
+    # append-mode FILE drain (r16, guide §5): the memory sink collected
+    # every deduped document's TEXT to the driver and the downstream
+    # join re-parallelized it; the parquet drain writes the identical
+    # appended rows from the executors.
+    docs = drain_table(
+        spark, _wire_slice(spark, wire, 4),
+        os.path.join(base, table), os.path.join(base, ckpt), mode="append",
+    )
+    src = load(spark, sf_dir, "documents").select("doc_id", "source")
+    return clean_kept(docs.join(src, "doc_id").localCheckpoint()).localCheckpoint()
 
 
 def bpe_piece_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,35 +596,7 @@ def q_stream_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the streaming stages are the C152 dedup state + one
     drain; everything downstream is the certified C177 plan."""
-    import os
-
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
-    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
-
-    wire, base = document_wire(spark, sf_dir)
-    deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
-        .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "text")
-    )
-    # append-mode FILE drain (r16, guide §5): the memory sink collected
-    # every deduped document's TEXT to the driver and the downstream
-    # join re-parallelized it; the parquet drain writes the identical
-    # appended rows from the executors.
-    docs = drain_table(
-        spark, deduped,
-        os.path.join(base, "shard_docs_table"),
-        os.path.join(base, "ckpt_shard_docs"), mode="append",
-    )
-    src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = docs.join(src, "doc_id").localCheckpoint()
-    kept = clean_kept(docs).localCheckpoint()
+    kept = _streamed_kept(spark, sf_dir, "shard_docs_table", "ckpt_shard_docs")
     # the tokenizer products are raw-corpus artifacts (train once,
     # encode everything) — load them; only the KEPT SET must come from
     # the wire, that's what the -State twin certifies.
@@ -1109,30 +1114,7 @@ def q_stream_mixture_resampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the streaming stages are the C152 dedup state + one
     drain; everything downstream is the certified C181 plan."""
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
-    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
-
-    wire, base = document_wire(spark, sf_dir)
-    deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
-        .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "text")
-    )
-    # append-mode FILE drain (r16): see q_stream_token_shards
-    docs = drain_table(
-        spark, deduped,
-        os.path.join(base, "resample_docs_table"),
-        os.path.join(base, "ckpt_resample_docs"), mode="append",
-    )
-    src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = docs.join(src, "doc_id").localCheckpoint()
-    kept = clean_kept(docs).localCheckpoint()
+    kept = _streamed_kept(spark, sf_dir, "resample_docs_table", "ckpt_resample_docs")
     _kept_cached, wpieces, vocab = shard_inputs(spark, sf_dir)
     return _resampled_mixture_rollup(
         kept, wpieces, vocab, _RESAMPLE_TARGET_PERMILLE,
@@ -1262,10 +1244,7 @@ def stream_resampled_shards_upsert(
         stamp,
         stamped_or_reset,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     _kept_unused, wpieces, vocab = shard_inputs(spark, sf_dir)
@@ -1345,15 +1324,7 @@ def stream_resampled_shards_upsert(
         )
         append_versions(out, path)
 
-    deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "2")
-        .json(wire)
-        .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "text")
-    )
-    drain(spark, (deduped, upsert_batch, ckpt, "update"), resume=True)
+    drain(spark, (_wire_slice(spark, wire, 2), upsert_batch, ckpt, "update"), resume=True)
     stamp(marker, identity)
     return path
 
@@ -1639,30 +1610,7 @@ def q_stream_shards_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. tests/test_token_shards.py pins that the wire actually
     re-delivers duplicates (the dedup state is load-bearing) and that
     the streamed pack equals the batch pack row for row."""
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
-    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
-
-    wire, base = document_wire(spark, sf_dir)
-    deduped = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
-        .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "text")
-    )
-    # append-mode FILE drain (r16): see q_stream_token_shards
-    docs = drain_table(
-        spark, deduped,
-        os.path.join(base, "resample_docs_table"),
-        os.path.join(base, "ckpt_resample_docs"), mode="append",
-    )
-    src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = docs.join(src, "doc_id").localCheckpoint()
-    kept = clean_kept(docs).localCheckpoint()
+    kept = _streamed_kept(spark, sf_dir, "resample_docs_table", "ckpt_resample_docs")
     _kept_cached, wpieces, vocab = shard_inputs(spark, sf_dir)
     wp_bc = wpieces_fits_broadcast(wpieces)
     wq, inst_rows = resampled_token_stream(

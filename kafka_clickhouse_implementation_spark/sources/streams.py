@@ -14,7 +14,7 @@ downstream pipeline is identical for all three.
 
 Every hermetic replay wire in the package is written by
 :func:`write_wire` (or copied by :func:`doubled_wire`), which own the
-three parts of the replay contract:
+four parts of the replay contract:
 
 - **key order**: rows sorted by the caller's keys, in at most ``files``
   contiguous key ranges, named ``part-00000.json``… in key order;
@@ -24,7 +24,12 @@ three parts of the replay contract:
   in key order;
 - **readiness**: :data:`WIRE_MARKER` is written last, so a failed build
   leaves no ready wire, and a directory without it (an interrupted
-  build, or a wire an earlier version marked otherwise) is rebuilt.
+  build, or a wire an earlier version marked otherwise) is rebuilt;
+- **schema**: the written columns are recorded next to the parts
+  (``plans.layout.record_schema``) before the marker, and every wire
+  is read by :func:`read_wire` with that record: the columns are
+  declared once, by the code that writes them, and never inferred. A
+  marked wire without a record (an earlier version's) is rebuilt.
 """
 
 from __future__ import annotations
@@ -36,10 +41,12 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
 from kafka_clickhouse_implementation_spark.config import KAFKA_SETTINGS
 from kafka_clickhouse_implementation_spark.io import load
+from kafka_clickhouse_implementation_spark.plans.layout import record_schema, recorded_schema
 from kafka_clickhouse_implementation_spark.schemas import QUEUE_WIRE_SCHEMA
 
 
@@ -89,20 +96,6 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     )
 
 
-def get_stream(spark: SparkSession, source: str | None = None, **kw) -> DataFrame:
-    if source is None:
-        from kafka_clickhouse_implementation_spark.config import STREAM_SOURCE
-
-        source = STREAM_SOURCE
-    if source == "kafka":
-        return kafka_stream(spark, **kw)
-    if source == "file":
-        return file_stream(spark, **kw)
-    if source == "rate":
-        return rate_stream(spark, **kw)
-    raise ValueError(f"unknown stream source {source!r}")
-
-
 def write_wire_format(events: DataFrame, out_dir: str, partitions: int = 4) -> None:
     """S1 — the producer path (kafka+clickhouse.md:38-52) without a
     broker: serialize rows to the JSONEachRow wire format, replayed in
@@ -123,8 +116,24 @@ _STAMP_STEP_S = 10.0
 
 
 def wire_ready(out_dir: str) -> bool:
-    """Whether ``out_dir`` holds a published wire."""
-    return os.path.exists(os.path.join(out_dir, WIRE_MARKER))
+    """Whether ``out_dir`` holds a published wire with its schema record."""
+    marked = os.path.exists(os.path.join(out_dir, WIRE_MARKER))
+    return marked and recorded_schema(out_dir) is not None
+
+
+def read_wire(
+    spark: SparkSession, wire: str, files_per_trigger: int | None = None, batch: bool = False
+) -> DataFrame:
+    """The published wire ``wire`` as a stream, read with the schema its
+    writer recorded, ``files_per_trigger`` files per micro-batch when
+    given; with ``batch``, all of it as one batch frame."""
+    schema = recorded_schema(wire)
+    if schema is None:
+        raise ValueError(f"{wire} has no recorded wire schema")
+    reader = (spark.read if batch else spark.readStream).schema(schema)
+    if files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
+    return reader.json(wire)
 
 
 def _publish(out_dir: str, files: Sequence[str]) -> None:
@@ -149,7 +158,7 @@ def write_wire(
     one Spark write sorted by ``keys`` and cut into at most ``files``
     contiguous key ranges. With ``split`` (an integer column) each
     value of that column gets one part instead, in value order, and
-    the column itself is not written."""
+    the column itself is neither written nor recorded."""
     shutil.rmtree(out_dir, ignore_errors=True)
     if split is None:
         ranged = rows.repartitionByRange(files, *keys).sortWithinPartitions(*keys)
@@ -175,6 +184,7 @@ def write_wire(
             shutil.rmtree(path)
         elif path not in parts:
             os.remove(path)
+    record_schema(out_dir, T.StructType([f for f in rows.schema.fields if f.name != split]))
     _publish(out_dir, parts)
 
 
@@ -214,6 +224,7 @@ def doubled_wire(src_dir: str, out_dir: str, interleaved: bool = False) -> str:
         shutil.copyfile(os.path.join(src_dir, n), orig)
         shutil.copyfile(os.path.join(src_dir, n), dup)
     order = [f for pair in zip(origs, dups) for f in pair] if interleaved else origs + dups
+    record_schema(out_dir, recorded_schema(src_dir))
     _publish(out_dir, order)
     return out_dir
 

@@ -34,7 +34,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from kafka_clickhouse_implementation_spark.operators.agg_state import (
@@ -54,16 +53,8 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     _nibble_value_sql,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import source_wire
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
-
-_WIRE_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("e_us", T.LongType()),
-    ]
-)
 
 
 def _value_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -78,8 +69,7 @@ def _value_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 def _hashed_stream(spark: SparkSession, wire_dir: str) -> DataFrame:
     ev = (
-        spark.readStream.schema(_WIRE_SCHEMA)
-        .json(wire_dir)
+        read_wire(spark, wire_dir)
         .select(
             F.to_date(F.timestamp_micros("e_us")).alias("day"),
             "value",

@@ -27,7 +27,7 @@ from kafka_clickhouse_implementation_spark.operators.analytics_ext import (
     _ENTROPY_ORACLE,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import source_wire
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
     ordered_event_wire,
@@ -166,11 +166,7 @@ def q_stream_interval_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheapest replay that still forces island state across a batch
     # boundary (time order within a batch is restored by the in-fold
     # sort; ACROSS batches it is the wire's file order).
-    ev = (
-        spark.readStream.schema("user_id long, event_id long, s_us long")
-        .option("maxFilesPerTrigger", "2")
-        .json(wire)
-    )
+    ev = read_wire(spark, wire, 2)
     folded = ev.groupBy("user_id").applyInPandasWithState(
         _ils_update,
         outputStructType="user_id long, n_seen long, n_islands long, covered_us long",
@@ -240,9 +236,7 @@ def q_stream_linreg(spark, sf_dir: str) -> DataFrame:
     wire, base = valued_event_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_linreg")
     ev = (
-        spark.readStream.schema("event_id long, event_type string, e_us long, vm long")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
+        read_wire(spark, wire, 1)
         .select(
             "event_type",
             (F.expr("e_us div 1000000") - F.lit(_X0)).alias("x"),

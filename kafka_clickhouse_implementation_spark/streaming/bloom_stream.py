@@ -38,10 +38,8 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     hash_slice_sql,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-    _DOC_WIRE_SCHEMA,
-    document_wire,
-)
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 
@@ -59,9 +57,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire, base = document_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_bloom")
     stream_toks = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .select(F.explode(F.split("text", " ")).alias("tok"))
     )
     pos = (

@@ -29,10 +29,8 @@ from pyspark.sql import functions as F
 from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
 from kafka_clickhouse_implementation_spark.io import load
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, source_wire
+from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, read_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
-
-_DOC_WIRE_SCHEMA = "doc_id long, text string"
 
 
 def document_wire(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -93,13 +91,6 @@ def q_stream_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(raw_ckpt, ignore_errors=True)
     shutil.rmtree(dedup_ckpt, ignore_errors=True)
 
-    def stream():
-        return (
-            spark.readStream.schema(_DOC_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .json(wire)
-        )
-
     toks = F.split("text", " ")
     passed = (F.size(toks) >= 10) & (
         F.size(F.filter(toks, lambda t: t.isin("the", "a", "of", "and")))
@@ -108,7 +99,7 @@ def q_stream_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # drain 1: raw + quality counts (complete-mode tiny aggregate)
-    counts = stream().agg(
+    counts = read_wire(spark, wire, 1).agg(
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(passed, 1).otherwise(0)).alias("n_after_quality"),
     )
@@ -116,7 +107,7 @@ def q_stream_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # drain 2: gated docs through fingerprint-keyed stateful dedup
     deduped = (
-        stream()
+        read_wire(spark, wire, 1)
         .filter(passed)
         .select(F.md5(F.col("text").cast("binary")).alias("fp"))
         .dropDuplicates(["fp"])
@@ -163,9 +154,7 @@ def q_stream_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire, base = document_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_chunk_dedup")
     chunks_stream = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
+        read_wire(spark, wire, 1)
         .select("doc_id", F.split("text", " ").alias("w"))
         .select("doc_id", F.posexplode(F.expr(_CHUNK_EXPR)).alias("pos", "cw"))
         .select(

@@ -166,7 +166,7 @@ def streaming_funnel_levels_ttl(
 
 from kafka_clickhouse_implementation_spark.operators.funnels import _FUNNEL_ORACLE  # noqa: E402
 from kafka_clickhouse_implementation_spark.registry import query  # noqa: E402
-from kafka_clickhouse_implementation_spark.sources.streams import source_wire  # noqa: E402
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire, source_wire  # noqa: E402
 from kafka_clickhouse_implementation_spark.streaming.drain import drain  # noqa: E402
 
 
@@ -175,9 +175,6 @@ from kafka_clickhouse_implementation_spark.streaming.drain import drain  # noqa:
 # milliseconds, which would silently desync the strict `>` comparisons in
 # the funnel state machine from the full-microsecond batch/DuckDB oracle
 # whenever two events share a millisecond. Integers round-trip exactly.
-WIRE_SCHEMA = "user_id long, event_id long, event_type string, e_us long"
-
-
 def ordered_event_wire(spark, sf_dir: str) -> tuple[str, str]:
     """The `events` replay in (e_us, event_id) order, 4 parts. Returns
     (wire_dir, base_dir); the wire is immutable per SOURCE PARQUET
@@ -199,10 +196,7 @@ def wire_stream(
     ``max_files_per_trigger`` forces multi-batch replay (the file
     source takes files oldest-mtime-first) for queries whose contract
     is about state crossing batch boundaries."""
-    reader = spark.readStream.schema(WIRE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(wire_dir).select(
+    return read_wire(spark, wire_dir, max_files_per_trigger).select(
         "user_id", "event_id", "event_type",
         F.timestamp_micros("e_us").alias("ts"),
     )

@@ -53,20 +53,9 @@ from kafka_clickhouse_implementation_spark.operators.sketches import (
     K,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import source_wire
-from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-    _DOC_WIRE_SCHEMA,
-    document_wire,
-)
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire, source_wire
+from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
-
-
-def _doc_stream(spark: SparkSession, wire: str, files_per_trigger: int) -> DataFrame:
-    return (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .json(wire)
-    )
 
 
 def _stream_bigram_digests(docs: DataFrame) -> DataFrame:
@@ -132,7 +121,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire, base = document_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_kmv")
     sketched = (
-        _stream_bigram_digests(_doc_stream(spark, wire, 2))
+        _stream_bigram_digests(read_wire(spark, wire, 2))
         .groupBy("bucket")
         .applyInPandasWithState(
             _kmv_update,
@@ -234,7 +223,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 files/trigger over the 8-file wire = 2 micro-batches: the
     # cheapest replay that still forces state across a batch boundary
     toks = (
-        _doc_stream(spark, wire, 4)
+        read_wire(spark, wire, 4)
         .select(F.explode(F.split("text", " ")).alias("tok"))
     )
     cells = _spark_cms_buckets(toks).select(
@@ -347,11 +336,7 @@ def q_stream_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     ckpt = os.path.join(base, "ckpt_ema")
-    ev = (
-        spark.readStream.schema("user_id long, event_id long, value double, e_us long")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire_dir)
-    )
+    ev = read_wire(spark, wire_dir, 1)
     folded = ev.groupBy("user_id").applyInPandasWithState(
         _ema_update,
         outputStructType="user_id long, ema double, n_events long",

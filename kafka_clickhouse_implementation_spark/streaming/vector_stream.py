@@ -45,7 +45,7 @@ from kafka_clickhouse_implementation_spark.operators.clustering import (
     _QUANT,
 )
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, source_wire
+from kafka_clickhouse_implementation_spark.sources.streams import doubled_wire, read_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
 _IVF_INGEST_ORACLE = f"""
@@ -116,11 +116,8 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wire, base = embedding_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_ivf_ingest")
-    vecs = (
-        spark.readStream.schema("vec_id long, eq array<long>")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
-        .select("vec_id", F.expr(code_expr).cast("long").alias("list_id"))
+    vecs = read_wire(spark, wire, 1).select(
+        "vec_id", F.expr(code_expr).cast("long").alias("list_id")
     )
     lists = vecs.groupBy("list_id").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -248,11 +245,7 @@ def _stream_coded_members(
     # it) — while the drain pays 2 state-commit rounds instead of 8
     # (measured r15: each micro-batch costs ~1.2 s of mostly
     # state-store commit + scheduling at bench scale).
-    vecs = (
-        spark.readStream.schema("vec_id long, eq array<long>")
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
-    )
+    vecs = read_wire(spark, wire, 4)
     if dedup:
         vecs = vecs.dropDuplicates(["vec_id"])
     # the same guarded coder as the batch Lloyd: literal projection
@@ -502,12 +495,7 @@ def _maintain_codes(
         marker, identity, path, ckpt,
         dependents=tuple(os.path.join(base, d) for d in dependents),
     )
-    deduped = (
-        spark.readStream.schema("vec_id long, eq array<long>")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
-        .dropDuplicates(["vec_id"])
-    )
+    deduped = read_wire(spark, wire, 1).dropDuplicates(["vec_id"])
 
     def upsert_batch(bdf: DataFrame, epoch_id: int) -> None:
         append_versions(

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.registry import query
-from kafka_clickhouse_implementation_spark.sources.streams import source_wire
+from kafka_clickhouse_implementation_spark.sources.streams import read_wire, source_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
 from kafka_clickhouse_implementation_spark.streaming.funnel import (
     streaming_funnel_levels_ttl,
@@ -148,9 +148,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire, base = chunked_late_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_latedrop")
     stream = (
-        spark.readStream.schema("event_type string, e_us long")
-        .option("maxFilesPerTrigger", "1")
-        .json(wire)
+        read_wire(spark, wire, 1)
         .select("event_type", F.timestamp_micros("e_us").alias("ets"))
     )
     agg = (
@@ -254,8 +252,7 @@ def q_stream_funnel_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire, base = truncated_ttl_wire(spark, sf_dir)
     ckpt = os.path.join(base, "ckpt_ttl")
     stream = (
-        spark.readStream.schema("user_id long, event_id long, event_type string, e_us long")
-        .json(wire)
+        read_wire(spark, wire)
         .select(
             "user_id", "event_id", "event_type",
             F.timestamp_micros("e_us").alias("ts"),

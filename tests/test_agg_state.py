@@ -115,9 +115,7 @@ def test_streaming_states_cross_batch_boundaries(spark):
     wire_dir, base = _value_wire(spark, SF)
     # read the wire with forced multi-batch replay (the query itself
     # drains availableNow over whole files; _hashed_stream unused here)
-    from kafka_clickhouse_implementation_spark.streaming.agg_state_stream import (
-        _WIRE_SCHEMA,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
     from kafka_clickhouse_implementation_spark.operators.sketches import (
         _nibble_value_sql,
     )
@@ -126,9 +124,7 @@ def test_streaming_states_cross_batch_boundaries(spark):
     )
 
     ev = (
-        spark.readStream.schema(_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(wire_dir)
+        read_wire(spark, wire_dir, 1)
         .select(
             F.to_date(F.timestamp_micros("e_us")).alias("day"),
             "value",

@@ -132,10 +132,8 @@ def test_stream_dsir_state_matches_batch_and_needs_dedup(spark):
         doc_features,
         q_stream_dsir,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_dsir(spark, SF_DIR)  # writes the dsir_dfc_table file drain
@@ -155,9 +153,7 @@ def test_stream_dsir_state_matches_batch_and_needs_dedup(spark):
 
     wire, base = document_wire(spark, SF_DIR)
     nodedup = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .select("doc_id", F.split("text", " ").alias("t"))
         .select("doc_id", F.explode(F.expr(_FEATS_EXPR)).alias("feat"))
         .selectExpr("doc_id", f"{_bucket('feat')} AS b")

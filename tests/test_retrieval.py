@@ -154,10 +154,8 @@ def test_stream_bm25_state_matches_batch_and_needs_dedup(spark):
     from kafka_clickhouse_implementation_spark.operators.retrieval import (
         q_stream_bm25,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_bm25(spark, SF_DIR)  # writes the bm25_tf_table file drain
@@ -185,9 +183,7 @@ def test_stream_bm25_state_matches_batch_and_needs_dedup(spark):
 
     wire, base = document_wire(spark, SF_DIR)
     nodedup = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("doc_id", "token")
@@ -592,10 +588,8 @@ def test_stream_proximity_state_matches_batch_and_needs_dedup(spark):
         positional_postings,
         q_stream_proximity,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain
 
     q_stream_proximity(spark, SF_DIR)  # writes the prox_postings_table drain
@@ -619,9 +613,7 @@ def test_stream_proximity_state_matches_batch_and_needs_dedup(spark):
 
     wire, base = document_wire(spark, SF_DIR)
     nodedup = (
-        spark.readStream.schema(_DOC_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .json(wire)
+        read_wire(spark, wire, 4)
         .select(
             "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
         )

@@ -60,14 +60,12 @@ def test_event_wire_preserves_microseconds(spark):
     truncates to millis, which would desync the strict-> funnel state
     machine from the batch/DuckDB oracle for same-millisecond events)."""
     from kafka_clickhouse_implementation_spark.io import load
-    from kafka_clickhouse_implementation_spark.streaming.funnel import (
-        WIRE_SCHEMA,
-        ordered_event_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.funnel import ordered_event_wire
 
     sf = "/root/testdata/sf0.001"
     wire_dir, _ = ordered_event_wire(spark, sf)
-    back = spark.read.schema(WIRE_SCHEMA).json(wire_dir).select("event_id", "e_us")
+    back = read_wire(spark, wire_dir, batch=True).select("event_id", "e_us")
     src = load(spark, sf, "events").select(
         "event_id", F.unix_micros("ts").alias("src_us")
     )

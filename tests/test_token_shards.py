@@ -317,10 +317,8 @@ def test_stream_curriculum_equals_batch_and_wire_has_dups(spark):
         q_stream_shards_curriculum,
         q_token_shards_curriculum,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
 
     streamed = sorted(
         map(tuple, q_stream_shards_curriculum(spark, SF).collect())
@@ -329,8 +327,7 @@ def test_stream_curriculum_equals_batch_and_wire_has_dups(spark):
     assert streamed == batch
     wire, _base = document_wire(spark, SF)
     raw = (
-        spark.read.schema(_DOC_WIRE_SCHEMA)
-        .json(wire)
+        read_wire(spark, wire, batch=True)
         .filter(F.col("doc_id") % SHARD_SLICE_MOD == 0)
     )
     assert raw.count() > raw.select("doc_id").distinct().count()

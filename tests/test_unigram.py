@@ -403,10 +403,8 @@ def test_stream_unigram_shards_equal_batch_and_wire_has_dups(spark):
         q_stream_token_shards_unigram,
         q_token_shards_unigram,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import (
-        _DOC_WIRE_SCHEMA,
-        document_wire,
-    )
+    from kafka_clickhouse_implementation_spark.sources.streams import read_wire
+    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     streamed = sorted(
@@ -416,8 +414,7 @@ def test_stream_unigram_shards_equal_batch_and_wire_has_dups(spark):
     assert streamed == batch
     wire, _base = document_wire(spark, sf)
     raw = (
-        spark.read.schema(_DOC_WIRE_SCHEMA)
-        .json(wire)
+        read_wire(spark, wire, batch=True)
         .filter(F.col("doc_id") % 10 == 0)
     )
     assert raw.count() > raw.select("doc_id").distinct().count()

@@ -1,6 +1,7 @@
-"""The one replay-wire writer (sources/streams.py): key order, arrival
-order, readiness, the doubled copies, and a source scan that keeps
-every wire write inside it."""
+"""The one replay-wire writer and reader (sources/streams.py): key
+order, arrival order, readiness, the schema record, the doubled
+copies, and a source scan that keeps every wire write and read inside
+them."""
 
 from __future__ import annotations
 
@@ -11,18 +12,26 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from test_drain import _package_sources
 
 from kafka_clickhouse_implementation_spark.cachedirs import source_tagged_dir
+from kafka_clickhouse_implementation_spark.plans.layout import SCHEMA_FILE, recorded_schema
 from kafka_clickhouse_implementation_spark.sources import streams
 from kafka_clickhouse_implementation_spark.sources.streams import (
     WIRE_MARKER,
     doubled_wire,
+    read_wire,
     wire_ready,
     write_wire,
 )
 from kafka_clickhouse_implementation_spark.streaming import funnel
+from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
 from kafka_clickhouse_implementation_spark.streaming.drain import drain
+from kafka_clickhouse_implementation_spark.streaming.vector_stream import embedding_wire
+
+# what a published wire dir holds besides its parts
+_META = [WIRE_MARKER, SCHEMA_FILE]
 
 
 def _shuffled(spark, n: int = 400):
@@ -31,7 +40,7 @@ def _shuffled(spark, n: int = 400):
 
 
 def _mtimes(d: str) -> dict[str, float]:
-    return {n: os.path.getmtime(os.path.join(d, n)) for n in os.listdir(d) if n != WIRE_MARKER}
+    return {n: os.path.getmtime(os.path.join(d, n)) for n in os.listdir(d) if n not in _META}
 
 
 def test_one_file_per_trigger_replays_in_key_order(spark, tmp_path):
@@ -39,7 +48,7 @@ def test_one_file_per_trigger_replays_in_key_order(spark, tmp_path):
     in key order: each batch's keys lie above every earlier batch's."""
     wire = str(tmp_path / "wire")
     write_wire(_shuffled(spark), wire, ("k",))
-    assert sorted(os.listdir(wire)) == [WIRE_MARKER] + [f"part-{i:05d}.json" for i in range(4)]
+    assert sorted(os.listdir(wire)) == _META + [f"part-{i:05d}.json" for i in range(4)]
     ranges = []
 
     def record(bdf, _epoch):
@@ -47,8 +56,7 @@ def test_one_file_per_trigger_replays_in_key_order(spark, tmp_path):
         if r["n"]:
             ranges.append((r["lo"], r["hi"]))
 
-    stream = spark.readStream.schema("k long, v long").option("maxFilesPerTrigger", "1").json(wire)
-    drain(spark, (stream, record, str(tmp_path / "ckpt"), "append"))
+    drain(spark, (read_wire(spark, wire, 1), record, str(tmp_path / "ckpt"), "append"))
     assert len(ranges) == 4
     assert ranges[0][0] == 0 and ranges[-1][1] == 399
     assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
@@ -100,7 +108,7 @@ def test_failed_build_leaves_no_ready_wire(spark, sf_dir, monkeypatch, own_cache
     monkeypatch.setattr(streams, "load", real)
     assert funnel.ordered_event_wire(spark, sf_dir)[0] == wire
     assert wire_ready(wire)
-    n = spark.read.schema(funnel.WIRE_SCHEMA).json(wire).count()
+    n = read_wire(spark, wire, batch=True).count()
     assert n == real(spark, sf_dir, "events").count()
 
 
@@ -111,7 +119,63 @@ def test_wire_marked_only_by_spark_is_rebuilt(spark, sf_dir, own_cache):
     os.makedirs(wire)
     open(os.path.join(wire, "_SUCCESS"), "w").close()
     assert funnel.ordered_event_wire(spark, sf_dir)[0] == wire
-    assert sorted(os.listdir(wire)) == [WIRE_MARKER] + [f"part-{i:05d}.json" for i in range(4)]
+    assert sorted(os.listdir(wire)) == _META + [f"part-{i:05d}.json" for i in range(4)]
+
+
+def test_split_and_doubled_wires_record_their_columns(spark, tmp_path):
+    """A ``split`` wire records every written column but the split
+    column; a doubled wire carries its source's record and reads back
+    every row twice with it."""
+    rows = _shuffled(spark).withColumn("grp", (F.col("k") % 3).cast("int"))
+    src = str(tmp_path / "split")
+    write_wire(rows, src, ("k",), split="grp")
+    assert recorded_schema(src).fieldNames() == ["k", "v"]
+    assert read_wire(spark, src, batch=True).columns == ["k", "v"]
+
+    dup = doubled_wire(src, str(tmp_path / "dup"))
+    assert wire_ready(dup)
+    assert recorded_schema(dup) == recorded_schema(src)
+    assert read_wire(spark, dup, batch=True).count() == 800
+
+
+def test_wire_without_a_record_is_rebuilt(spark, sf_dir, own_cache):
+    """A wire published with the marker but no schema record (the
+    layout before the record) is not ready, and source_wire rebuilds
+    it; a reader of an unrecorded dir fails loudly instead of
+    inferring."""
+    wire, _ = funnel.ordered_event_wire(spark, sf_dir)
+    os.remove(os.path.join(wire, SCHEMA_FILE))
+    assert os.path.exists(os.path.join(wire, WIRE_MARKER))
+    assert not wire_ready(wire)
+    with pytest.raises(ValueError, match="no recorded wire schema"):
+        read_wire(spark, wire)
+    before = os.path.getmtime(os.path.join(wire, WIRE_MARKER))
+    assert funnel.ordered_event_wire(spark, sf_dir)[0] == wire
+    assert wire_ready(wire)
+    assert os.path.getmtime(os.path.join(wire, WIRE_MARKER)) > before
+
+
+# The schemas the readers declared before the wires recorded their own:
+# a record that differs would move a reader's columns.
+_READER_SCHEMAS = {
+    "documents": (document_wire, "doc_id long, text string"),
+    "embeddings": (embedding_wire, "vec_id long, eq array<long>"),
+    "funnel events": (
+        funnel.ordered_event_wire,
+        "user_id long, event_id long, event_type string, e_us long",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_READER_SCHEMAS))
+def test_records_match_the_reader_schemas(spark, sf_dir, own_cache, name):
+    """The document, embedding and funnel wires record the names, order
+    and types their readers used to declare."""
+    build, ddl = _READER_SCHEMAS[name]
+    wire = build(spark, sf_dir)[0]
+    declared = T._parse_datatype_string(ddl).simpleString()
+    assert recorded_schema(wire).simpleString() == declared
+    assert read_wire(spark, wire).schema.simpleString() == declared
 
 
 def _funcs(tree) -> dict[int, str]:
@@ -138,18 +202,37 @@ def _json_or_text_writes(tree):
                 recv = recv.func if isinstance(recv, ast.Call) else recv.value
 
 
+def _json_reads(tree, writes):
+    """Lines of every other ``.json(<path>)`` call: a reader's, whether
+    chained on ``spark.read``/``readStream`` or held in a variable."""
+    for node in ast.walk(tree):
+        func = getattr(node, "func", None)
+        if isinstance(func, ast.Attribute) and func.attr == "json" and node.args:
+            if node.lineno not in writes:
+                yield node.lineno
+
+
 # where each guarded operation may appear: (module, function)
 _WRITER = {
     "utime": {("sources/streams.py", "_publish")},
     "write": {("sources/streams.py", "write_wire"), ("sources/formats.py", "q_jsonl_roundtrip")},
+    # file_stream reads the reference's queue format, the permissive
+    # reader its corrupt-record column, q_jsonl_roundtrip a file format
+    "read": {
+        ("sources/streams.py", "read_wire"),
+        ("sources/streams.py", "file_stream"),
+        ("streaming/pipeline.py", "decoded_events_permissive"),
+        ("sources/formats.py", "q_jsonl_roundtrip"),
+    },
 }
 _OLD_MARKERS = re.compile(r"_WIRE_READY|_DUP_READY")
 
 
 def test_wires_are_written_only_by_the_writer():
-    """No package module stamps an mtime, names an old wire marker or
-    writes a DataFrame as JSON or text outside the wire writer
-    (q_jsonl_roundtrip tests a file format, not a wire)."""
+    """No package module stamps an mtime, names an old wire marker,
+    writes a DataFrame as JSON or text outside the wire writer, or reads
+    JSON outside the wire reader (q_jsonl_roundtrip tests a file
+    format, not a wire)."""
     hits = []
     for rel, src in _package_sources():
         tree = ast.parse(src)
@@ -160,7 +243,9 @@ def test_wires_are_written_only_by_the_writer():
                 hits.append(f"{rel}:{i}: {line.strip()}")
             if _OLD_MARKERS.search(line):
                 hits.append(f"{rel}:{i}: {line.strip()}")
-        for i in _json_or_text_writes(tree):
-            if (rel, owner.get(i)) not in _WRITER["write"]:
-                hits.append(f"{rel}:{i}: {lines[i - 1].strip()}")
-    assert hits == [], "wire writes outside sources/streams.py:\n" + "\n".join(hits)
+        writes = set(_json_or_text_writes(tree))
+        for kind, found in (("write", writes), ("read", _json_reads(tree, writes))):
+            for i in found:
+                if (rel, owner.get(i)) not in _WRITER[kind]:
+                    hits.append(f"{rel}:{i}: {lines[i - 1].strip()}")
+    assert hits == [], "wire I/O outside sources/streams.py:\n" + "\n".join(hits)

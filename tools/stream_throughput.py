@@ -48,12 +48,13 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 from kafka_clickhouse_implementation_spark.io import load  # noqa: E402
 from kafka_clickhouse_implementation_spark.session import get_spark  # noqa: E402
 from kafka_clickhouse_implementation_spark.sources.streams import (  # noqa: E402
+    read_wire,
     wire_ready,
     write_wire,
 )
 from kafka_clickhouse_implementation_spark.streaming.funnel import (  # noqa: E402
-    WIRE_SCHEMA,
     streaming_funnel_levels,
+    wire_stream,
 )
 from kafka_clickhouse_implementation_spark.streaming.sketches_stream import (  # noqa: E402
     CMS_D,
@@ -101,18 +102,6 @@ def build_wire(spark, sf_dir: str, repl: int) -> str:
     return wire
 
 
-def wire_stream(spark, wire: str) -> DataFrame:
-    return (
-        spark.readStream.schema(WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))
-        .json(wire)
-        .select(
-            "user_id", "event_id", "event_type",
-            F.timestamp_micros("e_us").alias("ts"),
-        )
-    )
-
-
 def build_doc_wire(spark, sf_dir: str, repl: int) -> str:
     """documents replicated ``repl``x with offset doc_ids but IDENTICAL
     texts — so the distinct-chunk set (the dedup state domain) stays
@@ -122,14 +111,6 @@ def build_doc_wire(spark, sf_dir: str, repl: int) -> str:
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
         write_wire(_replicated(d, "doc_id", repl), wire, ("doc_id",), files=N_WIRE_FILES)
     return wire
-
-
-def doc_wire_stream(spark, wire: str) -> DataFrame:
-    return (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))
-        .json(wire)
-    )
 
 
 # ---------------------------------------------------------------- workloads
@@ -249,7 +230,7 @@ def run_one(spark, workload: str, provider: str, wire: str, repl: int) -> dict:
         "spark.sql.streaming.stateStore.providerClass", PROVIDERS[provider]
     )
     fn, kind = WORKLOADS[workload]
-    ev = (doc_wire_stream if kind == "documents" else wire_stream)(spark, wire)
+    ev = (read_wire if kind == "documents" else wire_stream)(spark, wire, FILES_PER_TRIGGER)
     writer, mode = fn(spark, ev, run_dir)
     t0 = time.time()
     q = (
