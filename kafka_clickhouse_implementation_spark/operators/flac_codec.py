@@ -50,13 +50,12 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
+from kafka_clickhouse_implementation_spark.operators.multimodal import map_rows, values_fp
 from kafka_clickhouse_implementation_spark.registry import query
 
 BLOCK = 192  # samples per frame; frame-header block-size code 0b0001
@@ -690,38 +689,13 @@ def q_multimodal_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [],
-            "n_samples": [],
-            "rate": [],
-            "sample_sum": [],
-            "wave_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                samples = _flac_samples(doc_id)
-                payload = encode_flac(samples)
-                dec = parse_flac(payload)
-                got = dec["samples"]
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(got))
-                out["rate"].append(dec["rate"])
-                out["sample_sum"].append(sum(got))
-                out["wave_fp"].append(
-                    hashlib.md5(
-                        ",".join(str(v) for v in got).encode()
-                    ).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        dec = parse_flac(encode_flac(_flac_samples(doc_id)))
+        got = dec["samples"]
+        return doc_id, len(got), dec["rate"], sum(got), values_fp(got)
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, n_samples long, rate int, sample_sum long, "
-            "wave_fp string"
-        ),
+    return map_rows(
+        docs, _row, "doc_id long, n_samples long, rate int, sample_sum long, wave_fp string"
     )
 
 
@@ -774,40 +748,17 @@ def q_multimodal_flac_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [],
-            "n_samples": [],
-            "channels": [],
-            "left_sum": [],
-            "right_sum": [],
-            "stereo_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                left, right = _flac_stereo(doc_id)
-                payload = encode_flac(left, right=right)
-                dec = parse_flac(payload)
-                inter = [
-                    str(v)
-                    for lr in zip(dec["samples"], dec["right"])
-                    for v in lr
-                ]
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(dec["samples"]))
-                out["channels"].append(dec["channels"])
-                out["left_sum"].append(sum(dec["samples"]))
-                out["right_sum"].append(sum(dec["right"]))
-                out["stereo_fp"].append(
-                    hashlib.md5(",".join(inter).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        left, right = _flac_stereo(doc_id)
+        dec = parse_flac(encode_flac(left, right=right))
+        got_l, got_r = dec["samples"], dec["right"]
+        # the interleaved stream, as STREAMINFO's MD5 covers it
+        inter = [v for lr in zip(got_l, got_r) for v in lr]
+        return doc_id, len(got_l), dec["channels"], sum(got_l), sum(got_r), values_fp(inter)
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, n_samples long, channels int, left_sum long, "
-            "right_sum long, stereo_fp string"
-        ),
+    return map_rows(
+        docs,
+        _row,
+        "doc_id long, n_samples long, channels int, left_sum long, "
+        "right_sum long, stereo_fp string",
     )

@@ -22,15 +22,18 @@ same oracle pattern as the PNG round trip (multimodal.py).
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
+from kafka_clickhouse_implementation_spark.operators.multimodal import (
+    RASTER_SCHEMA,
+    map_rows,
+    raster_row,
+    values_fp,
+)
 from kafka_clickhouse_implementation_spark.registry import query
 
 
@@ -270,36 +273,11 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas plumbing as the PNG/JPEG paths."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_vals": [],
-            "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                payload = encode_gif(
-                    _GIF_W, _GIF_H, GIF_PALETTE, _gif_indices(doc_id)
-                )
-                dec = parse_gif(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        payload = encode_gif(_GIF_W, _GIF_H, GIF_PALETTE, _gif_indices(doc_id))
+        return raster_row(doc_id, parse_gif(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -477,42 +455,22 @@ def q_multimodal_gif89a(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "n_frames": [], "total_delay_cs": [],
-            "loops": [], "val_sum": [], "anim_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = [
-                    (_ANIM_DELAY, _anim_indices(doc_id, f))
-                    for f in range(_ANIM_FRAMES)
-                ]
-                payload = encode_gif89a(_GIF_W, _GIF_H, GIF_PALETTE, frames)
-                dec = parse_gif89a(payload)
-                parts: list[str] = []
-                vs = 0
-                td = 0
-                for fr in dec["frames"]:
-                    vs += sum(fr["values"])
-                    td += fr["delay_cs"]
-                    parts.extend(str(v) for v in fr["values"])
-                    parts.append(str(fr["delay_cs"]))
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(len(dec["frames"]))
-                out["total_delay_cs"].append(td)
-                out["loops"].append(dec["loops"])
-                out["val_sum"].append(vs)
-                out["anim_fp"].append(
-                    hashlib.md5(",".join(parts).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        frames = [(_ANIM_DELAY, _anim_indices(doc_id, f)) for f in range(_ANIM_FRAMES)]
+        dec = parse_gif89a(encode_gif89a(_GIF_W, _GIF_H, GIF_PALETTE, frames))
+        # each frame's raster, then its delay
+        tagged = [v for fr in dec["frames"] for v in (*fr["values"], fr["delay_cs"])]
+        return (
+            doc_id,
+            len(dec["frames"]),
+            sum(fr["delay_cs"] for fr in dec["frames"]),
+            dec["loops"],
+            sum(sum(fr["values"]) for fr in dec["frames"]),
+            values_fp(tagged),
+        )
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, n_frames int, total_delay_cs int, loops int, "
-            "val_sum long, anim_fp string"
-        ),
+    return map_rows(
+        docs,
+        _row,
+        "doc_id long, n_frames int, total_delay_cs int, loops int, val_sum long, anim_fp string",
     )

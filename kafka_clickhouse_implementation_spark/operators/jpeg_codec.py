@@ -44,17 +44,20 @@ multimodal pipeline (operators/multimodal.py), now real for JPEG too.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_clickhouse_implementation_spark.io import load
+from kafka_clickhouse_implementation_spark.operators.multimodal import (
+    RASTER_SCHEMA,
+    map_rows,
+    raster_row,
+    values_fp,
+)
 from kafka_clickhouse_implementation_spark.registry import query
 
 # --------------------------------------------------------------------
@@ -554,34 +557,11 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PNG/BMP/WAV paths (multimodal.py)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_vals": [],
-            "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                payload = encode_jpeg_gray(_doc_blocks(doc_id), _JPEG_W, _JPEG_H)
-                dec = parse_jpeg(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        payload = encode_jpeg_gray(_doc_blocks(doc_id), _JPEG_W, _JPEG_H)
+        return raster_row(doc_id, parse_jpeg(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 # --------------------------------------------------------------------
@@ -738,40 +718,17 @@ def q_multimodal_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbolically and pins dims, the RGB sum, and the raster md5."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_vals": [],
-            "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ys, cbs, crs = [], [], []
-                for m in (0, 1):
-                    y, cb, cr = _ycc(doc_id, m)
-                    ys.append(_dc_block(y))
-                    cbs.append(_dc_block(cb))
-                    crs.append(_dc_block(cr))
-                payload = encode_jpeg_color(ys, cbs, crs, _JC_W, _JC_H)
-                dec = parse_jpeg(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        ys, cbs, crs = [], [], []
+        for m in (0, 1):
+            y, cb, cr = _ycc(doc_id, m)
+            ys.append(_dc_block(y))
+            cbs.append(_dc_block(cb))
+            crs.append(_dc_block(cr))
+        payload = encode_jpeg_color(ys, cbs, crs, _JC_W, _JC_H)
+        return raster_row(doc_id, parse_jpeg(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 def _entropy_block(
@@ -914,36 +871,13 @@ def q_multimodal_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     raster symbolically. Dims, RGB sum, and raster md5 pinned."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_vals": [],
-            "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ys = [_dc_block(v) for v in _y4(doc_id)]
-                cb, cr = _cbcr(doc_id)
-                payload = encode_jpeg_420(ys, [_dc_block(cb)], [_dc_block(cr)], 16, 16)
-                dec = parse_jpeg(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        ys = [_dc_block(v) for v in _y4(doc_id)]
+        cb, cr = _cbcr(doc_id)
+        payload = encode_jpeg_420(ys, [_dc_block(cb)], [_dc_block(cr)], 16, 16)
+        return raster_row(doc_id, parse_jpeg(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 def encode_jpeg_422(
@@ -1414,6 +1348,16 @@ _PROGPAT_ROWS = [
 _PROGPAT_LITERAL = "[" + ", ".join(_PROGPAT_ROWS) + "]"
 _PROGPAT_SUM = sum(_PROGPAT)
 
+# the raster report plus the scan count, for the progressive decodes
+_PROG_SCHEMA = (
+    "doc_id long, width int, height int, n_scans int, n_vals long, val_sum long, px_fp string"
+)
+
+
+def _prog_row(doc_id: int, dec: dict) -> tuple:
+    vals = dec["values"]
+    return doc_id, dec["width"], dec["height"], dec["n_scans"], len(vals), sum(vals), values_fp(vals)
+
 
 @query(
     "q_multimodal_jpeg_prog",
@@ -1455,37 +1399,11 @@ def q_multimodal_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
     progressive == sequential agreement, per doc, value-hashed."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_scans": [],
-            "n_vals": [], "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                payload = encode_jpeg_progressive(
-                    _prog_doc_blocks(doc_id), _JPEG_W, _JPEG_H
-                )
-                dec = parse_jpeg_progressive(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_scans"].append(dec["n_scans"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        payload = encode_jpeg_progressive(_prog_doc_blocks(doc_id), _JPEG_W, _JPEG_H)
+        return _prog_row(doc_id, parse_jpeg_progressive(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_scans int, "
-            "n_vals long, val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, _PROG_SCHEMA)
 
 
 # scan script with AC successive approximation: the AC band ships its
@@ -1561,34 +1479,10 @@ def q_multimodal_jpeg_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa == progressive == sequential pixels per document."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {
-            "doc_id": [], "width": [], "height": [], "n_scans": [],
-            "n_vals": [], "val_sum": [], "px_fp": [],
-        }
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                payload = encode_jpeg_progressive(
-                    _sa_doc_blocks(doc_id), _JPEG_W, _JPEG_H, scans=_SA_SCANS
-                )
-                dec = parse_jpeg_progressive(payload)
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_scans"].append(dec["n_scans"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        payload = encode_jpeg_progressive(
+            _sa_doc_blocks(doc_id), _JPEG_W, _JPEG_H, scans=_SA_SCANS
+        )
+        return _prog_row(doc_id, parse_jpeg_progressive(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_scans int, "
-            "n_vals long, val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, _PROG_SCHEMA)

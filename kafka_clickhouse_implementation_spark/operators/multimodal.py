@@ -2,6 +2,13 @@
 ``binary`` columns with typed metadata, processed by Arrow-batched
 ``mapInPandas`` pipelines.
 
+Every per-row media query maps its documents through one primitive,
+``map_rows(df, row, schema)``: ``row`` turns one input row's values into
+one output tuple, inside Arrow-batched ``mapInPandas``. ``values_fp`` is
+the one value-sequence fingerprint (md5 of the comma-joined values) the
+DuckDB oracles rebuild. The codec modules (jpeg_codec, gif_codec,
+flac_codec) import both.
+
 Decode is REAL for the formats a pure-Python/stdlib parser can handle
 without codec libraries: BMP (24-bpp uncompressed), binary PPM (P6),
 PCM WAV, non-interlaced RGB8 PNG (zlib inflate + all five scanline
@@ -30,7 +37,7 @@ executor memory, and always project metadata-only when the task allows
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +57,40 @@ ASSET_SCHEMA = T.StructType(
         T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+
+
+def map_rows(df: DataFrame, row: Callable[..., tuple], schema: str) -> DataFrame:
+    """``df`` mapped one row at a time inside Arrow-batched
+    ``mapInPandas``: ``row(*values)`` gets an input row's column values
+    (Python scalars, in ``df.columns`` order) and returns one tuple in
+    ``schema`` order, where ``None`` stays a SQL null. Yields one output
+    frame per input batch."""
+    names = T.StructType.fromDDL(schema).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row(*vals) for vals in pdf.itertuples(index=False, name=None)]
+            # object columns keep Python ints exact next to a None
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def values_fp(values: Iterable) -> str:
+    """md5 of the comma-joined ``str`` values: the sequence fingerprint
+    an oracle rebuilds as ``md5(array_to_string(list, ','))``."""
+    return hashlib.md5(",".join(str(v) for v in values).encode()).hexdigest()
+
+
+# The shared report of a decoded raster (image or frame): dimensions,
+# value count and sum, and the value fingerprint.
+RASTER_SCHEMA = "doc_id long, width int, height int, n_vals long, val_sum long, px_fp string"
+
+
+def raster_row(doc_id: int, dec: dict) -> tuple:
+    """One ``RASTER_SCHEMA`` row for ``doc_id``'s decoded image ``dec``."""
+    vals = dec["values"]
+    return doc_id, dec["width"], dec["height"], len(vals), sum(vals), values_fp(vals)
 
 
 def parse_bmp(payload: bytes) -> dict:
@@ -632,21 +673,13 @@ def extract_features(assets: DataFrame, n_features: int = 4) -> DataFrame:
     objects; output adds a fixed-width feature array. This is the
     production plumbing — only `fake_features` is a stub."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(lambda b: fake_features(b, n_features))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "features": feats,
-                }
-            )
+    def _row(asset_id: int, media_type: str, payload: bytes) -> tuple:
+        return asset_id, media_type, len(payload), fake_features(payload, n_features)
 
-    return assets.mapInPandas(
-        run,
-        schema="asset_id long, media_type string, n_bytes long, features array<double>",
+    return map_rows(
+        assets.select("asset_id", "media_type", "payload"),
+        _row,
+        "asset_id long, media_type string, n_bytes long, features array<double>",
     )
 
 
@@ -669,17 +702,10 @@ def q_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text").cast("binary").alias("payload"))
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "fp": pdf["payload"].map(lambda b: hashlib.md5(b).hexdigest()),
-                }
-            )
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        return doc_id, len(payload), hashlib.md5(payload).hexdigest()
 
-    return docs.mapInPandas(run, schema="doc_id long, n_bytes long, fp string")
+    return map_rows(docs, _row, "doc_id long, n_bytes long, fp string")
 
 
 # Deterministic synthetic assets for the oracle-checked decode query:
@@ -696,6 +722,17 @@ def _mm_pixels(doc_id: int) -> list[int]:
 
 def _mm_samples(doc_id: int) -> list[int]:
     return [((doc_id * 131 + i * 17) % 65536) - 32768 for i in range(_MM_NS)]
+
+
+def _mm_decoded(doc_id: int) -> dict:
+    """``doc_id``'s synthetic asset, encoded as a BMP, P6 PPM or PCM WAV
+    by ``doc_id % 3`` and parsed back."""
+    kind = doc_id % 3
+    if kind == 0:
+        return decode_image(encode_bmp(_MM_W, _MM_H, _mm_pixels(doc_id)))
+    if kind == 1:
+        return decode_image(encode_ppm(_MM_W, _MM_H, _mm_pixels(doc_id)))
+    return decode_audio(encode_wav(_mm_samples(doc_id)))
 
 
 @query(
@@ -727,29 +764,14 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing production decode would use."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 30).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fmt": [], "width": [], "height": [], "n_vals": [], "val_sum": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                kind = doc_id % 3
-                if kind == 0:
-                    dec = decode_image(encode_bmp(_MM_W, _MM_H, _mm_pixels(doc_id)))
-                elif kind == 1:
-                    dec = decode_image(encode_ppm(_MM_W, _MM_H, _mm_pixels(doc_id)))
-                else:
-                    dec = decode_audio(encode_wav(_mm_samples(doc_id)))
-                out["doc_id"].append(doc_id)
-                out["fmt"].append(dec["format"])
-                out["width"].append(dec.get("width"))
-                out["height"].append(dec.get("height"))
-                out["n_vals"].append(len(dec["values"]))
-                out["val_sum"].append(sum(dec["values"]))
-            yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        dec = _mm_decoded(doc_id)
+        vals = dec["values"]
+        # a WAV has no width or height: both stay NULL
+        return doc_id, dec["format"], dec.get("width"), dec.get("height"), len(vals), sum(vals)
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, fmt string, width int, height int, n_vals long, val_sum long",
+    return map_rows(
+        docs, _row, "doc_id long, fmt string, width int, height int, n_vals long, val_sum long"
     )
 
 
@@ -793,43 +815,24 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain the generic-payload path for formats without a parser."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 30).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _row(doc_id: int) -> tuple:
         import numpy as np
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "media_type": [], "n_vals": [],
-                "energy": [], "peak": [], "mean_val": [], "rms": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                kind = doc_id % 3
-                if kind == 0:
-                    dec = decode_image(encode_bmp(_MM_W, _MM_H, _mm_pixels(doc_id)))
-                elif kind == 1:
-                    dec = decode_image(encode_ppm(_MM_W, _MM_H, _mm_pixels(doc_id)))
-                else:
-                    dec = decode_audio(encode_wav(_mm_samples(doc_id)))
-                v = np.asarray(dec["values"], dtype=np.int64)
-                energy = int((v * v).sum())
-                out["doc_id"].append(doc_id)
-                out["media_type"].append("image" if kind < 2 else "audio")
-                out["n_vals"].append(len(v))
-                out["energy"].append(energy)
-                out["peak"].append(int(np.abs(v).max()))
-                # NO Python round() here: it rounds the shortest decimal
-                # repr (half-even) while Spark/DuckDB round the binary
-                # value — emit raw IEEE results, round JVM-side below
-                out["mean_val"].append(float(int(v.sum())) / len(v))
-                out["rms"].append((float(energy) / len(v)) ** 0.5)
-            yield pd.DataFrame(out)
+        v = np.asarray(_mm_decoded(doc_id)["values"], dtype=np.int64)
+        energy = int((v * v).sum())
+        # NO Python round() here: it rounds the shortest decimal
+        # repr (half-even) while Spark/DuckDB round the binary
+        # value — emit raw IEEE results, round JVM-side below
+        return (
+            doc_id, "image" if doc_id % 3 < 2 else "audio", len(v), energy,
+            int(np.abs(v).max()), float(int(v.sum())) / len(v), (float(energy) / len(v)) ** 0.5,
+        )
 
-    raw = docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, media_type string, n_vals long, energy long, "
-            "peak long, mean_val double, rms double"
-        ),
+    raw = map_rows(
+        docs,
+        _row,
+        "doc_id long, media_type string, n_vals long, energy long, "
+        "peak long, mean_val double, rms double",
     )
     return raw.select(
         "doc_id", "media_type", "n_vals", "energy", "peak",
@@ -879,30 +882,10 @@ def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas, same plumbing as the other decode paths."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 30).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {"doc_id": [], "width": [], "height": [], "n_vals": [], "val_sum": [], "px_fp": []}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                dec = decode_image(encode_png(_PNG_W, _PNG_H, _png_pixels(doc_id)))
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        return raster_row(doc_id, decode_image(encode_png(_PNG_W, _PNG_H, _png_pixels(doc_id))))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 # Adam7 test geometry: 9x10 makes all seven passes non-empty AND
@@ -950,36 +933,23 @@ def q_multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched mapInPandas; zero shuffle."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 30).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {"doc_id": [], "width": [], "height": [], "n_vals": [], "val_sum": [], "px_fp": []}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                dec = decode_image(
-                    encode_png_adam7(_A7_W, _A7_H, _adam7_pixels(doc_id))
-                )
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["n_vals"].append(len(vals))
-                out["val_sum"].append(sum(vals))
-                out["px_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        payload = encode_png_adam7(_A7_W, _A7_H, _adam7_pixels(doc_id))
+        return raster_row(doc_id, decode_image(payload))
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, width int, height int, n_vals long, "
-            "val_sum long, px_fp string"
-        ),
-    )
+    return map_rows(docs, _row, RASTER_SCHEMA)
 
 
 _MULAW_LITERAL = "[" + ", ".join(str(v) for v in MULAW_TABLE) + "]"
 _MULAW_N = 64
+
+# the report of a decoded compressed-WAV stream (mu-law, ADPCM)
+_PCM_SCHEMA = "doc_id long, n_samples long, sample_sum long, pcm_fp string"
+
+
+def _pcm_row(doc_id: int, dec: dict) -> tuple:
+    vals = dec["values"]
+    return doc_id, len(vals), sum(vals), values_fp(vals)
 
 
 @query(
@@ -1010,25 +980,11 @@ def q_multimodal_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw PCM — MP3 remains the declared stub."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {"doc_id": [], "n_samples": [], "sample_sum": [], "pcm_fp": []}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = bytes([(doc_id * 13 + 5 * i) % 256 for i in range(_MULAW_N)])
-                dec = parse_wav(encode_wav_mulaw(raw))
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(vals))
-                out["sample_sum"].append(sum(vals))
-                out["pcm_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        raw = bytes([(doc_id * 13 + 5 * i) % 256 for i in range(_MULAW_N)])
+        return _pcm_row(doc_id, parse_wav(encode_wav_mulaw(raw)))
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, n_samples long, sample_sum long, pcm_fp string"
-    )
+    return map_rows(docs, _row, _PCM_SCHEMA)
 
 
 _ADPCM_N = 64
@@ -1070,22 +1026,8 @@ def q_multimodal_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, and sequence md5 (header sample 0 included)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 24).select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = {"doc_id": [], "n_samples": [], "sample_sum": [], "pcm_fp": []}
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nibs = [(doc_id * 11 + 7 * i) % 16 for i in range(_ADPCM_N)]
-                dec = parse_wav(encode_wav_adpcm(nibs))
-                vals = dec["values"]
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(vals))
-                out["sample_sum"].append(sum(vals))
-                out["pcm_fp"].append(
-                    hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
-                )
-        yield pd.DataFrame(out)
+    def _row(doc_id: int) -> tuple:
+        nibs = [(doc_id * 11 + 7 * i) % 16 for i in range(_ADPCM_N)]
+        return _pcm_row(doc_id, parse_wav(encode_wav_adpcm(nibs)))
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, n_samples long, sample_sum long, pcm_fp string"
-    )
+    return map_rows(docs, _row, _PCM_SCHEMA)

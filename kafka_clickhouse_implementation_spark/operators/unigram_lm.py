@@ -1042,30 +1042,14 @@ def q_stream_token_shards_unigram(
     products (train once, encode everything) and load from the C191
     root; only the PACKED SLICE comes from the wire — that is what the
     twin certifies."""
-    import os
-
     from kafka_clickhouse_implementation_spark.pipelines.shards import (
         pack_sequences,
+        streamed_slice,
         wpieces_fits_broadcast,
     )
-    from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
-    from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
-    wire, base = document_wire(spark, sf_dir)
-    deduped = (
-        read_wire(spark, wire, 4)
-        .filter(F.col("doc_id") % 10 == 0)  # the C194 slice
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "text")
-    )
-    # append-mode FILE drain (r16): see q_stream_token_shards
-    docs = drain_table(
-        spark, deduped,
-        os.path.join(base, "unishard_docs_table"),
-        os.path.join(base, "ckpt_unishard_docs"), mode="append",
-    )
-    src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    docs = docs.join(src, "doc_id").localCheckpoint()
+    # the C194 slice, drained from the wire
+    docs = streamed_slice(spark, sf_dir, "unishard_docs_table", "ckpt_unishard_docs")
     root = write_unigram_tokenizer(spark, sf_dir)
     wpieces, vocab = _unigram_pack_inputs(spark, root)
     return pack_sequences(

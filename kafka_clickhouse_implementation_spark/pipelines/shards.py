@@ -289,11 +289,11 @@ def _wire_slice(spark: SparkSession, wire: str, files_per_trigger: int) -> DataF
     )
 
 
-def _streamed_kept(spark: SparkSession, sf_dir: str, table: str, ckpt: str) -> DataFrame:
-    """clean_kept over the streamed slice (the -State twins' input): the
-    deduplicated wire slice drained into ``table`` (checkpoint ``ckpt``)
-    beside the document wire, with ``source`` (absent from the wire)
-    joined back from the table by doc_id."""
+def streamed_slice(spark: SparkSession, sf_dir: str, table: str, ckpt: str) -> DataFrame:
+    """The streamed slice (the -State twins' input): the deduplicated
+    wire slice drained into ``table`` (checkpoint ``ckpt``) beside the
+    document wire, with ``source`` (absent from the wire) joined back
+    from the table by doc_id."""
     from kafka_clickhouse_implementation_spark.streaming.corpus_stream import document_wire
     from kafka_clickhouse_implementation_spark.streaming.drain import drain_table
 
@@ -307,7 +307,12 @@ def _streamed_kept(spark: SparkSession, sf_dir: str, table: str, ckpt: str) -> D
         os.path.join(base, table), os.path.join(base, ckpt), mode="append",
     )
     src = load(spark, sf_dir, "documents").select("doc_id", "source")
-    return clean_kept(docs.join(src, "doc_id").localCheckpoint()).localCheckpoint()
+    return docs.join(src, "doc_id").localCheckpoint()
+
+
+def _streamed_kept(spark: SparkSession, sf_dir: str, table: str, ckpt: str) -> DataFrame:
+    """clean_kept over the streamed slice (``streamed_slice``)."""
+    return clean_kept(streamed_slice(spark, sf_dir, table, ckpt)).localCheckpoint()
 
 
 def bpe_piece_table(spark: SparkSession, sf_dir: str) -> DataFrame:
